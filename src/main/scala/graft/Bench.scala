@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -409,39 +407,23 @@ object Bench {
       case None => headline
     }
     val sharedRun = sharedPrefix.filter(headlineRun.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // scale-experiment knob: on a real cluster shuffle partitions scale
-    // with data; local spots at 30-100x data on a FIXED 32 keep growing
-    // per-partition sort/spill volume, which shows up as a super-linear
-    // tail on sort-heavy slots. Overriding lets the partition-scaling
-    // hypothesis be MEASURED instead of asserted (see BENCH_sf10.json).
-    val shuffleParts =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      // SPARK_GRAFT_AQE=false for AQE-off comparison spots (the
-      // AqePlanSpec story: prod runs AQE on; the fingerprints pin
-      // AQE-off shapes — timing both ways shows the re-plan is free)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // AQE's post-shuffle coalescing assumes task cost ∝ bytes; the
-      // CPU-dense slots here (array intersects, integer fixed points,
-      // codegen'd hash chains over ~50 B rows) break that assumption,
-      // and the default 1 MiB floor coalesces their small-but-hot
-      // shuffles onto 1-3 cores (guide §2: partitioning must be derived
-      // from the workload, not a constant). 64 KiB keeps
-      // parallelismFirst's totalBytes/parallelism target in charge down
-      // to genuinely tiny shuffles; at scale partitions sit at the
-      // advisory size and this floor is inert.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.tools.Sessions.defaultCpus
+    val spark = graft.tools.Sessions.local("graft-bench")
+
+    // Off-clock failures are reported, not swallowed: a stderr line per
+    // failure and the (phase:query) names in the full record's
+    // `build_failed` list — a warm or index build that threw leaves its
+    // slot timing a cold or unbuilt path.
+    val buildFailed = scala.collection.mutable.ArrayBuffer.empty[String]
+    def offClock(phase: String, name: String, dir: String): Unit =
+      SparkEntry.queries.get(name).foreach { fn =>
+        try fn(spark, dir).write.format("noop").mode("overwrite").save()
+        catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $phase $name failed: $e")
+            buildFailed += s"$phase:$name"
+        }
+      }
 
     // warm the JVM/codegen/parquet paths with the same plan shapes at the
     // smallest SF, off the clock — measures steady-state, not first-JIT.
@@ -451,22 +433,12 @@ object Bench {
     // dedup_cluster number showed; the second pass is where tiered
     // compilation finishes for the round-loop code paths.
     val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory) {
-      for (_ <- 1 to 2; name <- headlineRun) {
-        SparkEntry.queries.get(name).foreach { fn =>
-          try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
-        }
-      }
-    }
+    if (new java.io.File(warmDir).isDirectory)
+      for (_ <- 1 to 2; name <- headlineRun) offClock("warm", name, warmDir)
 
     // off-clock index build at the MEASURED sfDir (see indexBuildQueries)
-    for (name <- indexBuildQueries.filter(headlineRun.contains)) {
-      SparkEntry.queries.get(name).foreach { fn =>
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
-    }
+    for (name <- indexBuildQueries.filter(headlineRun.contains))
+      offClock("index_build", name, sfDir)
 
     // ≥3 timed rounds, ROUND-ROBIN (q1..qn, q1..qn, ...) so slow
     // environment drift within the run lands on every query equally; the
@@ -608,7 +580,7 @@ object Bench {
         (lf > 0 && math.abs(hf - lf) / lf > 0.25) || residualFlagged(res)
       s"""{"pass":${r + 1},"light_factor":${"%.4f".format(lf)},"heavy_factor":${"%.4f".format(hf)},"prefix_total":${"%.4f".format(prefixRaw)},"norm_prefix_total":${"%.4f".format(prefixNorm)},"residual_median":${res.map(x => "%.4f".format(x._1)).getOrElse("null")},"distrust":$flagged}"""
     }.mkString("[", ",", "]")
-    val fullLine = s"""{"metric":"total","value":${"%.4f".format(total)},"unit":"sec","cpus":$cpus,"queries":$qs,"queries_min":$qsMin,"queries_norm":$qsNorm,"canary":$canaryJson,"canary_heavy":$canaryHeavyJson,"residual":$residJson,"distrust":$distrust,"passes":$passesJson,"norm_prefix_total":${"%.4f".format(normPrefixTotal)},"norm_total":${"%.4f".format(normTotal)},"shared_prefix":$shared,"runs":$rounds,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":${"%.4f".format(total)},"unit":"sec","cpus":$cpus,"queries":$qs,"queries_min":$qsMin,"queries_norm":$qsNorm,"canary":$canaryJson,"canary_heavy":$canaryHeavyJson,"residual":$residJson,"distrust":$distrust,"passes":$passesJson,"norm_prefix_total":${"%.4f".format(normPrefixTotal)},"norm_total":${"%.4f".format(normTotal)},"shared_prefix":$shared,"build_failed":${buildFailed.distinct.map(n => s""""$n"""").mkString("[", ",", "]")},"runs":$rounds,"sf":"$sfDir"}"""
     // The PRINTED line must fit the driver's 4 KB stdout-tail capture
     // (r16/r17 PERF came back empty because the full record is >11 KB
     // and the tail started mid-line — json parse failed two rounds

@@ -14,8 +14,7 @@ import graft.functions.expressions.{MinHashSignature, SimHash64,
   * the same way: `function/registry.go:20-44` — names resolve at parse
   * time, not via host-language imports.)
   *
-  * Register post-hoc with `SqlFunctions.register(spark)`, or at build
-  * time via `.withExtensions(new graft.plans.GraftExtensions)`.
+  * Register on a live session with `SqlFunctions.register(spark)`.
   */
 object SqlFunctions {
 
@@ -26,7 +25,7 @@ object SqlFunctions {
   }
 
   /** (name, builder) for every SQL-exposed custom function. */
-  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "minhash_signature" -> { args =>
       require(args.size == 2, "minhash_signature(shingles, numHashes)")
       MinHashSignature(args.head, intArg(args(1), "minhash_signature", 2))

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -157,30 +157,21 @@ object AsOfStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   }
 }
 
-/** Register via builder extensions (`.withExtensions(new GraftExtensions)`)
-  * or post-hoc on a live session (`AsOfJoin.register(spark)` /
-  * `SqlFunctions.register(spark)`): the as-of planner strategy plus the
-  * custom expressions as SQL-callable functions. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  def apply(e: SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => AsOfStrategy)
-    e.injectPlannerStrategy(_ => RangeJoinStrategy)
-    graft.functions.SqlFunctions.builders.foreach { case (name, b) =>
-      e.injectFunction((
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[GraftExtensions].getName, name),
-        b))
-    }
+/** The engine's one planner-extension hook: installs every custom
+  * physical strategy (as-of and range join) on a live session, each at
+  * most once. Both DataFrame APIs call it, so no caller registers by
+  * hand; SQL functions register separately (`SqlFunctions.register`). */
+object Strategies {
+  private val all = Seq(AsOfStrategy, RangeJoinStrategy)
+
+  def register(spark: SparkSession): Unit = synchronized {
+    val have = spark.experimental.extraStrategies
+    val missing = all.filterNot(have.contains)
+    if (missing.nonEmpty) spark.experimental.extraStrategies = have ++ missing
   }
 }
 
 object AsOfJoin {
-
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfStrategy
 
   /** DataFrame API over the custom operator — same signature/semantics as
     * the composed `operators.AsOf.asofJoin`. */
@@ -188,7 +179,7 @@ object AsOfJoin {
                leftTs: String, rightTs: String,
                rightCols: Map[String, String]): DataFrame = {
     val spark = left.sparkSession
-    register(spark)
+    Strategies.register(spark)
     val lPlan = Bridge.analyzedPlan(left)
     val rPlan = Bridge.analyzedPlan(right)
     def attr(plan: LogicalPlan, name: String): Attribute =

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -168,11 +168,6 @@ object RangeJoinStrategy extends org.apache.spark.sql.execution.SparkStrategy {
 
 object RangeJoin {
 
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(RangeJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ RangeJoinStrategy
-
   /** DataFrame API: inner-join each `points` row to every `ranges` row of
     * the same `keys` whose [loCol, hiCol] contains `tsCol` (inclusive).
     * `rangeCols` renames the carried range columns.
@@ -185,7 +180,7 @@ object RangeJoin {
                 tsCol: String, loCol: String, hiCol: String,
                 rangeCols: Map[String, String]): DataFrame = {
     val spark = points.sparkSession
-    register(spark)
+    Strategies.register(spark)
     val lPlan = Bridge.analyzedPlan(points)
     val rPlan = Bridge.analyzedPlan(ranges)
     def attr(plan: LogicalPlan, name: String): Attribute =

@@ -197,18 +197,10 @@ object IncrementalLinkIndex {
       GenStore.sidePresence(spark, v, "urls"))
   }
 
-  /** LinkProbe's view of the committed set (timing the full-scan
-    * baseline over the same fence the probe uses). */
+  /** The committed epoch set the probes read — `IndexMaint probe` times
+    * this listing alone as the metadata share of cold latency. */
   private[graft] def committedEpochs(spark: SparkSession,
       cfg: Config): Seq[Long] = viewOrFail(spark, cfg).v.eps
-
-  /** The view's full link rows (src, abs, text) — LinkProbe's full-scan
-    * baseline reads THIS (generation ∪ remainder), not the raw epoch
-    * tree, so the baseline stays equivalent to the pruned probe on a
-    * compacted index (r14 ADVICE: after compact+gc the folded epochs'
-    * files live only in the generation). */
-  private[graft] def allLinks(spark: SparkSession, cfg: Config): DataFrame =
-    linksRead(spark, viewOrFail(spark, cfg))
 
   /** The view's url map: (url_norm, dst) — memoized per view like the
     * resolved projection: the rank/HITS cores re-read the node universe
@@ -349,9 +341,8 @@ object IncrementalLinkIndex {
 
   /** The canonical (normalized) forms of probe target URLs, via the
     * SAME expressions the ingest used — one |targets|-row local job
-    * (bounded, never corpus). Shared by [[inlinks]] and LinkProbe's
-    * full-scan baseline so the two time EQUIVALENT queries. */
-  private[graft] def canonicalTargets(spark: SparkSession,
+    * (bounded, never corpus). */
+  private def canonicalTargets(spark: SparkSession,
       targetUrls: Seq[String]): Seq[String] =
     spark.range(1)
       .select(explode(array(targetUrls.map(lit): _*)).as("u"))

@@ -116,7 +116,7 @@ object Admin {
         // stop what this command itself created
         val preexisting =
           org.apache.spark.sql.SparkSession.getDefaultSession.isDefined
-        val spark = Sessions.local("graft-admin", "local[2]", "2")
+        val spark = Sessions.local("graft-admin")
         val df = spark.read.parquet(
           entries.map { case (b, bv) => s"$target/b$b-v$bv" }: _*)
         println(s"rows: ${df.count()}")

@@ -17,7 +17,7 @@ import graft.sources.Connectors._
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = Sessions.local("graft-demo", "local[4]", "4")
+    val spark = Sessions.local("graft-demo")
 
     // pipeline DSL: multi-table source, fan-out to two sinks
     val tmp = java.nio.file.Files.createTempDirectory("graft-demo").toString

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.streaming.{IncrementalAnnIndex, IncrementalDedup,
   IncrementalLinkIndex, IncrementalSearchIndex}
 
-/** Maintenance + measurement CLI for the whole ingest-time index family
-  * (the [[LinkIngest]]/[[LinkCompact]]/[[LinkProbe]] trio, generalized):
+/** The one maintenance + measurement CLI for the whole ingest-time index
+  * family (link, search, dedup, ann):
   *
   *   sbt "runMain graft.tools.IndexMaint ingest <link|search|dedup|ann> <sfDir> <indexDir> [epochs=12] [upTo=epochs]"
   *   sbt "runMain graft.tools.IndexMaint maintain <link|search|dedup|ann> <indexDir> [sizeRatio=inf] [graceMs=0]"
@@ -25,20 +25,6 @@ import graft.streaming.{IncrementalAnnIndex, IncrementalDedup,
   */
 object IndexMaint {
 
-  private def session(name: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName(s"graft-indexmaint-$name")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private def time[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()
     val a = f
@@ -48,7 +34,7 @@ object IndexMaint {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: IndexMaint <cmd> ... (see scaladoc)")
     val cmd = args(0)
-    val spark = session(cmd)
+    val spark = Sessions.local(s"graft-indexmaint-$cmd")
     try cmd match {
       case "ingest" =>
         val Array(_, kind, sfDir, idxDir) = args.take(4)

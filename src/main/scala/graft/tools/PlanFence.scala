@@ -21,9 +21,9 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
   * way, so node counts alone cannot see it).
   *
   * Fingerprints bind to (data dir, session config): they are generated
-  * and asserted at sf0.001 under the ScalaTest session shape (local[4],
-  * 4 shuffle partitions) — `main` uses exactly that config. Regenerate
-  * after an INTENDED plan change with:
+  * and asserted at sf0.001 under the ScalaTest session shape — `main`
+  * and `SparkSpec` both build it as `Sessions.local(_, cpus = 4)`, so
+  * the two cannot drift. Regenerate after an INTENDED plan change with:
   *
   *   sbt "runMain graft.tools.PlanFence src/test/resources/plan_fingerprints.json"
   *
@@ -135,16 +135,8 @@ object PlanFence {
       "src/test/resources/plan_fingerprints.json")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.001")
-    // MUST match the ScalaTest session shape — fingerprints bind to it
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-planfence")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the ScalaTest session shape (SparkSpec) — fingerprints bind to it
+    val spark = Sessions.local("graft-planfence", cpus = 4)
     try {
       val fps = all(spark, sfDir)
       java.nio.file.Files.write(java.nio.file.Paths.get(out),

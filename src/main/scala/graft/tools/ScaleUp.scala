@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale-up of a testdata SF dir for scaling spot-benches
@@ -82,16 +82,7 @@ object ScaleUp {
     require(args.length >= 2, "usage: ScaleUp <srcSfDir> <outDir> [factor]")
     val Array(src, out) = args.take(2)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-scaleup")
 
     def t(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def w(df: DataFrame, name: String): Unit =

@@ -2,21 +2,49 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** One place for the local-session defaults every tool needs (UTC, nanos
-  * timestamps, no UI) — the tools were each hand-rolling this block with
-  * slight drift. */
+/** The one local-session builder: every main, tool and the test suite
+  * build their session here, so UTC, nanos timestamps, the AQE floor and
+  * the spot knobs cannot drift apart between entry points.
+  *
+  * Knobs (read once, at first use):
+  *   - `SPARK_GRAFT_CPUS` — default core count (else every available core)
+  *   - `SPARK_GRAFT_SHUFFLE_PARTITIONS` — shuffle partitions (else cpus)
+  *   - `SPARK_GRAFT_AQE` — `false` for AQE-off comparison spots
+  *   - `SPARK_GRAFT_AQE_MIN_PARTITION` — coalescing floor (else 64k)
+  */
 object Sessions {
-  def local(appName: String, defaultMaster: String = "local[8]",
-      defaultPartitions: String = "8"): SparkSession = {
+  val defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+  // scale-experiment knob: on a real cluster shuffle partitions scale
+  // with data; local spots at 30-100x data on a FIXED partition count
+  // keep growing per-partition sort/spill volume, which shows up as a
+  // super-linear tail on sort-heavy slots. Overriding lets the
+  // partition-scaling hypothesis be MEASURED instead of asserted (see
+  // BENCH_sf10.json).
+  private val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+  // prod runs AQE on; the plan fingerprints pin AQE-off shapes (the
+  // AqePlanSpec story) — timing both ways shows the re-plan is free
+  private val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
+  // AQE's post-shuffle coalescing assumes task cost ∝ bytes; the
+  // CPU-dense slots here (array intersects, integer fixed points,
+  // codegen'd hash chains over ~50 B rows) break that assumption, and
+  // the default 1 MiB floor coalesces their small-but-hot shuffles onto
+  // 1-3 cores (partitioning must be derived from the workload, not a
+  // constant). 64 KiB keeps parallelismFirst's totalBytes/parallelism
+  // target in charge down to genuinely tiny shuffles; at scale
+  // partitions sit at the advisory size and this floor is inert.
+  private val aqeMinPartition =
+    sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k")
+
+  def local(appName: String, cpus: Int = defaultCpus): SparkSession = {
     val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", defaultMaster))
+      .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultPartitions))
-      // CPU-dense shuffles must not coalesce onto 1-3 cores (see the
-      // Bench session's comment — same knob, same scale story)
+        shufflePartitions.getOrElse(cpus.toString))
+      .config("spark.sql.adaptive.enabled", aqe)
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
+        aqeMinPartition)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

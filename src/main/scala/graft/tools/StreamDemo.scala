@@ -11,7 +11,7 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val gap = args.lift(1).map(_.toLong).getOrElse(1800L)
-    val spark = Sessions.local("graft-stream-demo", "local[4]", "4")
+    val spark = Sessions.local("graft-stream-demo")
 
     val tmp = java.nio.file.Files.createTempDirectory("graft-sdemo").toString
     val ev = graft.core.Tables.table(spark, sfDir, "events")

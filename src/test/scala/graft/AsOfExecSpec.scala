@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.operators.AsOf
-import graft.plans.AsOfJoin
+import graft.plans.{AsOfJoin, AsOfStrategy, RangeJoin, RangeJoinStrategy}
 
 class AsOfExecSpec extends SparkSpec {
 
@@ -54,5 +54,20 @@ class AsOfExecSpec extends SparkSpec {
     assert(out(0).getAs[String]("ask2") == "ask2")
     assert(out(1).isNullAt(out(1).fieldIndex("bid2")) &&
       out(1).isNullAt(out(1).fieldIndex("ask2")))
+  }
+
+  test("both DataFrame APIs install each planner strategy exactly once") {
+    import spark.implicits._
+    val left = Seq((1L, 3L)).toDF("k", "ts")
+    val right = Seq((1L, 1L, 5L, "a")).toDF("k", "lo", "hi", "v")
+    for (_ <- 1 to 2) {
+      AsOfJoin.asofJoin(left, right.withColumnRenamed("lo", "ts"), Seq("k"),
+        "ts", "ts", Map("v" -> "v2"))
+      RangeJoin.rangeJoin(left, right, Seq("k"), "ts", "lo", "hi",
+        Map("v" -> "v2"))
+    }
+    val strategies = spark.experimental.extraStrategies
+    assert(strategies.count(_ == AsOfStrategy) == 1, strategies)
+    assert(strategies.count(_ == RangeJoinStrategy) == 1, strategies)
   }
 }

@@ -107,6 +107,17 @@ class IncrementalLinkSpec extends SparkSpec {
     assert(got == want, s"inlinks mismatch: ${got.diff(want).take(3)}")
     assert(got.nonEmpty, "fixture should have in-links for item-0/item-1")
 
+    // the probe canonicalizes its targets with the ingest's expressions:
+    // upper-case scheme/host, a tracking param, a fragment and a
+    // trailing slash all probe the same rows as the canonical URL
+    def probe(url: String) = IncrementalLinkIndex.inlinks(spark, cfg, Seq(url))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
+      .toSet
+    val canonical = probe(targets.head)
+    assert(canonical.nonEmpty, "fixture should have in-links for item-0")
+    assert(probe("HTTPS://NEWS.EXAMPLE.COM/articles/item-0/?utm_source=x#top")
+      == canonical, "non-canonical spelling probed different rows")
+
     // partition-pruned: the scan carries a b_mod partition filter and
     // the executed read touches fewer files than the full bucket set
     // (inputFiles lists the UNpruned relation, so assert on the plan +

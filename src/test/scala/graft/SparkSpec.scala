@@ -11,20 +11,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   // One session per JVM — suites share it; Test / fork gives one JVM per run.
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // match the Bench/Verify sessions (CPU-dense shuffles must not
-      // coalesce onto one core — see the Bench session's comment)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // local[4] whatever the host: PlanFence's fingerprints bind to it
+  lazy val session: SparkSession =
+    graft.tools.Sessions.local("graft-test", cpus = 4)
 }
