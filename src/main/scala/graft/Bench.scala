@@ -340,9 +340,9 @@ object Bench {
     }
 
   /** Slots whose FIRST run at a given sfDir trains and memoizes an index
-    * (IVF centroids / PQ codebooks — `Similarity.centroidCache`,
-    * `ProductQuantizer.bookCache`/`coarseCache`, keyed by corpus dir).
-    * The sf0.001 warm pass populates the caches for the WARM dir only,
+    * (IVF centroids / PQ codebooks — the `Similarity` and
+    * `ProductQuantizer` memos, keyed by corpus dir).
+    * The sf0.001 warm pass populates the memos for the WARM dir only,
     * so without this list the first timed round at sfDir pays index
     * training — r7's `embed_ivfadc_topk` median was 11.75 s against a
     * 2.41 s min, a build-vs-probe conflation, not drift. These get ONE
@@ -395,6 +395,21 @@ object Bench {
       // rank tables (refreshPriors — pagerank/domain/hits/trust-mod97);
       // timed rounds measure the table read, the steady-state shape
       "link_incr_trustrank_prior", "link_incr_hits_prior")
+
+  /** The ONE printed line, sized for a 2,000-char stdout-tail capture
+    * (~80 chars of it sbt's epilogue): `metric/value/unit/cpus/sf/
+    * distrust` and per-slot medians values-only, 2 decimals, in
+    * [[headline]] order restricted to the slots run. Everything named
+    * lives in `BENCH_last_full*.json`. */
+  def stdoutLine(total: Double, cpus: Int, medians: Seq[Double],
+      distrust: Boolean, sf: String): String = {
+    def f(digits: Int, v: Double) =
+      s"%.${digits}f".formatLocal(java.util.Locale.ROOT, v)
+    val qs = medians.map(f(2, _)).mkString("[", ",", "]")
+    s"""{"metric":"total","value":${f(4, total)},"unit":"sec",""" +
+      s""""cpus":$cpus,"queries":$qs,"queries_order":"prefix",""" +
+      s""""distrust":$distrust,"sf":"$sf"}"""
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -581,16 +596,9 @@ object Bench {
       s"""{"pass":${r + 1},"light_factor":${"%.4f".format(lf)},"heavy_factor":${"%.4f".format(hf)},"prefix_total":${"%.4f".format(prefixRaw)},"norm_prefix_total":${"%.4f".format(prefixNorm)},"residual_median":${res.map(x => "%.4f".format(x._1)).getOrElse("null")},"distrust":$flagged}"""
     }.mkString("[", ",", "]")
     val fullLine = s"""{"metric":"total","value":${"%.4f".format(total)},"unit":"sec","cpus":$cpus,"queries":$qs,"queries_min":$qsMin,"queries_norm":$qsNorm,"canary":$canaryJson,"canary_heavy":$canaryHeavyJson,"residual":$residJson,"distrust":$distrust,"passes":$passesJson,"norm_prefix_total":${"%.4f".format(normPrefixTotal)},"norm_total":${"%.4f".format(normTotal)},"shared_prefix":$shared,"build_failed":${buildFailed.distinct.map(n => s""""$n"""").mkString("[", ",", "]")},"runs":$rounds,"sf":"$sfDir"}"""
-    // The PRINTED line must fit the driver's 4 KB stdout-tail capture
-    // (r16/r17 PERF came back empty because the full record is >11 KB
-    // and the tail started mid-line — json parse failed two rounds
-    // running). Print the driver contract (metric/value/unit/queries/sf)
-    // plus small scalars only — ~3.2 KB at 114 slots, leaving headroom
-    // for the sbt epilogue inside the captured tail. The per-slot
-    // min/norm maps, canary slot maps, passes[] and prefix name list
-    // live ONLY in the file artifacts below.
-    val line = s"""{"metric":"total","value":${"%.4f".format(total)},"unit":"sec","cpus":$cpus,"queries":$qs,"canary_factor":${"%.4f".format(factor)},"canary_heavy_factor":${"%.4f".format(factorHeavy)},"residual":$residJson,"distrust":$distrust,"norm_prefix_total":${"%.4f".format(normPrefixTotal)},"norm_total":${"%.4f".format(normTotal)},"shared_prefix_count":${sharedRun.size},"shared_prefix_total":${"%.4f".format(sharedTotal)},"runs":$rounds,"sf":"$sfDir"}"""
-    println(line)
+    println(stdoutLine(total, cpus,
+      headlineRun.filter(SparkEntry.queries.contains)
+        .map(k => median(timings(k))), distrust, sfDir))
     // full per-slot record at a stable path (judge r12 #7), now ALSO at
     // a core-count-stamped path (judge r17 #2): the driver benches at
     // two core counts and both wrote BENCH_last_full.json, so the 8-core

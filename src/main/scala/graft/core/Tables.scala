@@ -64,7 +64,13 @@ object Tables {
     * grown table re-lists instead of serving the first call's layout
     * forever (judge r17: the immortal cache was a stale-gate footgun for
     * any non-fixture use). One stat call per read amortizes the listing
-    * without trusting immutability. */
+    * without trusting immutability. It assumes a FLAT table directory:
+    * a directory's mtime moves when a direct child is added, removed or
+    * renamed, not when a nested (`col=value/`) file changes or a file is
+    * rewritten in place. A stale entry only mis-gates the fan-out —
+    * speed, never results. Outside [[graft.operators.Memo]] because
+    * Memo keys name immutable snapshots, while these name mutable paths
+    * revalidated on every read. */
   private val scanLayout =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Int)]()
 

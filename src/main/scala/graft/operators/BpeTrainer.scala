@@ -114,15 +114,14 @@ object BpeTrainer {
   }
 
   // one trained table per (corpus key, numMerges): train once, encode
-  // many — the Similarity.centroidCache pattern. Merge tables are tiny
-  // (numMerges rows), so the cache never matters for memory.
-  private val mergeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Int, String, String, Long)]]()
+  // many. Merge tables are tiny (numMerges rows), so the memo never
+  // matters for memory.
 
   def trainCached(df: DataFrame, textCol: String, numMerges: Int,
       cacheKey: String): Seq[(Int, String, String, Long)] =
-    mergeCache.computeIfAbsent(s"$cacheKey/$numMerges",
-      _ => train(df, textCol, numMerges))
+    Memo.shared.once(Some(cacheKey), s"bpe-merges/$numMerges") {
+      train(df, textCol, numMerges)
+    }
 
   /** ENCODE with a learned merge table — the other half of the tokenizer
     * pair. Scalable form: the merge folds run once per word TYPE (the

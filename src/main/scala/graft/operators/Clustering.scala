@@ -45,22 +45,14 @@ object Clustering {
     require(edges.schema(aCol).dataType == edges.schema(bCol).dataType,
       s"edge endpoint types differ: ${edges.schema(aCol).dataType} vs " +
         s"${edges.schema(bCol).dataType}")
-    val spark = edges.sparkSession
 
-    // Lineage fence: re-root the round's result on its computed RDD so
-    // the next round's plan is scan→stars, not an exponentially growing
-    // tree (each star references its input several times). Persisted so
-    // the ONE action per round (the checksum below) both materializes
-    // and measures it. Rows are copied: shuffle readers reuse UnsafeRow
-    // buffers, and caching aliased rows corrupts the set. On a real
+    // Each round is re-rooted on its [[Fence]] so the next round's plan
+    // is scan→stars, not an exponentially growing tree (each star
+    // references its input several times); the ONE action per round
+    // (the checksum below) both materializes and measures it, and the
+    // previous round's fence is released once it has. On a real
     // cluster swap the persist for `checkpoint` every few rounds if
     // executor-loss recovery cost matters; the algorithm is oblivious.
-    import org.apache.spark.sql.graftbridge.Bridge
-    def fence(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[_]) = {
-      val rdd = Bridge.internalRdd(df).map(_.copy())
-      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (Bridge.fromInternalRows(spark, rdd, df.schema), rdd)
-    }
 
     // Convergence = the edge set stops changing. (count, xor-of-hashes)
     // is a deterministic set checksum (xor is order-independent and never
@@ -77,7 +69,7 @@ object Clustering {
     // and `prev` starts as a sentinel that can never match a real
     // checksum, so convergence is detected purely from round-over-round
     // stability — one job per round, total.
-    var (e, liveRdd) = fence(edges
+    var (e, liveRdd) = Fence(edges
       .select(col(aCol).as("u"), col(bCol).as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull &&
         col("u") =!= col("v")))
@@ -86,7 +78,7 @@ object Clustering {
     var iters = 0
     var done = false
     while (!done && iters < maxIterations) {
-      val (next, nextRdd) = fence(smallStar(largeStar(e)))
+      val (next, nextRdd) = Fence(smallStar(largeStar(e)))
       val cs = checksum(next) // one job: materializes + measures the round
       liveRdd.unpersist(blocking = false)
       liveRdd = nextRdd

@@ -451,9 +451,9 @@ object Dedup {
     // recompute them), so every call leaked a full copy of the corpus
     // shingle sets into storage until the session GC-thrashed (measured
     // 4.2 s fresh-JVM vs 24-42 s with 120-160 s of GC in a warm bench
-    // JVM). [[fencedOnce]] keeps the barrier but persists EVICTABLE
-    // blocks with live lineage and unpersists prior calls' fences.
-    val sets = fencedOnce(elemSets(df))
+    // JVM). [[Fence.persistedOnce]] keeps the barrier but persists
+    // EVICTABLE blocks with live lineage and retires prior calls' fences.
+    val sets = Fence.persistedOnce(elemSets(df))
     val hashRows = sets
       .select(col(idCol),
         explode(array_distinct(transform(col("toks"), e => xxhash64(e))))
@@ -508,41 +508,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         (col("inter").cast("double") / col("uni").cast("double"))
           .as("jaccard"))
-  }
-
-  /** The last few fenced element-set RDDs, newest last — a bounded
-    * registry so each [[jaccardPrefixPairs]] call can retire earlier
-    * calls' persisted fences (a bench session calls the operator dozens
-    * of times; unbounded persists pile into storage memory). Capacity
-    * covers the verify dump's thread pool; an unpersisted fence that
-    * somehow re-executes just recomputes from its live lineage. */
-  private val liveFences =
-    new java.util.ArrayDeque[org.apache.spark.rdd.RDD[_]]()
-
-  /** Fence-registry capacity: at least the verify dump's thread pool
-    * (SPARK_GRAFT_VERIFY_PAR, default 6) plus slack — a pool wider than
-    * a fixed cap would silently unpersist IN-FLIGHT fences and thrash
-    * recompute (advisor r17; correctness survives via live lineage, the
-    * GC win would not). */
-  private val fenceCapacity: Int =
-    math.max(8, sys.env.get("SPARK_GRAFT_VERIFY_PAR")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(6) + 2)
-
-  /** Re-root `df` on its computed, persisted InternalRow RDD (the
-    * [[Clustering.connectedComponents]] fence): one scan node downstream
-    * — a hard optimizer barrier — with MEMORY_AND_DISK blocks that stay
-    * evictable and recomputable, unlike localCheckpoint's pinned ones.
-    * Rows are copied (shuffle readers reuse UnsafeRow buffers). */
-  private def fencedOnce(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val rdd = Bridge.internalRdd(df).map(_.copy())
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    liveFences.synchronized {
-      liveFences.addLast(rdd)
-      while (liveFences.size > fenceCapacity)
-        liveFences.removeFirst().unpersist(blocking = false)
-    }
-    Bridge.fromInternalRows(df.sparkSession, rdd, df.schema)
   }
 
   /** Docs surviving the EXACT prefix-filter near-dedup: drop the higher

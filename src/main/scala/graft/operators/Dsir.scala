@@ -85,15 +85,12 @@ object Dsir {
   def importanceWeights(raw: DataFrame, target: DataFrame, idCol: String,
                         textCol: String, dim: Int,
                         alpha: Double = 1.0): DataFrame = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     val rawCounts = Fence.persistedOnce(hashedCounts(raw, idCol, textCol, dim))
-    val tgtTotalsF = Future(
+    val tgtTotals = SideInput(raw.sparkSession, "dsir target totals")(
       bucketTotals(hashedCounts(target, idCol, textCol, dim), dim))
     val rawTotals = bucketTotals(rawCounts, dim)
     val ratio9 = logRatioGrid(rawTotals,
-      Await.result(tgtTotalsF, Duration.Inf), alpha)
+      SideInput.await(raw.sparkSession, tgtTotals), alpha)
     val ratioCol: Column = lit(ratio9)
     val summed = rawCounts
       .groupBy(idCol)

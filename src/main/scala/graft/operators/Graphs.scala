@@ -40,11 +40,11 @@ import org.apache.spark.sql.functions._
   * partial-aggregated groupBy(dst) — the canonical distributed PageRank
   * step, linear in |E| per iteration with map-side combine on the
   * contribution sums. The out-degree-annotated edge table is the link
-  * index: built once, memoized per `cacheKey` (the `Similarity.memoLists`
-  * pattern) so repeated rank calls over one crawl snapshot never re-shuffle
-  * the raw edge list. Iteration lineage is re-rooted every `fenceEvery`
-  * rounds (the `Clustering.connectedComponents` fence) so deep runs plan
-  * scan→join, not a growing tree.
+  * index: built once, memoized per `cacheKey` ([[Memo]]) so repeated rank
+  * calls over one crawl snapshot never re-shuffle the raw edge list.
+  * Iteration lineage is re-rooted every `fenceEvery` rounds
+  * ([[Fence.persistedOnce]]) so deep runs plan scan→join, not a growing
+  * tree.
   *
   * == The taxation contract (named, r14) ==
   *
@@ -75,13 +75,14 @@ import org.apache.spark.sql.functions._
   */
 object Graphs {
 
-  /** Link-graph artifact memo: the out-degree-annotated edge table and
-    * the seeded node table are built once per named crawl snapshot and
-    * reused by every rank call in the session — and, crucially, by every
-    * ITERATION within one call (each round joins both; without the memo
-    * a 5-round rank re-scans the raw tables 5×). Key contract and
-    * eviction: [[Memo]]. */
-  private[graft] val memo = new Memo
+  /** Kinds of the link-graph artifacts memoized in [[Memo.shared]] (plus
+    * CurationOps' fused rank table, built from them): the out-degree-
+    * annotated edge table and the seeded node table are built once per
+    * named crawl snapshot and reused by every rank call in the session —
+    * and by every ITERATION within one call (each round joins both;
+    * without the memo a 5-round rank re-scans the raw tables 5×). */
+  private[graft] val memoKinds =
+    Set("pagerank", "pagerank-nodes", "hits", "fused-rank-table")
 
   /** Fixed-point integer PageRank.
     *
@@ -128,7 +129,6 @@ object Graphs {
     require(scale > 0 && scale <= Long.MaxValue / math.max(dampNum, 1L) / 2,
       s"scale $scale risks BIGINT overflow under dampNum=$dampNum")
 
-    val spark = nodes.sparkSession
     val ids = nodes.select(col(idCol).as("__id"))
     val seedIds = teleport match {
       case Some(p) => nodes.filter(p).select(col(idCol).as("__id"))
@@ -151,7 +151,7 @@ object Graphs {
     // must be positive; a null weight row is inert (null product).
     // Overflow bound unchanged: Σ_dst Σ w·(r div od) ≤ Σ_src od·(r/od)
     // ≤ Σ r ≤ scale — the weighted sum telescopes to the same mass.
-    val e = memo(cacheKey,
+    val e = Memo.shared(cacheKey,
         s"pagerank/$srcCol/$dstCol/${weightCol.getOrElse("unit")}") {
       val raw = weightCol match {
         case Some(w) => edges.select(col(srcCol).as("__src"),
@@ -165,7 +165,7 @@ object Graphs {
 
     // teleport indicator folded into the node table once: BASE mass (and
     // the round-0 rank) is `base`/`r0` on seeds, 0 elsewhere
-    val seeded = memo(cacheKey,
+    val seeded = Memo.shared(cacheKey,
       s"pagerank-nodes/$idCol/" +
         teleport.map(_.toString).getOrElse("uniform")) {
       teleport match {
@@ -174,13 +174,6 @@ object Graphs {
           coalesce(col("__seed"), lit(0L)).as("__seed"))
         case None => ids.select(col("__id"), lit(1L).as("__seed"))
       }
-    }
-
-    import org.apache.spark.sql.graftbridge.Bridge
-    def fence(df: DataFrame): DataFrame = {
-      val rdd = Bridge.internalRdd(df).map(_.copy())
-      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      Bridge.fromInternalRows(spark, rdd, df.schema)
     }
 
     var ranks = seeded.select(col("__id"),
@@ -198,7 +191,7 @@ object Graphs {
             expr(s"$dampNum * coalesce(__s, 0L) div $dampDen")).as("__r"))
       i += 1
       if (fenceEvery > 0 && i % fenceEvery == 0 && i < iters)
-        ranks = fence(ranks)
+        ranks = Fence.persistedOnce(ranks)
     }
     ranks.select(col("__id").as(idCol), col("__r").as("rank_fp"))
   }
@@ -220,10 +213,9 @@ object Graphs {
     * integer max, integer division — bit-identical at any layout and in
     * any engine; the gate oracle unrolls the same recurrence.
     *
-    * Each half-step is fenced (the `connectedComponents` pattern:
-    * persist + re-root, ONE action that both materializes the sums and
-    * reads the max). The lazy alternative — keeping the max in-plan as a
-    * 1-row broadcast — references each half-step's result twice, which
+    * Each half-step is fenced ([[Fence]]: persist + re-root, ONE action
+    * that both materializes the sums and reads the max). The lazy
+    * alternative — keeping the max in-plan as a 1-row broadcast — references each half-step's result twice, which
     * DOUBLES the recomputed lineage per half-step: measured 50 s at
     * sf0.001 for 3 rounds (≈2⁶ recomputations) vs ~1 s fenced. The
     * rescale quotient then lands in the next plan as a plain literal.
@@ -253,7 +245,6 @@ object Graphs {
       s"scale $scale risks silent BIGINT wrap in the raw half-step sums " +
         s"(bound: maxIndegree * 2 * scale < 2^63, i.e. max in-degree " +
         s"${Long.MaxValue / 2 / scale} at this scale)")
-    val spark = nodes.sparkSession
     // NOT memoized: a bare select(id) projection is generic enough that
     // Spark's CacheManager starts substituting it into OTHER queries'
     // matching plan fragments (cache subsumption is by sameResult, not
@@ -264,15 +255,8 @@ object Graphs {
     val ids = nodes.select(col(idCol).as("__id"))
 
     // plain (src, dst) — degree weighting is PageRank's trick, not HITS'
-    val e = memo(cacheKey, s"hits/$srcCol/$dstCol") {
+    val e = Memo.shared(cacheKey, s"hits/$srcCol/$dstCol") {
       edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-    }
-
-    import org.apache.spark.sql.graftbridge.Bridge
-    def fence(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[_]) = {
-      val rdd = Bridge.internalRdd(df).map(_.copy())
-      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (Bridge.fromInternalRows(spark, rdd, df.schema), rdd)
     }
 
     // one half-step: sum the far endpoint's value over `joinSide` edges,
@@ -284,7 +268,7 @@ object Graphs {
         .groupBy(keep).agg(sum("__v").as("__raw"))
       val all = ids.join(raw, ids("__id") === raw(keep), "left")
         .select(col("__id"), coalesce(col("__raw"), lit(0L)).as("__raw"))
-      val (fenced, rdd) = fence(all)
+      val (fenced, rdd) = Fence(all)
       val mxRow = fenced.agg(max(col("__raw"))).head()
       val mx = if (mxRow.isNullAt(0)) 0L else mxRow.getLong(0)
       val q = math.max(mx / scale, 1L)

@@ -145,27 +145,18 @@ object ProductQuantizer {
         .as("codes"))
   }
 
-  /** Trained-codebook memo, the [[Similarity]] centroidCache pattern:
-    * train once per named corpus, encode/probe many. */
-  private val bookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Codebooks]()
-
   /** Corpus-code memo: in a real deployment the codes ARE the index,
     * built once at ingest (exactly what `IncrementalAnnIndex` models) —
     * re-assigning and re-PQ-encoding the whole corpus on every probe
     * call would make the probe cost O(corpus) in float math instead of
-    * O(candidates) in table lookups. Keyed like the codebooks; persisted
-    * MEMORY_AND_DISK because at scale the code table is the ~3 TB
-    * artifact that must not be recomputed per query batch. */
-  private val codesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+    * O(candidates) in table lookups. Persisted MEMORY_AND_DISK because
+    * at scale the code table is the ~3 TB artifact that must not be
+    * recomputed per query batch. */
   private[operators] def memoCodes(cacheKey: Option[String], subKey: String)(
-      build: => DataFrame): DataFrame = cacheKey match {
-    case Some(key) => codesCache.computeIfAbsent(s"$key/$subKey", _ =>
-      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    case None => build
-  }
+      build: => DataFrame): DataFrame =
+    Memo.shared.once(cacheKey, s"pq-codes/$subKey") {
+      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** ADC approximate top-k with exact rerank: score every corpus CODE
     * against each query's lookup table (m integer-indexed lookups per
@@ -180,11 +171,8 @@ object ProductQuantizer {
       iters: Int = 3, rerank: Int = 0,
       cacheKey: Option[String] = None): DataFrame = {
     val r = if (rerank > 0) rerank else 4 * k
-    def train() = codebooks(corpus, idCol, vecCol, dim, m, ksub, iters)
-    val books = cacheKey match {
-      case Some(key) =>
-        bookCache.computeIfAbsent(s"$key/$dim/$m/$ksub/$iters", _ => train())
-      case None => train()
+    val books = Memo.shared.once(cacheKey, s"pq-books/$dim/$m/$ksub/$iters") {
+      codebooks(corpus, idCol, vecCol, dim, m, ksub, iters)
     }
     val dsub = dim / m
     val codes = memoCodes(cacheKey, s"adc/$dim/$m/$ksub/$iters") {
@@ -317,12 +305,10 @@ object ProductQuantizer {
       zip_with(u, element_at(table, cl + 1), (a, b) => a - b)
         .cast("array<float>")
     }
-    def trainBooks() = codebooks(corpus, idCol, vecCol, dim, m, ksub,
-      iters, prep = residualPrep)
-    val books = cacheKey match {
-      case Some(key) => bookCache.computeIfAbsent(
-        s"$key/ivfadc/$dim/$nl/$m/$ksub/$iters", _ => trainBooks())
-      case None => trainBooks()
+    val books = Memo.shared.once(cacheKey,
+        s"pq-books/ivfadc/$dim/$nl/$m/$ksub/$iters") {
+      codebooks(corpus, idCol, vecCol, dim, m, ksub, iters,
+        prep = residualPrep)
     }
 
     // index scan: list id + residual codes per corpus vector (assign
@@ -404,24 +390,17 @@ object ProductQuantizer {
     exactRerank(shortlist, corpus, queries, idCol, vecCol, k, cacheKey)
   }
 
-  private val coarseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]()
-
-  /** Cached coarse quantizer in UNIT space — shared by IVF-ADC and
+  /** Memoized coarse quantizer in UNIT space — shared by IVF-ADC and
     * IVF-SQ so the two composed indexes over one corpus train the coarse
     * stage once. */
   private[operators] def coarseCentroids(corpus: DataFrame, idCol: String,
       vecCol: String, dim: Int, nl: Int, iters: Int,
-      cacheKey: Option[String]): Array[Array[Float]] = {
-    def train() = Similarity.ivfCentroids(
-      corpus.select(col(idCol), unit(col(vecCol)).as(vecCol)),
-      idCol, vecCol, dim, nl, iters)
-    cacheKey match {
-      case Some(key) => coarseCache.computeIfAbsent(
-        s"$key/$dim/$nl/$iters", _ => train())
-      case None => train()
+      cacheKey: Option[String]): Array[Array[Float]] =
+    Memo.shared.once(cacheKey, s"pq-coarse/$dim/$nl/$iters") {
+      Similarity.ivfCentroids(
+        corpus.select(col(idCol), unit(col(vecCol)).as(vecCol)),
+        idCol, vecCol, dim, nl, iters)
     }
-  }
 
   /** The IVF-ADC / IVF-SQ coarse stage behind the flat/two-level
     * switch (the [[Similarity.Coarse]] twin, in UNIT space with L2
@@ -453,9 +432,6 @@ object ProductQuantizer {
     def allCents: Array[Array[Float]] = l2flat
   }
 
-  private val coarse2lCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Float]], Array[Array[Float]], Int)]()
-
   /** Flat below [[Similarity.TwoLevelMinLists]], two-level above —
     * where flat coarse training (sample × nlist × dim per iteration)
     * and corpus assignment (N × nlist × dim) turn quadratic in N. */
@@ -465,14 +441,12 @@ object ProductQuantizer {
     if (nl <= Similarity.TwoLevelMinLists)
       PqFlat(coarseCentroids(corpus, idCol, vecCol, dim, nl, iters, cacheKey))
     else {
-      def train() = Similarity.ivfCentroidsTwoLevel(
-        corpus.select(col(idCol), unit(col(vecCol)).as(vecCol)),
-        idCol, vecCol, dim, nl, iters)
-      val t = cacheKey match {
-        case Some(key) => coarse2lCache.computeIfAbsent(
-          s"$key/2l/$dim/$nl/$iters", _ => train())
-        case None => train()
+      val (l1, l2, k2) = Memo.shared.once(cacheKey,
+          s"pq-coarse-2l/$dim/$nl/$iters") {
+        Similarity.ivfCentroidsTwoLevel(
+          corpus.select(col(idCol), unit(col(vecCol)).as(vecCol)),
+          idCol, vecCol, dim, nl, iters)
       }
-      PqTwoLevel(t._1, t._2, t._3)
+      PqTwoLevel(l1, l2, k2)
     }
 }

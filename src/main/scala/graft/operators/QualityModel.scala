@@ -138,17 +138,14 @@ object QualityModel {
     x
   }
 
-  /** Train-once memoization keyed by corpus dir (the IVF-centroid /
-    * PQ-codebook pattern): the model is the ingest-time artifact,
-    * scoring reuses it. */
+  /** Train-once memoization keyed by corpus dir: the model is the
+    * ingest-time artifact, scoring reuses it. */
   def trainCached(vecs: DataFrame, idCol: String, vecCol: String,
                   labelCol: String, dim: Int, lambda: Double,
                   cacheKey: String): Model =
-    modelCache.computeIfAbsent(s"$cacheKey/$dim/$lambda",
-      _ => train(vecs, idCol, vecCol, labelCol, dim, lambda))
-
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
+    Memo.shared.once(Some(cacheKey), s"quality-model/$dim/$lambda") {
+      train(vecs, idCol, vecCol, labelCol, dim, lambda)
+    }
 
   /** Mean squared error of the probe on `vecs` — the fit metric the
     * spec asserts improves over the zero model. Exact-grid aggregation

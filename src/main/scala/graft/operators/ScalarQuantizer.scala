@@ -110,10 +110,6 @@ object ScalarQuantizer {
     df.select(col(idCol),
       codesExpr(ProductQuantizer.unit(col(vecCol)), b).as("codes"))
 
-  /** Bounds memo (the bookCache pattern): one agg scan per corpus key. */
-  private val boundsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Bounds]()
-
   /** SQ8 approximate top-k with exact rerank. `queries` must be
     * broadcastable (hint-forced), like every query side in
     * [[Similarity]]. */
@@ -121,11 +117,8 @@ object ScalarQuantizer {
       vecCol: String, k: Int, dim: Int, rerank: Int = 0,
       cacheKey: Option[String] = None): DataFrame = {
     val r = if (rerank > 0) rerank else 4 * k
-    def train() = bounds(corpus, vecCol, dim)
-    val b = cacheKey match {
-      case Some(key) =>
-        boundsCache.computeIfAbsent(s"$key/sq/$dim", _ => train())
-      case None => train()
+    val b = Memo.shared.once(cacheKey, s"sq-bounds/$dim") {
+      bounds(corpus, vecCol, dim)
     }
     val codes = ProductQuantizer.memoCodes(cacheKey, s"sq/$dim") {
       encode(corpus, idCol, vecCol, b)
@@ -196,11 +189,9 @@ object ScalarQuantizer {
     }
 
     // residual bounds: exact per-dim min/max over u − c_assigned
-    def train() = bounds(corpus, vecCol, dim, prep = residual)
-    val b = cacheKey match {
-      case Some(key) => boundsCache.computeIfAbsent(
-        s"$key/ivfsq/$dim/$nl/$iters", _ => train())
-      case None => train()
+    val b = Memo.shared.once(cacheKey,
+        s"sq-bounds/ivfsq/$dim/$nl/$iters") {
+      bounds(corpus, vecCol, dim, prep = residual)
     }
 
     // index scan: (corpus_id, list, residual codes) — memoized per

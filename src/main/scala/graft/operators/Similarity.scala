@@ -74,7 +74,7 @@ object Similarity {
     * route candidates (the [[ivfTopK]] join), the label anti-filter
     * runs before the heap — per-query cost is the probed lists' volume,
     * never the corpus (the corpus-side list assignment is the memoized
-    * ingest-built index, see `memoLists` — probe calls never re-run the
+    * ingest-built index, see [[memoKinds]] — probe calls never re-run the
     * quantizer). Same determinism contract as ivfTopK (decimal-
     * exact centroids), so the output pins. Candidates are only mined
     * from probed lists: a cross-class neighbor hiding in an unprobed
@@ -87,7 +87,7 @@ object Similarity {
     val nl = resolveNlist(corpus, idCol, nlist)
     val quant = trainCoarse(corpus, idCol, vecCol, dim, nl, iters, 0,
       cacheKey)
-    val lists = memoLists(cacheKey,
+    val lists = Memo.shared(cacheKey,
         s"listsLbl/$idCol/$vecCol/$labelCol/$dim/$nl/$iters/0") {
       corpus.select(col(idCol).as("corpus_id"),
           col(vecCol).cast("array<float>").as("cv"),
@@ -368,17 +368,10 @@ object Similarity {
     * ~[[TrainTargetVectors]] vectors regardless of corpus size
     * (`sampleMod = 0`); pass an explicit modulus to override.
     */
-  /** Trained-quantizer memo: an IVF index is built once and probed many
-    * times; callers name their corpus (`cacheKey`) to reuse the centroids
-    * across queries in a session. Purely an amortization — the training
-    * itself is deterministic, so a cache hit returns the same centroids
-    * a retrain would. */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]()
-
-  /** Corpus list-assignment memo: the (id, list, vector, norm) table IS
-    * the IVF inverted index, built once at ingest (the
-    * `ProductQuantizer.codesCache` twin). Re-running `assignExpr`/
+  /** Kinds of the IVF artifacts this object memoizes in [[Memo.shared]]:
+    * trained centroids and corpus list assignments. The (id, list,
+    * vector, norm) table IS the IVF inverted index, built once at ingest
+    * (the ProductQuantizer codes twin). Re-running `assignExpr`/
     * `probeExpr` over the whole corpus on every probe call costs
     * O(N·nlist·dim) float work per call — and under [[autoNlist]]
     * (nlist ~ N/128) that is QUADRATIC in corpus size, which is exactly
@@ -387,9 +380,11 @@ object Similarity {
     * probe touches the assignment table, never the quantizer.
     * MEMORY_AND_DISK: at scale this is the multi-TB artifact that must
     * not be recomputed per query batch. Values are bit-identical with
-    * or without the memo (persist changes nothing downstream), so every
-    * pinned oracle is unaffected. Key contract and eviction: [[Memo]]. */
-  private[graft] val memoLists = new Memo
+    * or without the memo (persist changes nothing downstream; training
+    * is deterministic), so every pinned oracle is unaffected. Key
+    * contract and eviction: [[Memo]]. */
+  private[graft] val memoKinds = Set("ivf-centroids", "ivf-centroids-2l",
+    "listsLbl", "lists", "probedv", "assign")
 
   /** `nlist <= 0` → auto-size from a column-pruned corpus count (a
     * parquet-metadata read). At the test fixtures' scales (≤2000
@@ -411,11 +406,6 @@ object Similarity {
     * Every pinned-oracle path trains at nlist ≤ 64 (fixture floor 16)
     * and stays flat; the switch only engages at real corpus sizes. */
   private[graft] val TwoLevelMinLists = 1024
-
-  /** Two-level trained-quantizer memo (the [[centroidCache]] twin for
-    * the large-nlist pair paths). */
-  private val twoLevelCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Float]], Array[Array[Float]], Int)]()
 
   /** Two-level coarse quantizer training: k1 ≈ √nlist level-1 cells via
     * the standard deterministic Lloyd ([[ivfCentroids]]), then k2 =
@@ -522,28 +512,20 @@ object Similarity {
       twoLevelRoute(vec, l1, l2flat, k2, n = nprobe, probe1 = nprobe)
   }
 
-  /** Train (or cache-fetch) the right quantizer for `nl` lists. Flat and
-    * two-level cache entries can never collide: the path is a pure
-    * function of `nl`, which is part of both key strings. */
+  /** Train (or memo-fetch) the right quantizer for `nl` lists. */
   private[graft] def trainCoarse(corpus: DataFrame, idCol: String,
       vecCol: String, dim: Int, nl: Int, iters: Int, sampleMod: Int,
       cacheKey: Option[String]): Coarse =
-    if (nl <= TwoLevelMinLists) {
-      def train() =
+    if (nl <= TwoLevelMinLists)
+      FlatCoarse(Memo.shared.once(cacheKey,
+          s"ivf-centroids/$dim/$nl/$iters/$sampleMod") {
         ivfCentroids(corpus, idCol, vecCol, dim, nl, iters, sampleMod)
-      FlatCoarse(cacheKey match {
-        case Some(key) => centroidCache.computeIfAbsent(
-          s"$key/$dim/$nl/$iters/$sampleMod", _ => train())
-        case None => train()
       })
-    } else {
-      def train() =
+    else {
+      val (l1, l2, k2) = Memo.shared.once(cacheKey,
+          s"ivf-centroids-2l/$dim/$nl/$iters/$sampleMod") {
         ivfCentroidsTwoLevel(corpus, idCol, vecCol, dim, nl, iters,
           sampleMod)
-      val (l1, l2, k2) = cacheKey match {
-        case Some(key) => twoLevelCache.computeIfAbsent(
-          s"$key/2l/$dim/$nl/$iters/$sampleMod", _ => train())
-        case None => train()
       }
       TwoLevelCoarse(l1, l2, k2)
     }
@@ -574,7 +556,7 @@ object Similarity {
       sampleMod, cacheKey)
     val cBase = corpus.select(col(idCol).as("corpus_id"),
       col(vecCol).cast("array<float>").as("cv"))
-    val lists = memoLists(cacheKey,
+    val lists = Memo.shared(cacheKey,
         s"lists/$idCol/$vecCol/$dim/$nl/$iters/$sampleMod") {
       cBase.withColumn("__cl", quant.assign(col("cv")))
         .withColumn("cnorm", l2norm(col("cv")))
@@ -625,9 +607,9 @@ object Similarity {
     val quant = trainCoarse(corpus, idCol, vecCol, dim, nl, iters,
       sampleMod, cacheKey)
     // The multi-probe (list, id, vector) assignment IS the ingest-built
-    // IVF index (memoLists): without the memo each call pays the full
+    // IVF index ([[memoKinds]]): without the memo each call pays the full
     // quantizer scan per query call.
-    val listed = memoLists(cacheKey,
+    val listed = Memo.shared(cacheKey,
         s"probedv/$idCol/$vecCol/$dim/$nl/$nprobe/$iters/$sampleMod") {
       base.select(col("id"), col("v"),
         explode(quant.probe(col("v"), nprobe)).as("__cl"))
@@ -704,7 +686,7 @@ object Similarity {
     val nl = resolveNlist(corpus, idCol, nlist)
     val quant = trainCoarse(corpus, idCol, vecCol, dim, nl, iters,
       sampleMod, cacheKey)
-    memoLists(cacheKey, s"assign/$idCol/$vecCol/$dim/$nl/$iters/$sampleMod") {
+    Memo.shared(cacheKey, s"assign/$idCol/$vecCol/$dim/$nl/$iters/$sampleMod") {
       corpus.select(col(idCol),
         quant.assign(col(vecCol).cast("array<float>")).as("cluster_id"))
     }

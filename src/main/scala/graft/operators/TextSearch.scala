@@ -27,6 +27,12 @@ import graft.functions.expressions.TopKAggregate.top_k_by
   * change a score (the embed_label_stats trick): results are
   * bit-identical under any partition layout, which is what lets the
   * query surface pin its oracle.
+  *
+  * Corpus stats (N, Σdl) are LAZY broadcast 1-row sides, bound by
+  * `spark.sql.broadcastTimeout` (default 300 s). With AQE on (every
+  * shipped session) the corpus pass runs as a shuffle stage first and
+  * the timeout covers only the 1-row collect; with AQE off it covers
+  * the whole tokenize pass — raise it for corpora that outlast it.
   */
 object TextSearch {
 
@@ -191,12 +197,10 @@ object TextSearch {
     * construction. */
   def hashedTfIdfCached(docs: DataFrame, idCol: String, textCol: String,
       dim: Int, cacheKey: String): DataFrame =
-    tfidfCache.computeIfAbsent(s"$cacheKey/$dim", _ =>
+    Memo.shared.once(Some(cacheKey), s"tfidf/$dim") {
       hashedTfIdf(docs, idCol, textCol, dim)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  private val tfidfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Hybrid lexical+semantic retrieval fused with Reciprocal Rank
     * Fusion (Cormack, Clarke & Büttcher, SIGIR 2009): per query, the

@@ -126,17 +126,16 @@ object UnigramLm {
       .groupBy("pid").agg(sum(col("g")).as("total"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
 
-  // one model per (corpus key, params): train once, encode/score many —
-  // the BpeTrainer.trainCached pattern. Models are O(vocabSize) strings.
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Vocab]()
+  // one model per (corpus key, params): train once, encode/score many.
+  // Models are O(vocabSize) strings.
 
   def trainCached(df: DataFrame, textCol: String, seedSize: Int,
       maxPieceLen: Int, emIters: Int, vocabSize: Int,
       cacheKey: String): Vocab =
-    cache.computeIfAbsent(
-      s"$cacheKey/$seedSize/$maxPieceLen/$emIters/$vocabSize",
-      _ => train(df, textCol, seedSize, maxPieceLen, emIters, vocabSize))
+    Memo.shared.once(Some(cacheKey),
+        s"unigram-vocab/$seedSize/$maxPieceLen/$emIters/$vocabSize") {
+      train(df, textCol, seedSize, maxPieceLen, emIters, vocabSize)
+    }
 
   /** The trained vocabulary as a DataFrame (rank, piece, logp_grid) —
     * the `queries` surface. Trains END-TO-END per call (the

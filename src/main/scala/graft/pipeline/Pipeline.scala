@@ -44,10 +44,26 @@ final case class PipelineSpec(name: String, source: Source,
   /** Compile each sink's full lineage (for explain/inspection). */
   def compile(spark: SparkSession): Map[String, DataFrame] = {
     val src = source.read(spark)
-    sinks.map(s => s.name -> compileSink(src, s)).toMap
+    val commands = mayCarryCommands(src)
+    sinks.map(s => s.name -> compileSink(src, s, commands)).toMap
   }
 
-  private def compileSink(src: DataFrame, s: SinkNode): DataFrame = {
+  /** Can a row of `src` be a command? Decided once per pipeline on the
+    * UNPERSISTED source (a cached one hides a snapshot's literal insert
+    * `op`, which folds `op = 'command'` to an empty relation).
+    * Transforms filter on `op` but never rewrite it. */
+  private def mayCarryCommands(src: DataFrame): Boolean =
+    src.columns.contains(graft.core.Envelope.OpCol) &&
+      !(src.filter(org.apache.spark.sql.functions.col(
+          graft.core.Envelope.OpCol) === graft.core.Envelope.Op.Command)
+        .queryExecution.optimizedPlan match {
+          case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+            r.data.isEmpty
+          case _ => false
+        })
+
+  private def compileSink(src: DataFrame, s: SinkNode,
+      commands: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.{col, not}
     val filtered =
       if (s.nsFilter == ".*") src else Transforms.nsFilter(s.nsFilter)(src)
@@ -56,13 +72,14 @@ final case class PipelineSpec(name: String, source: Source,
       // ns filter doesn't match a message SKIPS the transform — the
       // message still reaches the sink unmodified; and command messages
       // bypass transforms entirely (node.go:597). Only the SINK-level ns
-      // filter drops rows.
+      // filter drops rows. Without commands and ns filter no row
+      // bypasses, so no union re-adds the columns a transform dropped.
       val exemptions = Seq(
         if (t.nsFilter != ".*" && df.columns.contains(graft.core.Envelope.NsCol))
           Some(not(col(graft.core.Envelope.NsCol)
             .rlike(t.nsFilter.stripPrefix("/").stripSuffix("/"))))
         else None,
-        if (df.columns.contains(graft.core.Envelope.OpCol))
+        if (commands && df.columns.contains(graft.core.Envelope.OpCol))
           Some(col(graft.core.Envelope.OpCol) ===
             graft.core.Envelope.Op.Command)
         else None
@@ -106,7 +123,8 @@ final case class PipelineSpec(name: String, source: Source,
     }
     graft.streaming.StreamPipeline.fanout(tail, checkpoint,
       sinks.map(s => (s.name,
-        (epoch: DataFrame) => compileSink(epoch, s),
+        // a CDC tail can carry commands: every epoch keeps the bypass
+        (epoch: DataFrame) => compileSink(epoch, s, commands = true),
         (df: DataFrame, epochId: Long) => s.sink match {
           // epoch-keyed idempotency (incremental indexes) gets the real
           // foreachBatch epoch id; plain sinks stay epoch-blind
@@ -135,11 +153,12 @@ final case class PipelineSpec(name: String, source: Source,
     import graft.events.Events
     emitter.foreach(Events.boot(_, "graft-0.1", endpoints))
     val src = source.read(spark)
+    val commands = mayCarryCommands(src)
     val shared = if (sinks.length > 1)
       src.persist(StorageLevel.MEMORY_AND_DISK) else src
     try {
       sinks.foreach { s =>
-        val df = compileSink(shared, s)
+        val df = compileSink(shared, s, commands)
         emitter match {
           case None => s.sink.write(df)
           case Some(em) =>

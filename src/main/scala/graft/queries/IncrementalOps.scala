@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.operators.Memo
 import graft.streaming.{IncrementalDedup, IncrementalLinkIndex,
   IncrementalSearchIndex}
 
@@ -41,23 +42,13 @@ object IncrementalOps {
   private def docs(s: SparkSession, dir: String) =
     Tables.table(s, dir, "documents")
 
-  /** dir → built search-index location (per-JVM temp; ingest is
-    * idempotent per epoch via the stats marker, and computeIfAbsent
-    * serializes concurrent first builds). */
-  private val searchIdx =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val dedupIdx =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val linkIdx =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build (once per fixture dir) the link index over the link-fixture
     * crawl records, three mod-3 epochs — epoch assignment is irrelevant
     * to the union the probes read, and a link may target a page of a
     * LATER epoch, which is exactly the cross-epoch resolution the
     * probe-time join exists for. */
   private def builtLinkIdx(s: SparkSession, dir: String): String =
-    linkIdx.computeIfAbsent(dir, _ => {
+    Memo.shared.once(Some(dir), "link-index") {
       val tmp = java.nio.file.Files
         .createTempDirectory("graft-link-incr").toString
       val d = docs(s, dir).select("doc_id", "text")
@@ -77,7 +68,7 @@ object IncrementalOps {
       IncrementalLinkIndex.refreshPriors(s, cfg,
         trustSeeds = Seq("mod97" -> (col("doc_id") % 97 === 0)))
       s"$tmp/index"
-    })
+    }
 
   /** A SECOND link index, epoch-ingested then COMPACTED and GC'd (the
     * whole corpus folded to one generation of `hashBuckets` files per
@@ -86,11 +77,8 @@ object IncrementalOps {
     * correctness claim surfaced cross-engine. Built separately from
     * [[builtLinkIdx]] so the uncompacted probes keep exercising the
     * epoch-tree read path in the same gate run. */
-  private val compactLinkIdx =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def builtCompactLinkIdx(s: SparkSession, dir: String): String =
-    compactLinkIdx.computeIfAbsent(dir, _ => {
+    Memo.shared.once(Some(dir), "link-index-compact") {
       val tmp = java.nio.file.Files
         .createTempDirectory("graft-link-compact").toString
       val d = docs(s, dir).select("doc_id", "text")
@@ -105,7 +93,7 @@ object IncrementalOps {
       IncrementalLinkIndex.compact(s, cfg)
       IncrementalLinkIndex.gc(s, cfg, graceMs = 0L)
       s"$tmp/index"
-    })
+    }
 
   private[graft] val searchCfg =
     (dir: String) => IncrementalSearchIndex.Config(dir, hashBuckets = 64)
@@ -117,9 +105,9 @@ object IncrementalOps {
     * — offline maintenance), so its probes exercise the generation read
     * path. */
   private def builtSearchIdx(s: SparkSession, dir: String,
-      maintain: Boolean): String = {
-    val key = if (maintain) s"$dir#compact" else dir
-    searchIdx.computeIfAbsent(key, _ => {
+      maintain: Boolean): String =
+    Memo.shared.once(Some(dir),
+        if (maintain) "bm25-index-compact" else "bm25-index") {
       val tmp = java.nio.file.Files
         .createTempDirectory("graft-bm25-incr").toString
       val d = docs(s, dir).select("doc_id", "text")
@@ -133,8 +121,7 @@ object IncrementalOps {
         IncrementalSearchIndex.gc(s, searchCfg(s"$tmp/index"), graceMs = 0L)
       }
       s"$tmp/index"
-    })
-  }
+    }
 
   private def bm25Probe(s: SparkSession, idx: String): DataFrame =
     IncrementalSearchIndex.probe(s, searchCfg(idx),
@@ -147,9 +134,9 @@ object IncrementalOps {
     * the SECOND epoch, so the third epoch's candidate join reads the
     * generation — the ingest-time maintenance composition. */
   private def builtDedupIdx(s: SparkSession, dir: String,
-      maintain: Boolean): String = {
-    val key = if (maintain) s"$dir#compact" else dir
-    dedupIdx.computeIfAbsent(key, _ => {
+      maintain: Boolean): String =
+    Memo.shared.once(Some(dir),
+        if (maintain) "minhash-index-compact" else "minhash-index") {
       val tmp = java.nio.file.Files
         .createTempDirectory("graft-dedup-incr").toString
       val d = docs(s, dir).select("doc_id", "text")
@@ -168,8 +155,7 @@ object IncrementalOps {
         }
       }
       s"$tmp/index"
-    })
-  }
+    }
 
   private def keptSet(s: SparkSession, idx: String): DataFrame =
     IncrementalDedup.decisions(s, IncrementalDedup.Config(idx))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{CdcFixtures, Envelope, Tables}
 import graft.functions.Transforms
-import graft.operators.{Compaction, Upsert}
+import graft.operators.{Compaction, Memo, Upsert}
 
 /** Oracle-checked queries covering SURVEY §2.9's operator contract — the
   * reference's own relational surface (scan/union, ns-filter, pick/omit/
@@ -39,11 +39,6 @@ object ReferenceOps {
     Tables.taggedUnion(s, dir, unionTables)
       .withColumnRenamed("key", "tkey").withColumnRenamed("name", "tname")
 
-  /** dir → written csv+orc copies (per-JVM temp; write once, read many —
-    * bench iterations and the threaded verify dump share it). */
-  private val fmtDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   val queries: Map[String, Q] = Map(
     // the file-format sink/source matrix round-trip (r11): the documents
     // table written through the registry's CsvSink and OrcSink, read
@@ -54,7 +49,9 @@ object ReferenceOps {
     // cell from the parquet table for BOTH format rows.
     "format_roundtrip" -> ((s, dir) => {
       import graft.sources.Connectors
-      val out = fmtDirs.computeIfAbsent(dir, _ => {
+      // written once per dir to a per-JVM temp dir; bench iterations
+      // and the threaded verify dump read the same copies
+      val out = Memo.shared.once(Some(dir), "format-copies") {
         val tmp = java.nio.file.Files
           .createTempDirectory("graft-fmt").toString
         val d = t(s, dir, "documents")
@@ -62,7 +59,7 @@ object ReferenceOps {
         Connectors.CsvSink(s"$tmp/csv").write(d)
         Connectors.OrcSink(s"$tmp/orc").write(d)
         tmp
-      })
+      }
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "doc_id long, lang string, n_chars long, text string")
       def summarize(df: DataFrame, fmt: String): DataFrame =

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Html, Urls}
-import graft.operators.Graphs
+import graft.operators.{Graphs, Memo}
 import graft.streaming.GenStore.{GenView, Side, SidePresence}
 
 /** Incremental link-graph index — the crawl counterpart of
@@ -88,16 +88,17 @@ object IncrementalLinkIndex {
     Side("links", "b_mod", cfg.hashBuckets, Seq("src", "abs", "text")),
     Side("urls", "b_mod", cfg.hashBuckets, Seq("url_norm", "dst")))
 
-  /** The resolved (src, abs, text, dst) projection memoized per
-    * committed-epoch/generation view — a new epoch or fold is a new
-    * key, so the memo always serves the immutable union it was built
-    * from ([[graft.operators.Memo]] contract, fingerprint-enforced).
+  /** Kinds memoized in [[Memo.shared]]: the resolved (src, abs, text,
+    * dst) projection and its derivatives, per committed-epoch/generation
+    * view — a new epoch or fold is a new key, so the memo always serves
+    * the immutable union it was built from (fingerprint-enforced).
     * Probes call [[resolved]] repeatedly (rank per invocation, counts +
     * edges within one rank); without this the link⋈url shuffle re-runs
     * per call. Presence/existence checks are hoisted into the
     * [[LinkView]] (computed once per probe entry), so every memoized
     * build is a pure plan construction (r14 ADVICE). */
-  private[graft] val memo = new graft.operators.Memo
+  private[graft] val memoKinds =
+    Set("link-urls", "link-resolved", "link-counts", "link-domain-edges")
 
   /** Index one epoch of (idCol, urlCol, htmlCol) crawl records.
     * Idempotent per epochId: a job-committed `stats/epoch=N` means the
@@ -208,7 +209,7 @@ object IncrementalLinkIndex {
     * listing + many-shard scan each time unmemoized (the 100× HITS
     * probe spent most of its 40 s there before r14 pinned this). */
   private def urlsRead(spark: SparkSession, lv: LinkView): DataFrame =
-    memo(Some(lv.key), "urls") {
+    Memo.shared(Some(lv.key), "link-urls") {
       GenStore.sideRead(spark, lv.v, "urls", lv.urls,
           Seq("url_norm", "dst"))
         .getOrElse(throw new IllegalStateException(
@@ -240,7 +241,7 @@ object IncrementalLinkIndex {
     resolvedFor(spark, viewOrFail(spark, cfg))
 
   private def resolvedFor(spark: SparkSession, lv: LinkView): DataFrame =
-    memo(Some(lv.key), "resolved") {
+    Memo.shared(Some(lv.key), "link-resolved") {
       linksRead(spark, lv)
         .join(urlsRead(spark, lv),
           col("abs") === col("url_norm"), "left")
@@ -270,7 +271,7 @@ object IncrementalLinkIndex {
     val res = resolvedFor(spark, lv)
     // per-page link counts are a snapshot artifact like the edge index:
     // memoized so repeated rank calls pay only the rank iterations
-    val counts = memo(Some(lv.key), "counts") {
+    val counts = Memo.shared(Some(lv.key), "link-counts") {
       res.groupBy("src").agg(
           count(lit(1)).as("n_links"),
           count(col("dst")).as("n_out"))
@@ -314,7 +315,7 @@ object IncrementalLinkIndex {
     val res = resolvedFor(spark, lv)
     val srcUrls = urlsRead(spark, lv)
       .select(col("dst").as("src"), col("url_norm").as("src_url"))
-    val e = memo(Some(lv.key), "domain-edges") {
+    val e = Memo.shared(Some(lv.key), "link-domain-edges") {
       res.filter(col("dst").isNotNull)
         .join(srcUrls, Seq("src"))
         .select(Urls.registeredDomain(col("src_url")).as("src"),

@@ -81,9 +81,10 @@ object PlanFence {
     // hybrid_link_incr_rrf sorts before link_incr_* and materializes the
     // link memos mid-loop under the r14 once-at-start reset).
     def coldMemos(): Unit = {
-      graft.operators.Graphs.memo.invalidate("")
-      graft.operators.Similarity.memoLists.invalidate("")
-      graft.streaming.IncrementalLinkIndex.memo.invalidate("")
+      graft.operators.Memo.shared.invalidate("",
+        graft.operators.Graphs.memoKinds ++
+          graft.operators.Similarity.memoKinds ++
+          graft.streaming.IncrementalLinkIndex.memoKinds)
     }
     val prior = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -98,9 +99,9 @@ object PlanFence {
     // domain_incr_rank fingerprinted WARM when its own construction
     // triggered the link-index build + prior refresh after the reset).
     //
-    // PINNING SEMANTICS (r16 ADVICE): coldMemos() resets the Memo
-    // instances but deliberately NOT Spark's CacheManager — the
-    // pre-build pass also populates directly-persisted artifacts
+    // PINNING SEMANTICS (r16 ADVICE): coldMemos() resets the Graphs,
+    // Similarity and link-index memo kinds but deliberately no other
+    // artifact — the pre-build pass also populates persisted artifacts
     // (TextSearch / ProductQuantizer codebooks etc.), and evicting them
     // per query would fingerprint plans no session ever runs (every
     // real probe runs against a built index). Fingerprints are

@@ -68,4 +68,38 @@ class DsirSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), plan)
   }
+
+  test("side-input waits are bounded by spark.sql.broadcastTimeout, " +
+      "name the arm and cancel its jobs") {
+    import graft.operators.SideInput
+    val key = "spark.sql.broadcastTimeout"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "1s")
+    try {
+      // a one-task job that runs until it is killed (or 60 s pass)
+      val arm = SideInput(spark, "dsir target totals") {
+        spark.sparkContext.parallelize(Seq(1), 1).mapPartitions { it =>
+          val tc = org.apache.spark.TaskContext.get()
+          val end = System.nanoTime() + 60L * 1000000000L
+          while (!tc.isInterrupted() && System.nanoTime() < end)
+            Thread.sleep(20)
+          it
+        }.count()
+      }
+      val t0 = System.nanoTime()
+      val e = intercept[java.util.concurrent.TimeoutException] {
+        SideInput.await(spark, arm)
+      }
+      assert(e.getMessage.contains("dsir target totals"), e.getMessage)
+      scala.concurrent.Await.ready(arm.future,
+        scala.concurrent.duration.Duration(50, "s"))
+      assert(arm.future.value.exists(_.isFailure),
+        "the timed-out arm's job must be cancelled")
+      assert(System.nanoTime() - t0 < 40L * 1000000000L,
+        "cancellation must not wait for the job to finish")
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

@@ -165,6 +165,37 @@ class HybridRrfSpec extends SparkSpec {
     assert(incr == batchTwin, "ingest-time hybrid != batch twin")
   }
 
+  test("hybrid_link_rrf: a second construction runs no rank-table job") {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val q = graft.SparkEntry.queries("hybrid_link_rrf")
+    q(spark, sf) // builds the memoized rank table
+    // call sites ("count at X.scala:N"): a SQL action's from its
+    // execution (AQE submits the jobs from its own threads), any other
+    // job's from its result stage
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => sites.add(x.description)
+        case _ => ()
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties.getProperty("spark.sql.execution.id") == null)
+          sites.add(j.stageInfos.maxBy(_.stageId).name)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      q(spark, sf)
+      org.apache.spark.ListenerDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val rankJobs = sites.asScala.filter(s =>
+      s.contains("Graphs.scala") || s.contains("CurationOps.scala"))
+    assert(rankJobs.isEmpty,
+      s"construction re-ran rank-table jobs: ${rankJobs.mkString(", ")}")
+  }
+
   test("doc present in one arm only still fuses (single-arm score)") {
     // a query whose terms hit disjoint doc sets across arms is hard to
     // construct from fixtures; instead assert the invariant directly on

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.operators.Memo
 import graft.streaming.IncrementalLinkIndex
 import graft.queries.CurationOps
 
@@ -66,7 +67,7 @@ class IncrementalLinkCompactSpec extends SparkSpec {
     // cold-read the GC'd layout: the memo would otherwise serve the
     // pre-gc artifacts under the unchanged view key (bit-transparent,
     // but this assertion is about the on-disk state)
-    IncrementalLinkIndex.memo.invalidate("")
+    Memo.shared.invalidate("", IncrementalLinkIndex.memoKinds)
     assert(snapshot(cfg) == before, "gc changed a probe result")
     // the epoch trees hold no data files; the generation holds at most
     // hashBuckets files per side
@@ -106,7 +107,7 @@ class IncrementalLinkCompactSpec extends SparkSpec {
     val s2 = IncrementalLinkIndex.compact(spark, cfg).get
     assert(s2.gen == 1L && s2.foldedEpochs == Seq(0L, 1L, 2L))
     IncrementalLinkIndex.gc(spark, cfg, graceMs = 0L)
-    IncrementalLinkIndex.memo.invalidate("") // cold-read the gc'd layout
+    Memo.shared.invalidate("", IncrementalLinkIndex.memoKinds) // cold-read the gc'd layout
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$tmp/index/links-compact/gen=0")),
       "gc must drop the superseded generation")
@@ -128,7 +129,7 @@ class IncrementalLinkCompactSpec extends SparkSpec {
       p.delete()
     }
     rmrf(new java.io.File(s"$tmp/index/stats-compact"))
-    IncrementalLinkIndex.memo.invalidate("") // force cold reads
+    Memo.shared.invalidate("", IncrementalLinkIndex.memoKinds) // force cold reads
     assert(snapshot(cfg) == before,
       "an unmarked (crashed) generation leaked into the probe view")
     // re-running compact after the crash picks gen 0 again and commits
@@ -138,7 +139,7 @@ class IncrementalLinkCompactSpec extends SparkSpec {
 
     // the inverse corruption: marker present, gen dir deleted -> loud
     rmrf(new java.io.File(s"$tmp/index/links-compact"))
-    IncrementalLinkIndex.memo.invalidate("")
+    Memo.shared.invalidate("", IncrementalLinkIndex.memoKinds)
     val err = intercept[IllegalStateException] {
       IncrementalLinkIndex.rank(spark, cfg).count()
     }

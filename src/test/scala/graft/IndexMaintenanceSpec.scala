@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.streaming.{IncrementalAnnIndex, IncrementalDedup,
   IncrementalLinkIndex, IncrementalSearchIndex}
-import graft.operators.{Dedup, TextSearch}
+import graft.operators.{Dedup, Memo, TextSearch}
 import graft.queries.CurationOps
 
 /** The r15 propagation of the link index's maintenance discipline to
@@ -226,7 +226,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       "gc must keep the live big generation")
 
     // probes over the two-generation view == the plain 6-epoch index
-    IncrementalLinkIndex.memo.invalidate("")
+    Memo.shared.invalidate("", IncrementalLinkIndex.memoKinds)
     val plainCfg = IncrementalLinkIndex.Config(s"$tmp/plain",
       hashBuckets = 2)
     (0 until 6).foreach(e => ingest(plainCfg, e))
@@ -265,7 +265,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       "gc deleted files inside the grace window")
     // ... so the in-flight probe completes against the old files (drop
     // the memo's persisted copy first — the claim is about the FILES)
-    IncrementalLinkIndex.memo.invalidate("")
+    Memo.shared.invalidate("", IncrementalLinkIndex.memoKinds)
     assert(inflight.count() == wantRows)
 
     // grace 0: now they go
@@ -279,7 +279,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     IncrementalLinkIndex.ingestBatch(cfg,
       pages.filter(pmod(col("doc_id"), lit(3)) === 2), "doc_id", "url",
       "html", 2L)
-    IncrementalLinkIndex.memo.invalidate("")
+    Memo.shared.invalidate("", IncrementalLinkIndex.memoKinds)
     val before = IncrementalLinkIndex.rank(spark, cfg).collect()
       .map(r => (r.getLong(0), r.getLong(3))).toSet
     IncrementalLinkIndex.compact(spark, cfg) // gen 1 (folds gen 0 + ep 2)
@@ -288,7 +288,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       p.delete()
     }
     rmrf(new java.io.File(s"$tmp/index/stats-compact/gen=1"))
-    IncrementalLinkIndex.memo.invalidate("")
+    Memo.shared.invalidate("", IncrementalLinkIndex.memoKinds)
     assert(IncrementalLinkIndex.rank(spark, cfg).collect()
       .map(r => (r.getLong(0), r.getLong(3))).toSet == before,
       "an unmarked (crashed) generation leaked into the probe view")
@@ -299,7 +299,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$tmp/index/links-compact/gen=1")),
       "aged orphan generation must be swept")
-    IncrementalLinkIndex.memo.invalidate("")
+    Memo.shared.invalidate("", IncrementalLinkIndex.memoKinds)
     assert(IncrementalLinkIndex.rank(spark, cfg).collect()
       .map(r => (r.getLong(0), r.getLong(3))).toSet == before)
   }

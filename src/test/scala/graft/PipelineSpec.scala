@@ -72,6 +72,46 @@ class PipelineSpec extends SparkSpec {
       .map(_.getString(0)).toSeq == Seq("command"))
   }
 
+  test("pick, rename and omit narrow a snapshot sink's columns") {
+    val p = Pipeline.builder("narrow")
+      .source("fixtures", MultiTableSource(sf, Seq("nation")))
+      .transform("pick", Transforms.pick(Seq("n_nationkey", "n_name")))
+      .save("picked", new MemorySink)
+      .transform("rename", Transforms.rename(Map("n_name" -> "name")))
+      .save("renamed", new MemorySink)
+      .transform("omit", Transforms.omit(Seq("n_regionkey")))
+      .save("omitted", new MemorySink)
+      .build()
+    val out = p.compile(spark)
+    val env = Seq("op", "ts", "ns")
+    assert(out("picked").columns.toSeq == env ++ Seq("n_nationkey", "n_name"))
+    assert(out("renamed").columns.toSeq ==
+      env ++ Seq("n_nationkey", "name", "n_regionkey"))
+    assert(out("omitted").columns.toSeq == env ++ Seq("n_nationkey", "n_name"))
+    assert(out("renamed").count() == 25)
+  }
+
+  test("run narrows each sink's columns when sibling sinks share the source") {
+    // two sinks = the source is persisted before the sinks compile; the
+    // narrowing must not depend on that
+    val picked = new MemorySink
+    val renamed = new MemorySink
+    Pipeline.builder("narrow-run")
+      .source("fixtures", MultiTableSource(sf, Seq("nation")))
+      .transform("pick", Transforms.pick(Seq("n_nationkey", "n_name")))
+      .save("picked", picked)
+      .transform("rename", Transforms.rename(Map("n_name" -> "name")))
+      .save("renamed", renamed)
+      .build()
+      .run(spark)
+    val env = Seq("op", "ts", "ns")
+    assert(picked.rows.size == 25 && renamed.rows.size == 25)
+    assert(picked.rows.head.schema.fieldNames.toSeq ==
+      env ++ Seq("n_nationkey", "n_name"))
+    assert(renamed.rows.head.schema.fieldNames.toSeq ==
+      env ++ Seq("n_nationkey", "name", "n_regionkey"))
+  }
+
   test("describe renders the node tree; build without sinks fails") {
     val d = Pipeline.builder("t")
       .source("s", MultiTableSource(sf, Seq("region")))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.functions.expressions.HashExpressions._
-import graft.operators.Similarity
+import graft.operators.{Memo, Similarity}
 
 class SimilaritySpec extends SparkSpec {
 
@@ -261,6 +261,31 @@ class SimilaritySpec extends SparkSpec {
     // is one projection over the corpus — no shuffle, no join
     val plan = assigned.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange") && !plan.contains("Join"), plan)
+  }
+
+  test("rolling corpus: invalidating a key retrains its centroids") {
+    // corpus B is corpus A with every vector negated: same ids,
+    // different geometry — A's centroids assign it wrongly
+    val key = s"rolling-corpus-${System.nanoTime}"
+    val a = emb.select(col("vec_id"), col("embedding"))
+    val b = emb.select(col("vec_id"),
+      transform(col("embedding"), x => -x).as("embedding"))
+    def assign(df: org.apache.spark.sql.DataFrame, k: String) =
+      Similarity.ivfAssign(df, "vec_id", "embedding", 64, nlist = 8,
+        cacheKey = Some(k)).orderBy("vec_id").collect().toSeq
+    try {
+      assign(a, key)
+      Memo.shared.invalidate(key)
+      val rolled = assign(b, key)
+      val fresh = assign(b, s"$key-fresh")
+      val differ = rolled.zip(fresh).count { case (x, y) => x != y }
+      assert(rolled.size == fresh.size && differ == 0,
+        s"B under a reused key: $differ of ${fresh.size} assignments " +
+          "differ from B under a fresh key")
+    } finally {
+      Memo.shared.invalidate(key)
+      Memo.shared.invalidate(s"$key-fresh")
+    }
   }
 
   test("clusterBalancedSample: per-cluster cap, deterministic, D4 shape") {
