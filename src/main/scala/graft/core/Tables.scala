@@ -1,15 +1,27 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
+  TimestampType}
 
 /** Catalog of the driver-provided parquet fixtures plus generic helpers for
   * reading "namespace" tables. A namespace (reference: `message/message.go:69-77`,
   * one string key per table/collection/queue) maps to one parquet table here.
   *
-  * Scale note: these readers are plain `spark.read.parquet` scans so Catalyst
-  * keeps partition pruning, predicate pushdown and column pruning. Nothing is
-  * cached or collected at read time; a 100 TB table is just more input splits.
+  * Scale note: these readers are plain parquet scans so Catalyst keeps
+  * partition pruning, predicate pushdown and column pruning. Nothing is
+  * collected at read time: what a read caches is METADATA — each path's
+  * inferred schema and file layout in one entry, revalidated on every
+  * read against a signature of the files (see [[entries]]). A 100 TB
+  * table is just more input splits.
   */
 object Tables {
 
@@ -18,7 +30,8 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Read one namespace table from a scale-factor dir.
+  /** Read one namespace table from a scale-factor dir through
+    * [[parquet]] (schema inferred once per file signature).
     *
     * Timestamp note: `events.ts` is nanosecond-precision parquet, which
     * Spark 4 only reads with `spark.sql.legacy.parquet.nanosAsLong=true`
@@ -27,21 +40,11 @@ object Tables {
     * TIMESTAMP column. All sessions in this repo set that conf.
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    table(spark, dir, name, checkFooter = true)
+    tableOf(spark, s"$dir/$name.parquet")._1
 
-  /** Convert any BIGINT column that parquet declared as TIMESTAMP(NANOS)
-    * into a µs-truncated TimestampType column (matches DuckDB's read).
-    *
-    * The Spark schema alone can't distinguish a nanos timestamp read under
-    * `nanosAsLong` from a genuine BIGINT column (no metadata is attached),
-    * so the parquet FOOTER's logical type is consulted — a real bigint
-    * `ts` column passes through untouched.
-    */
-  def table(spark: SparkSession, dir: String, name: String,
-            checkFooter: Boolean): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val df = spark.read.parquet(path)
-    if (checkFooter) normalizeNanos(spark, path, df) else df
+  private def tableOf(spark: SparkSession, path: String): (DataFrame, Entry) = {
+    val e = entryOf(spark, path)
+    (normalizeNanos(read(spark, path, e), e.nanos), e)
   }
 
   /** [[table]] + [[fanOutSmall]]: the read for a query whose per-row
@@ -54,25 +57,101 @@ object Tables {
     * fan-out) — while the single-pass parse family gains 2-4×. */
   def fannedTable(spark: SparkSession, dir: String,
                   name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    fanOutSmall(spark, path, table(spark, dir, name))
+    val (df, e) = tableOf(spark, s"$dir/$name.parquet")
+    fanOutSmall(spark, e, df)
   }
 
-  /** (path mtime, total bytes, file count) of a fixture path — `table`
-    * is called many times per bench round, so the listing is cached, but
-    * the entry is keyed to the path's MODIFICATION TIME: a rewritten or
-    * grown table re-lists instead of serving the first call's layout
-    * forever (judge r17: the immortal cache was a stale-gate footgun for
-    * any non-fixture use). One stat call per read amortizes the listing
-    * without trusting immutability. It assumes a FLAT table directory:
-    * a directory's mtime moves when a direct child is added, removed or
-    * renamed, not when a nested (`col=value/`) file changes or a file is
-    * rewritten in place. A stale entry only mis-gates the fan-out —
-    * speed, never results. Outside [[graft.operators.Memo]] because
-    * Memo keys name immutable snapshots, while these name mutable paths
-    * revalidated on every read. */
-  private val scanLayout =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Int)]()
+  /** A parquet file or directory read whose schema is inferred ONCE per
+    * file signature — from one footer on the driver, the file Spark's
+    * own inference picks (first data file by path), so building the
+    * DataFrame runs no Spark job; the read itself is
+    * `spark.read.schema(s).parquet(path)`, and partition columns are
+    * still discovered from the directory names. Same schema, same plan
+    * as `spark.read.parquet(path)`. A path with no data file (or a
+    * session with `mergeSchema` on) reads plainly, so Spark raises its
+    * own errors. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    read(spark, path, entryOf(spark, path))
+
+  private def read(spark: SparkSession, path: String, e: Entry): DataFrame =
+    e.schema match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** What a read learns about `path` once per signature: the inferred
+    * data schema, its TIMESTAMP(NANOS) field names, and the (bytes,
+    * files) layout [[fanOutSmall]] gates on. */
+  private final case class Entry(sig: Seq[Any], schema: Option[StructType],
+      nanos: Set[String], bytes: Long, files: Int)
+
+  /** Session confs that change what a footer infers to — part of every
+    * entry's signature, so a conf flip re-infers. */
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** One entry per path, revalidated on EVERY read against a signature
+    * of the files: the path's own status plus each direct child's
+    * (name, length, mtime), and the [[schemaConfs]]. Spark names every
+    * written file with its job's UUID, so a rewrite, a grown table or a
+    * new partition directory changes the signature and the entry is
+    * rebuilt — an entry is never served for files that changed at this
+    * level. A nested file rewritten IN PLACE under an unchanged child
+    * (same name, length and mtime) is not seen: the partitioned index
+    * trees read through here change by whole UUID-named files and
+    * partition directories under one fixed schema, and Spark lists the
+    * files afresh on every read, so such an entry can only mis-gate the
+    * fan-out — speed, never results. Outside [[graft.operators.Memo]]
+    * because Memo keys name immutable snapshots, while these name
+    * mutable paths. */
+  private val entries =
+    new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+
+  private def entryOf(spark: SparkSession, path: String): Entry = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(hconf)
+    val st = fs.getFileStatus(p)
+    val kids = if (st.isDirectory) fs.listStatus(p).toSeq else Nil
+    val sig = schemaConfs.map(spark.conf.getOption) ++
+      Seq(st.getLen, st.getModificationTime) ++
+      kids.map(k => (k.getPath.getName, k.getLen, k.getModificationTime))
+        .sortBy(_._1)
+    entries.compute(path, (_, old) =>
+      if (old != null && old.sig == sig) old
+      else {
+        var bytes = 0L
+        var files = 0
+        var first: FileStatus = null
+        val it = fs.listFiles(p, true)
+        while (it.hasNext) {
+          val f = it.next()
+          val name = f.getPath.getName
+          if (!name.startsWith("_") && !name.startsWith(".")) {
+            bytes += f.getLen; files += 1
+            if (first == null ||
+                f.getPath.toString < first.getPath.toString) first = f
+          }
+        }
+        val merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false")
+        if (first == null || merge.toBoolean)
+          Entry(sig, None, Set.empty, bytes, files)
+        else {
+          val r = ParquetFileReader.open(HadoopInputFile.fromStatus(first, hconf))
+          try {
+            val meta = r.getFooter
+            Entry(sig,
+              Some(Bridge.parquetSchema(spark, meta)),
+              nanosFields(meta), bytes, files)
+          } finally r.close()
+        }
+      })
+  }
 
   /** Fan a SMALL, UNSPLITTABLE scan out to the session's cores.
     *
@@ -98,7 +177,7 @@ object Tables {
     * follows `defaultParallelism`, so the driver's core-scaling bench
     * run keeps its contract. `SPARK_GRAFT_SCAN_FANOUT=0` disables (or
     * overrides the per-core byte budget). */
-  private def fanOutSmall(spark: SparkSession, path: String,
+  private def fanOutSmall(spark: SparkSession, e: Entry,
                           df: DataFrame): DataFrame = {
     // malformed values fail fast WITH the env var named — an unguarded
     // toLong threw a bare NumberFormatException from every call site
@@ -113,37 +192,19 @@ object Tables {
     }.getOrElse(4L * 1024 * 1024)
     if (perCore <= 0) return df
     val cores = spark.sparkContext.defaultParallelism
-    val (bytes, files) = scanLayoutOf(spark, path)
-    if (files < cores && bytes > 0 && bytes < cores.toLong * perCore)
+    if (e.files < cores && e.bytes > 0 && e.bytes < cores.toLong * perCore)
       df.repartition(cores)
     else df
   }
 
-  /** Mtime-validated (bytes, files) of `path` — see [[scanLayout]]. */
+  /** Signature-validated (bytes, files) of `path` — see [[entries]]. */
   private[graft] def scanLayoutOf(spark: SparkSession,
                                   path: String): (Long, Int) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mtime = fs.getFileStatus(p).getModificationTime
-    val e = scanLayout.compute(path, (_, old) =>
-      if (old != null && old._1 == mtime) old
-      else {
-        var b = 0L
-        var n = 0
-        val it = fs.listFiles(p, true)
-        while (it.hasNext) {
-          val st = it.next()
-          if (!st.getPath.getName.startsWith("_")) { b += st.getLen; n += 1 }
-        }
-        (mtime, b, n)
-      })
-    (e._2, e._3)
+    val e = entryOf(spark, path)
+    (e.bytes, e.files)
   }
 
-  def normalizeNanos(spark: SparkSession, path: String,
-                     df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    lazy val nanos = nanosTimestampFields(spark, path)
+  private def normalizeNanos(df: DataFrame, nanos: Set[String]): DataFrame = {
     val nanosFixed = df.schema.fields
       .filter(f => f.dataType == LongType && nanos.contains(f.name))
       .foldLeft(df) { (d, f) =>
@@ -164,36 +225,21 @@ object Tables {
       }
   }
 
-  /** Field names whose parquet logical type is TIMESTAMP(NANOS), read from
-    * the footer of the file (or the first parquet file of the directory). */
-  private def nanosTimestampFields(spark: SparkSession,
-                                   path: String): Set[String] = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import scala.jdk.CollectionConverters._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(hconf)
-    val fileOpt =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).map(_.getPath)
-          .find(q => q.getName.endsWith(".parquet") && !q.getName.startsWith("_"))
-      else Some(p)
-    fileOpt.map { file =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, hconf))
-      try {
-        reader.getFooter.getFileMetaData.getSchema.getFields.asScala
-          .filter { f =>
-            f.isPrimitive && (f.getLogicalTypeAnnotation match {
-              case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
-              case _ => false
-            })
-          }
-          .map(_.getName).toSet
-      } finally reader.close()
-    }.getOrElse(Set.empty)
-  }
+  /** Field names whose parquet logical type is TIMESTAMP(NANOS). The
+    * Spark schema alone can't tell a nanos timestamp read under
+    * `nanosAsLong` from a genuine BIGINT column (no metadata is
+    * attached), so the footer's logical type is consulted — a real
+    * bigint `ts` column passes through untouched. */
+  private def nanosFields(meta: ParquetMetadata): Set[String] =
+    meta.getFileMetaData.getSchema.getFields.asScala
+      .filter { f =>
+        f.isPrimitive && (f.getLogicalTypeAnnotation match {
+          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+            t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+          case _ => false
+        })
+      }
+      .map(_.getName).toSet
 
   /** Multi-table tagged union: each table becomes rows tagged with an `ns`
     * column, projected to a common (ns, key, name) shape. This mirrors the

@@ -188,7 +188,13 @@ object Multimodal {
         if (len < 0 || off.toLong + 12L + len > b.length) return null
         val t0 = b(off + 4); val t1 = b(off + 5)
         val t2 = b(off + 6); val t3 = b(off + 7)
-        if (t0 == 'I' && t1 == 'H' && t2 == 'D' && t3 == 'R') {
+        val isIhdr = t0 == 'I' && t1 == 'H' && t2 == 'D' && t3 == 'R'
+        // IHDR must be the FIRST chunk and appear once (so it precedes
+        // every IDAT): a moved or repeated header would otherwise set
+        // the dimensions the pixels are laid out by — wrong pixels
+        // instead of the javax fallback
+        if (isIhdr == seenIhdr) return null
+        if (isIhdr) {
           if (len < 13) return null
           w = be32(off + 8); h = be32(off + 12)
           val bitDepth = b(off + 16) & 0xFF
@@ -845,7 +851,9 @@ object Multimodal {
             }
             if (o >= b.length) return null
             off = o + 1
-            val decoded = lzwDecode(lzw.toByteArray, minCodeSize, w * h)
+            val (tOff, tEntries) = table
+            val decoded = lzwDecode(lzw.toByteArray, minCodeSize, w * h,
+              tEntries)
             if (decoded == null) return null
             // interlaced data carries rows in 4-pass order (8k, 8k+4,
             // 4k+2, 2k+1); map them back to sequential rows
@@ -861,7 +869,6 @@ object Multimodal {
               }
               seq
             }
-            val (tOff, tEntries) = table
             val r = new Array[Byte](tEntries)
             val g = new Array[Byte](tEntries)
             val bl = new Array[Byte](tEntries)
@@ -883,9 +890,11 @@ object Multimodal {
     }
 
     /** GIF LZW decompression to exactly `expected` palette indices;
-      * null on any stream irregularity (caller falls back to javax). */
+      * null on any stream irregularity, including an index ≥ the
+      * `paletteSize` entries of the frame's color table (caller falls
+      * back to javax — never an image whose getRGB throws later). */
     private def lzwDecode(data: Array[Byte], minCodeSize: Int,
-        expected: Int): Array[Byte] = {
+        expected: Int, paletteSize: Int): Array[Byte] = {
       val clear = 1 << minCodeSize
       val eoi = clear + 1
       val prefix = new Array[Int](4096)
@@ -926,6 +935,9 @@ object Multimodal {
             stack(sp) = suffix(cur); sp += 1
             cur = prefix(cur)
           }
+          // every emitted index is some code's ROOT (dictionary
+          // suffixes are earlier roots), so checking roots covers all
+          if (cur >= paletteSize) return null
           firstByte = cur.toByte
           stack(sp) = firstByte; sp += 1
           if (outPos + sp > expected) return null

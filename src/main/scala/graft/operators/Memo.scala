@@ -30,7 +30,8 @@ import org.apache.spark.storage.StorageLevel
   *     `apply` on one instance); concurrent first callers wait for it;
   *     a hit runs nothing; a failed `make` is not cached, and the next
   *     caller (a waiter included) runs its own `make`. A DataFrame
-  *     value is persisted by its `make`.
+  *     value is persisted by its `make`. [[peek]] reads a finished
+  *     entry without building it.
   */
 private[graft] final class Memo {
   // guarded entry = (input fingerprint, persisted artifact)
@@ -65,6 +66,11 @@ private[graft] final class Memo {
         v.asInstanceOf[T]
       case None => make
     }
+
+  /** The value of a FINISHED `once` entry, without building it — for a
+    * caller that reads every missing key's value in one batch. */
+  def peek(cacheKey: String, subKey: String): Option[Any] =
+    Option(built.get((cacheKey, subKey))).flatMap(_.peek)
 
   /** Drop every entry under `keyPrefix`, unpersisting DataFrame values —
     * matched on a key-SEGMENT boundary of `cacheKey/subKey` (`keyPrefix`

@@ -84,7 +84,7 @@ object Similarity {
                        k: Int, dim: Int, nlist: Int = 0, nprobe: Int = 4,
                        iters: Int = 3,
                        cacheKey: Option[String] = None): DataFrame = {
-    val nl = resolveNlist(corpus, idCol, nlist)
+    val nl = resolveNlist(corpus, idCol, nlist, cacheKey)
     val quant = trainCoarse(corpus, idCol, vecCol, dim, nl, iters, 0,
       cacheKey)
     val lists = Memo.shared(cacheKey,
@@ -369,7 +369,8 @@ object Similarity {
     * (`sampleMod = 0`); pass an explicit modulus to override.
     */
   /** Kinds of the IVF artifacts this object memoizes in [[Memo.shared]]:
-    * trained centroids and corpus list assignments. The (id, list,
+    * the auto-nlist corpus count, trained centroids and corpus list
+    * assignments. The (id, list,
     * vector, norm) table IS the IVF inverted index, built once at ingest
     * (the ProductQuantizer codes twin). Re-running `assignExpr`/
     * `probeExpr` over the whole corpus on every probe call costs
@@ -383,16 +384,25 @@ object Similarity {
     * or without the memo (persist changes nothing downstream; training
     * is deterministic), so every pinned oracle is unaffected. Key
     * contract and eviction: [[Memo]]. */
-  private[graft] val memoKinds = Set("ivf-centroids", "ivf-centroids-2l",
-    "listsLbl", "lists", "probedv", "assign")
+  private[graft] val memoKinds = Set("ivf-count", "ivf-centroids",
+    "ivf-centroids-2l", "listsLbl", "lists", "probedv", "assign")
 
   /** `nlist <= 0` → auto-size from a column-pruned corpus count (a
     * parquet-metadata read). At the test fixtures' scales (≤2000
     * vectors) auto resolves to the floor of 16, identical to the old
     * fixed default — the pinned oracles are unaffected. */
-  private def resolveNlist(corpus: DataFrame, idCol: String, nlist: Int): Int =
+  private def resolveNlist(corpus: DataFrame, idCol: String, nlist: Int,
+      cacheKey: Option[String]): Int =
     if (nlist > 0) nlist
-    else autoNlist(corpus.select(col(idCol)).count())
+    else autoNlist(corpusCount(corpus, idCol, cacheKey))
+
+  /** The corpus row count behind auto-nlist, a [[Memo.shared]] `once`
+    * entry under `cacheKey` — the snapshot contract the centroids
+    * trained at that nlist already rely on. */
+  private def corpusCount(corpus: DataFrame, idCol: String,
+      cacheKey: Option[String]): Long =
+    Memo.shared.once(cacheKey, s"ivf-count/$idCol")(
+      corpus.select(col(idCol)).count())
 
   /** List count above which the pair-generation paths switch from the
     * flat coarse quantizer to the two-level (IMI-style) one. The
@@ -542,16 +552,16 @@ object Similarity {
     * same number of probed second-choice lists (re-verified by the
     * recall specs and the semantic keep-set's exact-oracle gate row). */
   private def resolveNlistMulti(corpus: DataFrame, idCol: String,
-      nlist: Int, nprobe: Int): Int =
+      nlist: Int, nprobe: Int, cacheKey: Option[String]): Int =
     if (nlist > 0) nlist
     else autoNlist(
-      corpus.select(col(idCol)).count() * math.max(1, nprobe))
+      corpusCount(corpus, idCol, cacheKey) * math.max(1, nprobe))
 
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, dim: Int, nlist: Int = 0,
               nprobe: Int = 4, iters: Int = 3,
               sampleMod: Int = 0, cacheKey: Option[String] = None): DataFrame = {
-    val nl = resolveNlist(corpus, idCol, nlist)
+    val nl = resolveNlist(corpus, idCol, nlist, cacheKey)
     val quant = trainCoarse(corpus, idCol, vecCol, dim, nl, iters,
       sampleMod, cacheKey)
     val cBase = corpus.select(col(idCol).as("corpus_id"),
@@ -598,7 +608,7 @@ object Similarity {
                       nprobe: Int = 2, iters: Int = 3,
                       maxBucketSize: Int = 10000, sampleMod: Int = 0,
                       cacheKey: Option[String] = None): DataFrame = {
-    val nl = resolveNlistMulti(corpus, idCol, nlist, nprobe)
+    val nl = resolveNlistMulti(corpus, idCol, nlist, nprobe, cacheKey)
     val base = corpus.select(col(idCol).as("id"),
       col(vecCol).cast("array<float>").as("v"))
     // Flat quantizer at oracle/fixture scale; two-level past
@@ -683,7 +693,7 @@ object Similarity {
                 dim: Int, nlist: Int = 0, iters: Int = 3,
                 sampleMod: Int = 0,
                 cacheKey: Option[String] = None): DataFrame = {
-    val nl = resolveNlist(corpus, idCol, nlist)
+    val nl = resolveNlist(corpus, idCol, nlist, cacheKey)
     val quant = trainCoarse(corpus, idCol, vecCol, dim, nl, iters,
       sampleMod, cacheKey)
     Memo.shared(cacheKey, s"assign/$idCol/$vecCol/$dim/$nl/$iters/$sampleMod") {

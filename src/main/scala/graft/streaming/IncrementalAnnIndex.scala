@@ -181,8 +181,7 @@ object IncrementalAnnIndex {
       .select(col("vec_id").as("query_id"), col("band_idx"),
         col("band_bits"), col("bb_mod"))
       .localCheckpoint(eager = true) // drives the prune AND the join
-    val touched = qBuckets.select("bb_mod").distinct()
-      .collect().map(_.getLong(0)).toSeq
+    val touched = GenStore.pruneSet(qBuckets.select("bb_mod"))
     val idx = GenStore.sideRead(spark, v, "buckets",
         GenStore.sidePresence(spark, v, "buckets"),
         Seq("bb_mod", "vec_id", "band_idx", "band_bits")) match {
@@ -195,9 +194,8 @@ object IncrementalAnnIndex {
       .filter(col("query_id") =!= col("corpus_id"))
       .select("query_id", "corpus_id").distinct()
       .localCheckpoint(eager = true)
-    val candMods = candidates
-      .select(pmod(xxhash64(col("corpus_id")), lit(cfg.hashBuckets)).as("m"))
-      .distinct().collect().map(_.getLong(0)).toSeq
+    val candMods = GenStore.pruneSet(candidates
+      .select(pmod(xxhash64(col("corpus_id")), lit(cfg.hashBuckets))))
     val vecs = GenStore.sideRead(spark, v, "vecs",
         GenStore.sidePresence(spark, v, "vecs"),
         Seq("vm_mod", "vec_id", "vec")) match {

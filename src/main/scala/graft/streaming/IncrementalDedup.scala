@@ -131,9 +131,8 @@ object IncrementalDedup {
     // the whole index — same committed view as the bands read
     val crossHits = crossCand.map { c0 =>
       val c = c0.localCheckpoint(true) // drives the prune AND the join
-      val oldMods = c
-        .select(pmod(xxhash64(col("id_old")), lit(cfg.hashBuckets)).as("m"))
-        .distinct().collect().map(_.getLong(0)).toSeq
+      val oldMods = GenStore.pruneSet(c
+        .select(pmod(xxhash64(col("id_old")), lit(cfg.hashBuckets))))
       val oldSigs = GenStore.sideRead(spark, v, "sigs",
           GenStore.sidePresence(spark, v, "sigs"),
           Seq("did_mod", "doc_id", "sig"))

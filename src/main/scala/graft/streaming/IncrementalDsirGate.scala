@@ -157,7 +157,7 @@ object IncrementalDsirGate {
     val v = GenStore.view(spark, cfg.dir, eps)
     val pres = GenStore.sidePresence(spark, v, "counts")
     val gens = v.liveGens.flatMap(m => pres.genDirs.get(m.gen))
-      .map(p => spark.read.parquet(p).select("bucket", "cnt"))
+      .map(p => graft.core.Tables.parquet(spark, p).select("bucket", "cnt"))
     val remDirs = v.remainder.map(ep => s"${cfg.dir}/counts/epoch=$ep")
       .filter(p => GenStore.dirHasDataFiles(spark, p))
     val rem =

@@ -25,8 +25,9 @@ import graft.streaming.GenStore.Side
   *     query terms' `t_mod` partitions and the document frequency
   *     computed from what it reads is complete.
   *   - `stats/epoch=N/` — one row (n_docs, sum_dl) per epoch; probes sum
-  *     them for the global N and avgdl. Written LAST: it is the epoch's
-  *     replay marker, `_SUCCESS`-fenced on both sides.
+  *     them for the global N and avgdl, reading each committed row once
+  *     per session ([[GenStore.markerRows]]). Written LAST: it is the
+  *     epoch's replay marker, `_SUCCESS`-fenced on both sides.
   *   - `postings-compact/gen=G/` + `stats-compact/gen=G/` — compaction
   *     generations ([[GenStore]]: size-tiered folds, marker-written-last
   *     adoption, grace-windowed [[gc]]). Folding collapses epochs ×
@@ -123,20 +124,17 @@ object IncrementalSearchIndex {
 
     val qTerms = TextSearch.queryTerms(queries, queryIdCol, queryTextCol)
       .localCheckpoint(eager = true) // drives the prune AND the join
-    val touched = qTerms
-      .select(pmod(hash(col("term")), lit(cfg.hashBuckets)).cast("long")
-        .as("m"))
-      .distinct().collect().map(_.getLong(0)).toSeq
+    val touched = GenStore.pruneSet(qTerms
+      .select(pmod(hash(col("term")), lit(cfg.hashBuckets)).cast("long")))
     if (touched.isEmpty) return empty
 
-    val stats = spark.read
-      .option("basePath", s"${cfg.dir}/stats")
-      .parquet(s"${cfg.dir}/stats")
-      .filter(col("epoch").isin(committed: _*))
-      .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("sumdl"))
-      .collect()(0)
-    val n = stats.getLong(0)
-    val avgdl = stats.getLong(1).toDouble / n.toDouble
+    // N and avgdl from the committed epochs' stats rows, each read once
+    // per session (GenStore's read-once metadata contract)
+    val stats = GenStore.markerRows(spark, cfg.dir, "index-stats",
+      committed.map(e => s"${cfg.dir}/stats/epoch=$e"),
+      Seq("n_docs", "sum_dl")).flatten
+    val n = stats.map(_.getLong(0)).sum
+    val avgdl = stats.map(_.getLong(1)).sum.toDouble / n.toDouble
 
     val v = GenStore.view(spark, cfg.dir, committed)
     val pres = GenStore.sidePresence(spark, v, "postings")

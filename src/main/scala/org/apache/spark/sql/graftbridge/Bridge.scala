@@ -42,6 +42,25 @@ object Bridge {
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
 
+  /** A parquet footer's data schema as Spark's schema inference reads
+    * it (its footer reader is private to the parquet package): the
+    * schema a Spark writer stored in the footer, else the parquet schema
+    * converted under the session's parquet confs. */
+  def parquetSchema(spark: SparkSession,
+      meta: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetReadSupport, ParquetToSparkSchemaConverter}
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val fm = meta.getFileMetaData
+    Option(fm.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+      .collect { case s: StructType => s }
+      .getOrElse(new ParquetToSparkSchemaConverter(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+          .sessionState.conf).convert(fm.getSchema))
+  }
+
   /** The physical InternalRow RDD of a DataFrame (lazy — no job). */
   def internalRdd(df: DataFrame): org.apache.spark.rdd.RDD[
       org.apache.spark.sql.catalyst.InternalRow] =

@@ -91,6 +91,61 @@ class PngGifCodecSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Png.decode("junk".getBytes))
   }
 
+  /** A PNG's chunks (length + type + data + CRC each) and back. */
+  private def pngChunks(png: Array[Byte]): Seq[Array[Byte]] = {
+    val out = Seq.newBuilder[Array[Byte]]
+    var off = 8
+    while (off < png.length) {
+      val len = java.nio.ByteBuffer.wrap(png, off, 4).getInt
+      out += png.slice(off, off + 12 + len)
+      off += 12 + len
+    }
+    out.result()
+  }
+  private def chunkType(c: Array[Byte]) = new String(c, 4, 4, "US-ASCII")
+  private def pngOf(sig: Array[Byte], cs: Seq[Array[Byte]]) =
+    sig.take(8) ++ cs.flatten
+
+  test("PNG fast path requires IHDR first, once, before any IDAT") {
+    val good = Png.encode(Png.pattern(5L, 12, 9))
+    val cs = pngChunks(good)
+    assert(chunkType(cs.head) == "IHDR" && Png.decodeRgb8(good) != null)
+    val ihdr = cs.head
+    val idatAt = cs.indexWhere(c => chunkType(c) == "IDAT")
+    // IHDR moved after the first IDAT
+    val moved = cs.tail.patch(idatAt, Seq(ihdr), 0)
+    assert(Png.decodeRgb8(pngOf(good, moved)) == null, "IDAT before IHDR")
+    // a second IHDR declaring other dimensions (9 x 12)
+    val swapped = ihdr.clone()
+    System.arraycopy(ihdr, 12, swapped, 8, 4)
+    System.arraycopy(ihdr, 8, swapped, 12, 4)
+    assert(Png.decodeRgb8(pngOf(good, ihdr +: swapped +: cs.tail)) == null,
+      "duplicate IHDR")
+    // even a verbatim repeat is rejected
+    assert(Png.decodeRgb8(pngOf(good, ihdr +: cs)) == null)
+    // an ancillary chunk ahead of IHDR
+    val text = Array[Byte](0, 0, 0, 1) ++ "tEXt".getBytes("US-ASCII") ++
+      Array[Byte](0x41, 0, 0, 0, 0)
+    assert(Png.decodeRgb8(pngOf(good, text +: cs)) == null, "IHDR not first")
+  }
+
+  test("GIF fast path rejects a palette index beyond the color table") {
+    // 1 x 1 GIF89a, 2-entry global table; LZW (min code size 2) codes
+    // clear(4) then `index`, packed LSB-first at 3 bits
+    def gif(index: Int): Array[Byte] = {
+      val bits = 4 | (index << 3) | (5 << 6)
+      (Seq(0x47, 0x49, 0x46, 0x38, 0x39, 0x61, 1, 0, 1, 0, 0x80, 0, 0,
+        0, 0, 0, 0xFF, 0xFF, 0xFF,
+        0x2C, 0, 0, 0, 0, 1, 0, 1, 0, 0,
+        2, 2, bits & 0xFF, bits >> 8, 0, 0x3B)).map(_.toByte).toArray
+    }
+    val ok = Gif.decodeFramesFast(gif(1))
+    assert(ok != null && ok.size == 1 && ok.head.getRGB(0, 0) == 0xFFFFFFFF)
+    // index 3 ≥ 2 entries: fall back to javax, not an image whose
+    // getRGB throws downstream
+    assert(Gif.decodeFramesFast(gif(3)) == null)
+  }
+
   test("GIF fast path decodes ImageIO-encoded frames bit-identically") {
     for ((id, w, h, n) <- Seq((2L, 32, 24, 4), (9L, 8, 8, 12),
         (4L, 16, 9, 1))) {
