@@ -473,18 +473,19 @@ object Registry {
     // ---- incremental-index sinks (beyond the reference: the ingest-time
     // index family as declarable pipeline sinks — a config row turns any
     // source into a continuously-indexed corpus; probes are library
-    // calls). Epoch-keyed idempotent (EpochSink): streaming epochs
-    // replay safely, a batch run ingests as epoch 0.
+    // calls). Each is its member's one `IndexSink` (streaming.EpochIndex):
+    // epoch-keyed idempotent, so streaming epochs replay safely and a
+    // batch run ingests as epoch 0; the maintain_* params self-maintain.
     "search-index" -> (p =>
-      graft.streaming.IncrementalSearchIndex.SearchIndexSink(
+      new graft.streaming.IncrementalSearchIndex.IndexSink(
         graft.streaming.IncrementalSearchIndex.Config(str(p, "dir"),
           hashBuckets = intOr(p, "hash_buckets", 64),
           k1 = dblOr(p, "k1", 1.2), b = dblOr(p, "b", 0.75)),
-        p.getOrElse("id_col", "doc_id").toString,
-        p.getOrElse("text_col", "text").toString,
+        Seq(p.getOrElse("id_col", "doc_id").toString,
+          p.getOrElse("text_col", "text").toString),
         maintain = maintainPolicy(p))),
     "dedup-index" -> (p =>
-      graft.streaming.IncrementalDedup.DedupIndexSink(
+      new graft.streaming.IncrementalDedup.IndexSink(
         graft.streaming.IncrementalDedup.Config(str(p, "dir"),
           shingleK = intOr(p, "shingle_k", 3),
           numHashes = intOr(p, "num_hashes", 128),
@@ -492,19 +493,19 @@ object Registry {
           estThreshold = dblOr(p, "est_threshold", 0.8),
           hashBuckets = intOr(p, "hash_buckets", 64),
           maxBucketSize = intOr(p, "max_bucket_size", 1000)),
-        p.getOrElse("id_col", "doc_id").toString,
-        p.getOrElse("text_col", "text").toString,
+        Seq(p.getOrElse("id_col", "doc_id").toString,
+          p.getOrElse("text_col", "text").toString),
         maintain = maintainPolicy(p))),
     "link-index" -> (p =>
-      graft.streaming.IncrementalLinkIndex.LinkIndexSink(
+      new graft.streaming.IncrementalLinkIndex.IndexSink(
         graft.streaming.IncrementalLinkIndex.Config(str(p, "dir"),
           hashBuckets = intOr(p, "hash_buckets", 64)),
-        p.getOrElse("id_col", "doc_id").toString,
-        p.getOrElse("url_col", "url").toString,
-        p.getOrElse("html_col", "html").toString,
+        Seq(p.getOrElse("id_col", "doc_id").toString,
+          p.getOrElse("url_col", "url").toString,
+          p.getOrElse("html_col", "html").toString),
         maintain = maintainPolicy(p))),
     "ann-index" -> (p =>
-      graft.streaming.IncrementalAnnIndex.AnnIndexSink(
+      new graft.streaming.IncrementalAnnIndex.IndexSink(
         graft.streaming.IncrementalAnnIndex.Config(str(p, "dir"),
           dim = intOr(p, "dim",
             throw new IllegalArgumentException(
@@ -512,8 +513,8 @@ object Registry {
           bitsPerBand = intOr(p, "bits_per_band", 4),
           numBands = intOr(p, "num_bands", 6),
           hashBuckets = intOr(p, "hash_buckets", 64)),
-        p.getOrElse("id_col", "vec_id").toString,
-        p.getOrElse("vec_col", "vec").toString,
+        Seq(p.getOrElse("id_col", "vec_id").toString,
+          p.getOrElse("vec_col", "vec").toString),
         maintain = maintainPolicy(p))),
     "sketch-rollup" -> (p =>
       graft.streaming.SketchRollup.RollupSink(
@@ -526,12 +527,12 @@ object Registry {
         k = intOr(p, "k", 200), lgK = intOr(p, "lg_k", 18),
         numBuckets = intOr(p, "buckets", 8))),
     "dsir-gate" -> (p =>
-      graft.streaming.IncrementalDsirGate.DsirGateSink(
+      new graft.streaming.IncrementalDsirGate.IndexSink(
         graft.streaming.IncrementalDsirGate.Config(str(p, "dir"),
           dim = intOr(p, "dim", 256),
           alpha = dblOr(p, "alpha", 1.0)),
-        p.getOrElse("id_col", "doc_id").toString,
-        p.getOrElse("text_col", "text").toString,
+        Seq(p.getOrElse("id_col", "doc_id").toString,
+          p.getOrElse("text_col", "text").toString),
         maintain = maintainPolicy(p)))
   )
 

@@ -37,46 +37,21 @@ import graft.streaming.GenStore.Side
   * but against a continuously growing stored index, read through one
   * consistent committed view (generations ∪ remainder epochs).
   */
-object IncrementalAnnIndex {
+object IncrementalAnnIndex extends EpochIndex {
 
   final case class Config(dir: String, dim: Int, bitsPerBand: Int = 4,
       numBands: Int = 6, hashBuckets: Int = 64)
+  type Cfg = Config
 
-  private def sides(cfg: Config) = Seq(
-    Side("buckets", "bb_mod", cfg.hashBuckets,
-      Seq("vec_id", "band_idx", "band_bits")),
-    Side("vecs", "vm_mod", cfg.hashBuckets, Seq("vec_id", "vec")))
+  /** An index from before the `stats` tree (object doc) fails loudly in
+    * [[committed]]; [[backfillLegacyMarkers]] upgrades it in place. */
+  def layout(cfg: Config): GenStore.Layout = GenStore.Layout(cfg.dir, Seq(
+      Side("buckets", "bb_mod", cfg.hashBuckets,
+        Seq("vec_id", "band_idx", "band_bits")),
+      Side("vecs", "vm_mod", cfg.hashBuckets, Seq("vec_id", "vec"))),
+    legacySide = Some("vecs"))
 
   private def bits(cfg: Config) = cfg.bitsPerBand * cfg.numBands
-
-  /** Committed epochs: stats marker job-committed. Fails loudly on the
-    * pre-r15 LEGACY layout (committed vecs epochs but no `stats/` tree
-    * at all — the marker used to live on the vecs dir itself): treating
-    * it as "no committed epochs" would silently return zero neighbors
-    * from a populated index AND re-land every epoch on replay (r15
-    * ADVICE). A PRESENT stats tree with a missing epoch is not legacy —
-    * it is the ordinary crashed-before-marker state the replay retry
-    * repairs. [[backfillLegacyMarkers]] upgrades a legacy index in
-    * place. */
-  private def committed(spark: SparkSession, cfg: Config): Seq[Long] = {
-    val eps = GenStore.markedEpochs(spark, s"${cfg.dir}/stats")
-    if (eps.isEmpty &&
-        !GenStore.fs(spark, cfg.dir)
-          .exists(new org.apache.hadoop.fs.Path(s"${cfg.dir}/stats"))) {
-      val legacy = GenStore.markedEpochs(spark, s"${cfg.dir}/vecs")
-      if (legacy.nonEmpty)
-        throw new IllegalStateException(
-          s"ann index at ${cfg.dir} uses the pre-stats legacy layout " +
-            s"(job-committed vecs epochs ${legacy.mkString(",")} but no " +
-            "stats marker tree) — run backfillLegacyMarkers to upgrade. " +
-            "An ingest of the index's FIRST-ever epoch that crashed " +
-            "between the vecs write and the stats marker is on-disk " +
-            "indistinguishable from this state; retrying that epoch's " +
-            "ingest (the ordinary replay) repairs it too. Refusing to " +
-            "serve an empty result from a populated index either way")
-    }
-    eps
-  }
 
   /** Upgrade a pre-r15 legacy index in place: write the missing
     * `stats/epoch=N` replay/commit marker for every job-committed vecs
@@ -103,57 +78,23 @@ object IncrementalAnnIndex {
         pmod(hash(col("band_idx"), col("band_bits")), lit(cfg.hashBuckets))
           .cast("long"))
 
-  /** Index one epoch of (idCol, vecCol) rows. Idempotent per epochId:
-    * a job-committed `stats/epoch=N` means the epoch fully landed. */
+  /** Index one epoch of (idCol, vecCol) rows. Idempotent per epochId
+    * ([[GenStore.ingestEpoch]]). */
   def ingestBatch(cfg: Config, batch: DataFrame, idCol: String,
-      vecCol: String, epochId: Long): Unit = {
-    val spark = batch.sparkSession
-    val marker = s"${cfg.dir}/stats/epoch=$epochId"
-    if (GenStore.hasSuccess(spark, marker)) return
-    val vecs = batch
-      .select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
-      .localCheckpoint(eager = true)
-    bucketRows(cfg, vecs)
-      .repartition(cfg.hashBuckets, col("bb_mod"))
-      .write.mode("overwrite").partitionBy("bb_mod")
-      .parquet(s"${cfg.dir}/buckets/epoch=$epochId")
-    vecs.withColumn("vm_mod",
-        pmod(xxhash64(col("vec_id")), lit(cfg.hashBuckets)))
-      .repartition(cfg.hashBuckets, col("vm_mod"))
-      .write.mode("overwrite").partitionBy("vm_mod")
-      .parquet(s"${cfg.dir}/vecs/epoch=$epochId")
-    // marker LAST: a crash between the data writes and here leaves the
-    // epoch uncommitted; the replay's overwrites replace it whole
-    vecs.agg(count(lit(1)).as("n_vecs"))
-      .coalesce(1).write.mode("overwrite").parquet(marker)
-  }
-
-  /** foreachBatch hook for a vector stream. */
-  def sink(cfg: Config, idCol: String, vecCol: String)
-      : (DataFrame, Long) => Unit =
-    (batch, epochId) => ingestBatch(cfg, batch, idCol, vecCol, epochId)
-
-  /** Registry sink (`ann-index`): config-driven ingest-time vector
-    * indexing (banded-LSH buckets + vectors, epoch-idempotent). */
-  final case class AnnIndexSink(cfg: Config, idCol: String,
-      vecCol: String,
-      maintain: Option[Maintenance.Policy] = None)
-      extends graft.sources.Connectors.EpochSink {
-    def writeEpoch(df: DataFrame, epochId: Long): Unit = {
-      ingestBatch(cfg, df, idCol, vecCol, epochId)
-      maintain.foreach(p => maintainIfDue(df.sparkSession, cfg, p))
+      vecCol: String, epochId: Long): Unit =
+    GenStore.ingestEpoch(batch.sparkSession, layout(cfg), epochId) {
+      val vecs = batch
+        .select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
+        .localCheckpoint(eager = true)
+      (Seq("buckets" -> bucketRows(cfg, vecs),
+          "vecs" -> vecs.withColumn("vm_mod",
+            pmod(xxhash64(col("vec_id")), lit(cfg.hashBuckets)))),
+        vecs.agg(count(lit(1)).as("n_vecs")).coalesce(1))
     }
-  }
 
-  /** Policy-gated maintenance pass (tiered compact + gc) — skip loudly
-    * on a held claim ([[Maintenance.maybeRun]]). */
-  def maintainIfDue(spark: SparkSession, cfg: Config,
-      pol: Maintenance.Policy): Boolean =
-    Maintenance.maybeRun(spark, cfg.dir, Seq("buckets", "vecs"),
-        committed(spark, cfg), pol) {
-      compact(spark, cfg, pol.sizeRatio)
-      gc(spark, cfg, pol.graceMs)
-    }
+  protected def ingest(cfg: Config, batch: DataFrame, cols: Seq[String],
+      epochId: Long): Unit =
+    ingestBatch(cfg, batch, cols(0), cols(1), epochId)
 
   /** Approximate top-k neighbors of each query row against everything
     * ingested so far: probe → pruned bucket read → pruned vector read →
@@ -214,19 +155,4 @@ object IncrementalAnnIndex {
       .select(col("query_id"), col("t.corpus_id").as("corpus_id"),
         col("t.sim").as("sim"))
   }
-
-  /** Fold committed epochs' buckets+vecs (and size-ratio-admissible
-    * generations) into a new generation — [[GenStore.compact]]; the
-    * stats markers (replay fence) are never folded. */
-  def compact(spark: SparkSession, cfg: Config,
-      sizeRatio: Double = Double.PositiveInfinity)
-      : Option[GenStore.CompactStats] =
-    GenStore.compact(spark, cfg.dir, sides(cfg),
-      committed(spark, cfg), sizeRatio)
-
-  /** Reclaim superseded buckets/vecs files, grace-windowed
-    * ([[GenStore.gc]]); epoch dirs and stats markers remain. */
-  def gc(spark: SparkSession, cfg: Config,
-      graceMs: Long = 3600000L): Unit =
-    GenStore.gc(spark, cfg.dir, Seq("buckets", "vecs"), graceMs)
 }

@@ -50,179 +50,129 @@ import graft.streaming.GenStore.Side
   * enter the index, so duplicate chains collapse onto their surviving
   * representative exactly like `minhashKept`.
   */
-object IncrementalDedup {
+object IncrementalDedup extends EpochIndex {
 
   final case class Config(dir: String, shingleK: Int = 3,
       numHashes: Int = 128, bands: Int = 32, estThreshold: Double = 0.8,
       hashBuckets: Int = 64, maxBucketSize: Int = 1000)
+  type Cfg = Config
 
-  private def sides(cfg: Config) = Seq(
-    Side("bands", "bh_mod", cfg.hashBuckets,
-      Seq("doc_id", "band_idx", "band_hash")),
-    Side("sigs", "did_mod", cfg.hashBuckets, Seq("doc_id", "sig")))
-
-  /** Committed epochs: decisions marker job-committed. */
-  private def committed(spark: SparkSession, cfg: Config): Seq[Long] =
-    GenStore.markedEpochs(spark, s"${cfg.dir}/decisions")
+  /** The decisions tree is the epoch marker (object doc). */
+  def layout(cfg: Config): GenStore.Layout = GenStore.Layout(cfg.dir, Seq(
+      Side("bands", "bh_mod", cfg.hashBuckets,
+        Seq("doc_id", "band_idx", "band_hash")),
+      Side("sigs", "did_mod", cfg.hashBuckets, Seq("doc_id", "sig"))),
+    marker = "decisions")
 
   /** Process one epoch: decide kept/dropped for every batch doc, append
-    * kept docs to the index, write decisions. Idempotent per epochId. */
+    * kept docs to the index, write decisions. Idempotent per epochId
+    * ([[GenStore.ingestEpoch]]). */
   def ingestBatch(cfg: Config, batch: DataFrame, idCol: String,
-      textCol: String, epochId: Long): Unit = {
-    val spark = batch.sparkSession
-    val decDir = s"${cfg.dir}/decisions/epoch=$epochId"
-    if (GenStore.hasSuccess(spark, decDir)) return // replay: done
+      textCol: String, epochId: Long): Unit =
+    GenStore.ingestEpoch(batch.sparkSession, layout(cfg), epochId) {
+      val spark = batch.sparkSession
+      val sigs = Dedup.signatures(batch, idCol, textCol, cfg.shingleK,
+        cfg.numHashes)
+        .select(col(idCol).as("doc_id"), col("sig"))
+        .localCheckpoint(eager = true) // one signature pass per epoch
+      val bands = Dedup.bandRows(sigs, "doc_id", cfg.numHashes, cfg.bands)
+        .withColumn("bh_mod", pmod(col("band_hash"), lit(cfg.hashBuckets)))
 
-    val sigs = Dedup.signatures(batch, idCol, textCol, cfg.shingleK,
-      cfg.numHashes)
-      .select(col(idCol).as("doc_id"), col("sig"))
-      .localCheckpoint(eager = true) // one signature pass per epoch
-    val bands = Dedup.bandRows(sigs, "doc_id", cfg.numHashes, cfg.bands)
-      .withColumn("bh_mod", pmod(col("band_hash"), lit(cfg.hashBuckets)))
+      // prune the index read to the batch's touched hash buckets (bounded:
+      // ≤ hashBuckets ints on the driver)
+      val touched = GenStore.pruneSet(bands.select("bh_mod"))
+      // ONE consistent committed view for both index reads — this is also
+      // the crash-replay fence (object doc): this epoch is not committed,
+      // so its own half-landed index writes are invisible here
+      val v = GenStore.view(spark, cfg.dir, committed(spark, cfg))
+      val oldBands = GenStore.sideRead(spark, v, "bands",
+          GenStore.sidePresence(spark, v, "bands"),
+          Seq("bh_mod", "doc_id", "band_idx", "band_hash"))
+        .map(_.filter(col("bh_mod").isin(touched: _*)))
 
-    // prune the index read to the batch's touched hash buckets (bounded:
-    // ≤ hashBuckets ints on the driver)
-    val touched = bands.select("bh_mod").distinct()
-      .collect().map(_.getLong(0)).toSet
-    // ONE consistent committed view for both index reads — this is also
-    // the crash-replay fence (object doc): this epoch is not committed,
-    // so its own half-landed index writes are invisible here
-    val v = GenStore.view(spark, cfg.dir, committed(spark, cfg))
-    val oldBands = GenStore.sideRead(spark, v, "bands",
-        GenStore.sidePresence(spark, v, "bands"),
-        Seq("bh_mod", "doc_id", "band_idx", "band_hash"))
-      .map(_.filter(col("bh_mod").isin(touched.toSeq: _*)))
+      // candidates: batch × index plus batch × batch (smaller id first)
+      val newB = bands.select(col("band_idx"), col("band_hash"),
+        col("doc_id").as("id_new"))
+      val crossCand = oldBands.map { ob =>
+        newB.join(ob.select(col("band_idx"), col("band_hash"),
+            col("doc_id").as("id_old")),
+          Seq("band_idx", "band_hash"))
+          .filter(col("id_new") =!= col("id_old")) // belt-and-braces vs self
+          .select("id_new", "id_old").distinct()
+      }
+      // intra-batch candidates run through the SAME capped bucket pass as
+      // the batch operator — a flooded band bucket inside one epoch is
+      // dropped (auditable), never quadratic
+      val selfCand = Dedup.bucketPairs(bands, Seq("band_idx", "band_hash"),
+          "doc_id", cfg.maxBucketSize)
+        .select(col("id_a").as("id_keep"), col("id_b").as("id_drop"))
 
-    // candidates: batch × index plus batch × batch (smaller id first)
-    val newB = bands.select(col("band_idx"), col("band_hash"),
-      col("doc_id").as("id_new"))
-    val crossCand = oldBands.map { ob =>
-      newB.join(ob.select(col("band_idx"), col("band_hash"),
-          col("doc_id").as("id_old")),
-        Seq("band_idx", "band_hash"))
-        .filter(col("id_new") =!= col("id_old")) // belt-and-braces vs self
-        .select("id_new", "id_old").distinct()
-    }
-    // intra-batch candidates run through the SAME capped bucket pass as
-    // the batch operator — a flooded band bucket inside one epoch is
-    // dropped (auditable), never quadratic
-    val selfCand = Dedup.bucketPairs(bands, Seq("band_idx", "band_hash"),
-        "doc_id", cfg.maxBucketSize)
-      .select(col("id_a").as("id_keep"), col("id_b").as("id_drop"))
+      // estimated Jaccard = fraction of equal signature slots
+      def estimate(cand: DataFrame, aCol: String, bCol: String,
+          aSigs: DataFrame, bSigs: DataFrame): DataFrame =
+        cand
+          .join(aSigs.select(col("doc_id").as(aCol), col("sig").as("sig_a")),
+            Seq(aCol))
+          .join(bSigs.select(col("doc_id").as(bCol), col("sig").as("sig_b")),
+            Seq(bCol))
+          .withColumn("est_jaccard",
+            aggregate(zip_with(col("sig_a"), col("sig_b"),
+                (x, y) => when(x === y, 1).otherwise(0)),
+              lit(0), (acc, v) => acc + v).cast("double") /
+              lit(cfg.numHashes.toDouble))
+          .filter(col("est_jaccard") >= cfg.estThreshold)
 
-    // estimated Jaccard = fraction of equal signature slots
-    def estimate(cand: DataFrame, aCol: String, bCol: String,
-        aSigs: DataFrame, bSigs: DataFrame): DataFrame =
-      cand
-        .join(aSigs.select(col("doc_id").as(aCol), col("sig").as("sig_a")),
-          Seq(aCol))
-        .join(bSigs.select(col("doc_id").as(bCol), col("sig").as("sig_b")),
-          Seq(bCol))
-        .withColumn("est_jaccard",
-          aggregate(zip_with(col("sig_a"), col("sig_b"),
-              (x, y) => when(x === y, 1).otherwise(0)),
-            lit(0), (acc, v) => acc + v).cast("double") /
-            lit(cfg.numHashes.toDouble))
-        .filter(col("est_jaccard") >= cfg.estThreshold)
-
-    // the sigs side is partitioned by pmod(xxhash64(doc_id), N):
-    // verification reads only the partitions holding this epoch's
-    // matched ids (bounded collect of ≤ hashBuckets mod values), never
-    // the whole index — same committed view as the bands read
-    val crossHits = crossCand.map { c0 =>
-      val c = c0.localCheckpoint(true) // drives the prune AND the join
-      val oldMods = GenStore.pruneSet(c
-        .select(pmod(xxhash64(col("id_old")), lit(cfg.hashBuckets))))
-      val oldSigs = GenStore.sideRead(spark, v, "sigs",
-          GenStore.sidePresence(spark, v, "sigs"),
-          Seq("did_mod", "doc_id", "sig"))
-        .map(_.filter(col("did_mod").isin(oldMods: _*))
-          .select("doc_id", "sig"))
-        .getOrElse(sigs.limit(0))
-      estimate(c, "id_new", "id_old", sigs, oldSigs)
-        .select(col("id_new").as("doc_id"), col("id_old").as("dup_of"),
+      // the sigs side is partitioned by pmod(xxhash64(doc_id), N):
+      // verification reads only the partitions holding this epoch's
+      // matched ids (bounded collect of ≤ hashBuckets mod values), never
+      // the whole index — same committed view as the bands read
+      val crossHits = crossCand.map { c0 =>
+        val c = c0.localCheckpoint(true) // drives the prune AND the join
+        val oldMods = GenStore.pruneSet(c
+          .select(pmod(xxhash64(col("id_old")), lit(cfg.hashBuckets))))
+        val oldSigs = GenStore.sideRead(spark, v, "sigs",
+            GenStore.sidePresence(spark, v, "sigs"),
+            Seq("did_mod", "doc_id", "sig"))
+          .map(_.filter(col("did_mod").isin(oldMods: _*))
+            .select("doc_id", "sig"))
+          .getOrElse(sigs.limit(0))
+        estimate(c, "id_new", "id_old", sigs, oldSigs)
+          .select(col("id_new").as("doc_id"), col("id_old").as("dup_of"),
+            col("est_jaccard"))
+      }
+      val selfHits = estimate(selfCand, "id_keep", "id_drop", sigs, sigs)
+        .select(col("id_drop").as("doc_id"), col("id_keep").as("dup_of"),
           col("est_jaccard"))
+
+      val hits = crossHits.map(_.union(selfHits)).getOrElse(selfHits)
+        .groupBy("doc_id")
+        .agg(min(col("dup_of")).as("dup_of"),
+          max(col("est_jaccard")).as("est_jaccard"))
+        .localCheckpoint(eager = true) // decisions drive two writes below
+
+      val decisions = sigs.select(col("doc_id"))
+        .join(hits, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("dup_of").isNull.as("kept"),
+          col("dup_of"), col("est_jaccard"))
+
+      // only kept docs enter the index (object doc); sigs land before
+      // bands, and the decisions — this epoch's marker — last
+      val kept = sigs.join(
+        decisions.filter(col("kept")).select("doc_id"), Seq("doc_id"))
+      (Seq("sigs" -> kept.withColumn("did_mod",
+            pmod(xxhash64(col("doc_id")), lit(cfg.hashBuckets))),
+          "bands" -> Dedup.bandRows(kept, "doc_id", cfg.numHashes, cfg.bands)
+            .withColumn("bh_mod",
+              pmod(col("band_hash"), lit(cfg.hashBuckets)))),
+        decisions)
     }
-    val selfHits = estimate(selfCand, "id_keep", "id_drop", sigs, sigs)
-      .select(col("id_drop").as("doc_id"), col("id_keep").as("dup_of"),
-        col("est_jaccard"))
 
-    val hits = crossHits.map(_.union(selfHits)).getOrElse(selfHits)
-      .groupBy("doc_id")
-      .agg(min(col("dup_of")).as("dup_of"),
-        max(col("est_jaccard")).as("est_jaccard"))
-      .localCheckpoint(eager = true) // decisions drive two writes below
-
-    val decisions = sigs.select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_of").isNull.as("kept"),
-        col("dup_of"), col("est_jaccard"))
-
-    // write order matters: the index appends go FIRST and the decisions
-    // dir (the replay marker this function checks on entry) goes LAST,
-    // all in overwrite mode — a crash anywhere re-runs the whole epoch
-    // and overwrites any half-written dirs, so replay is idempotent.
-    // repartition-before-partitionBy: one file per touched bucket
-    val kept = sigs.join(
-      decisions.filter(col("kept")).select("doc_id"), Seq("doc_id"))
-    kept.withColumn("did_mod",
-        pmod(xxhash64(col("doc_id")), lit(cfg.hashBuckets)))
-      .repartition(cfg.hashBuckets, col("did_mod"))
-      .write.mode("overwrite").partitionBy("did_mod")
-      .parquet(s"${cfg.dir}/sigs/epoch=$epochId")
-    Dedup.bandRows(kept, "doc_id", cfg.numHashes, cfg.bands)
-      .withColumn("bh_mod", pmod(col("band_hash"), lit(cfg.hashBuckets)))
-      .repartition(cfg.hashBuckets, col("bh_mod"))
-      .write.mode("overwrite").partitionBy("bh_mod")
-      .parquet(s"${cfg.dir}/bands/epoch=$epochId")
-    decisions.write.mode("overwrite").parquet(decDir)
-  }
+  protected def ingest(cfg: Config, batch: DataFrame, cols: Seq[String],
+      epochId: Long): Unit =
+    ingestBatch(cfg, batch, cols(0), cols(1), epochId)
 
   /** All decisions so far (doc_id, kept, dup_of, est_jaccard, epoch). */
   def decisions(spark: SparkSession, cfg: Config): DataFrame =
     spark.read.option("basePath", s"${cfg.dir}/decisions")
       .parquet(s"${cfg.dir}/decisions")
-
-  /** foreachBatch hook: `stream.writeStream.foreachBatch(
-    * IncrementalDedup.sink(cfg, "doc_id", "text"))`. */
-  def sink(cfg: Config, idCol: String, textCol: String)
-      : (DataFrame, Long) => Unit =
-    (batch, epochId) => ingestBatch(cfg, batch, idCol, textCol, epochId)
-
-  /** Registry sink (`dedup-index`): config-driven ingest-time dedup —
-    * kept/dropped decisions land under the index dir per epoch. */
-  final case class DedupIndexSink(cfg: Config, idCol: String,
-      textCol: String,
-      maintain: Option[Maintenance.Policy] = None)
-      extends graft.sources.Connectors.EpochSink {
-    def writeEpoch(df: DataFrame, epochId: Long): Unit = {
-      ingestBatch(cfg, df, idCol, textCol, epochId)
-      maintain.foreach(p => maintainIfDue(df.sparkSession, cfg, p))
-    }
-  }
-
-  /** Policy-gated maintenance pass (tiered compact + gc) — skip loudly
-    * on a held claim ([[Maintenance.maybeRun]]). */
-  def maintainIfDue(spark: SparkSession, cfg: Config,
-      pol: Maintenance.Policy): Boolean =
-    Maintenance.maybeRun(spark, cfg.dir, Seq("bands", "sigs"),
-        committed(spark, cfg), pol) {
-      compact(spark, cfg, pol.sizeRatio)
-      gc(spark, cfg, pol.graceMs)
-    }
-
-  /** Fold committed epochs' bands+sigs (and size-ratio-admissible
-    * generations) into a new generation — [[GenStore.compact]];
-    * decisions (the output + replay markers) are never folded. */
-  def compact(spark: SparkSession, cfg: Config,
-      sizeRatio: Double = Double.PositiveInfinity)
-      : Option[GenStore.CompactStats] =
-    GenStore.compact(spark, cfg.dir, sides(cfg),
-      committed(spark, cfg), sizeRatio)
-
-  /** Reclaim superseded bands/sigs files, grace-windowed
-    * ([[GenStore.gc]]); epoch dirs and decisions remain. */
-  def gc(spark: SparkSession, cfg: Config,
-      graceMs: Long = 3600000L): Unit =
-    GenStore.gc(spark, cfg.dir, Seq("bands", "sigs"), graceMs)
 }

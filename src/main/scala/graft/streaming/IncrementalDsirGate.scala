@@ -45,12 +45,18 @@ import graft.operators.Dsir
   * the state read per scoring call is ≤ (gens + remainder)·dim integer
   * rows — independent of corpus size — and compaction keeps the FILE
   * count O(generations) instead of O(epochs). */
-object IncrementalDsirGate {
+object IncrementalDsirGate extends EpochIndex {
 
   final case class Config(dir: String, dim: Int = 256, alpha: Double = 1.0)
+  type Cfg = Config
 
-  private def sides(cfg: Config) =
-    Seq(GenStore.Side("counts", "b_mod", 1, Seq("bucket", "cnt")))
+  /** A gate from before the `stats` tree (the counts write's own
+    * `_SUCCESS` used to play the marker role) fails loudly in
+    * [[committed]] — read as empty it would score every document zero;
+    * [[backfillLegacyMarkers]] upgrades it in place. */
+  def layout(cfg: Config): GenStore.Layout = GenStore.Layout(cfg.dir,
+    Seq(GenStore.Side("counts", "b_mod", 1, Seq("bucket", "cnt"))),
+    legacySide = Some("counts"))
 
   /** Freeze the target LM (bucket counts) — call once at gate setup. */
   def initTarget(cfg: Config, target: DataFrame, idCol: String,
@@ -60,50 +66,20 @@ object IncrementalDsirGate {
       .coalesce(1).write.mode("overwrite").parquet(s"${cfg.dir}/target")
 
   /** Fold one epoch's documents into the raw LM. Idempotent per
-    * epochId: the job-committed `stats/epoch=N` marker (written LAST)
-    * is the replay fence — a crash anywhere before it leaves the epoch
-    * invisible, and the retry's overwrite replaces it whole. */
+    * epochId ([[GenStore.ingestEpoch]]): the marker is one row. */
   def ingestBatch(cfg: Config, batch: DataFrame, idCol: String,
-      textCol: String, epochId: Long): Unit = {
-    val spark = batch.sparkSession
-    val marker = s"${cfg.dir}/stats/epoch=$epochId"
-    if (GenStore.hasSuccess(spark, marker)) return
-    Dsir.hashedCounts(batch, idCol, textCol, cfg.dim)
-      .groupBy("bucket").agg(sum("cnt").as("cnt"))
-      .withColumn("b_mod", lit(0L))
-      .repartition(1)
-      .write.mode("overwrite").partitionBy("b_mod")
-      .parquet(s"${cfg.dir}/counts/epoch=$epochId")
-    // marker LAST — the epoch's atomic adoption point
-    spark.range(1).select(lit(epochId).as("epoch_id"))
-      .coalesce(1).write.mode("overwrite").parquet(marker)
-  }
-
-  /** Committed epochs (stats marker job-committed). Fails loudly on the
-    * pre-r16 LEGACY layout (committed counts epochs but no `stats/`
-    * tree — the counts write's own `_SUCCESS` used to play the marker
-    * role): treating it as empty would silently score every document
-    * zero. A PRESENT stats tree with a missing epoch is the ordinary
-    * crashed-before-marker state the replay retry repairs.
-    * [[backfillLegacyMarkers]] upgrades in place. */
-  private def committed(spark: SparkSession, cfg: Config): Seq[Long] = {
-    val eps = GenStore.markedEpochs(spark, s"${cfg.dir}/stats")
-    if (eps.isEmpty &&
-        !GenStore.fs(spark, cfg.dir).exists(new Path(s"${cfg.dir}/stats"))) {
-      val legacy = GenStore.markedEpochs(spark, s"${cfg.dir}/counts")
-      if (legacy.nonEmpty)
-        throw new IllegalStateException(
-          s"dsir gate at ${cfg.dir} uses the pre-stats legacy layout " +
-            s"(job-committed counts epochs ${legacy.mkString(",")} but no " +
-            "stats marker tree) — run backfillLegacyMarkers to upgrade. " +
-            "An ingest of the gate's FIRST-ever epoch that crashed " +
-            "between the counts write and the stats marker is on-disk " +
-            "indistinguishable from this state; retrying that epoch's " +
-            "ingest (the ordinary replay) repairs it too. Refusing to " +
-            "score everything zero from a populated gate either way")
+      textCol: String, epochId: Long): Unit =
+    GenStore.ingestEpoch(batch.sparkSession, layout(cfg), epochId) {
+      (Seq("counts" -> Dsir.hashedCounts(batch, idCol, textCol, cfg.dim)
+          .groupBy("bucket").agg(sum("cnt").as("cnt"))
+          .withColumn("b_mod", lit(0L))),
+        batch.sparkSession.range(1).select(lit(epochId).as("epoch_id"))
+          .coalesce(1))
     }
-    eps
-  }
+
+  protected def ingest(cfg: Config, batch: DataFrame, cols: Seq[String],
+      epochId: Long): Unit =
+    ingestBatch(cfg, batch, cols(0), cols(1), epochId)
 
   /** Upgrade a pre-r16 legacy gate in place: per job-committed flat
     * counts epoch, rewrite the rows under the bucketed layout and write
@@ -202,43 +178,4 @@ object IncrementalDsirGate {
     docs.select(col(idCol)).join(summed, Seq(idCol), "left")
       .select(col(idCol), coalesce(col("w9"), lit(0L)).as("w9"))
   }
-
-  /** Fold committed count epochs (and size-ratio-admissible
-    * generations) into a new generation — [[GenStore.compact]]: the
-    * unioned rows sum to the same totals, and the file count drops from
-    * O(epochs) to O(generations). Stats markers (replay fence) are
-    * never folded. */
-  def compact(spark: SparkSession, cfg: Config,
-      sizeRatio: Double = Double.PositiveInfinity)
-      : Option[GenStore.CompactStats] =
-    GenStore.compact(spark, cfg.dir, sides(cfg),
-      committed(spark, cfg), sizeRatio)
-
-  /** Reclaim superseded count files, grace-windowed ([[GenStore.gc]]);
-    * epoch dirs and stats markers remain. */
-  def gc(spark: SparkSession, cfg: Config,
-      graceMs: Long = 3600000L): Unit =
-    GenStore.gc(spark, cfg.dir, Seq("counts"), graceMs)
-
-  /** Registry sink: each streaming epoch (or batch run, as epoch 0)
-    * folds into the raw LM. */
-  final case class DsirGateSink(cfg: Config, idCol: String,
-      textCol: String,
-      maintain: Option[Maintenance.Policy] = None)
-      extends graft.sources.Connectors.EpochSink {
-    def writeEpoch(df: DataFrame, epochId: Long): Unit = {
-      ingestBatch(cfg, df, idCol, textCol, epochId)
-      maintain.foreach(p => maintainIfDue(df.sparkSession, cfg, p))
-    }
-  }
-
-  /** Policy-gated maintenance pass (tiered compact + gc) — skip loudly
-    * on a held claim ([[Maintenance.maybeRun]]). */
-  def maintainIfDue(spark: SparkSession, cfg: Config,
-      pol: Maintenance.Policy): Boolean =
-    Maintenance.maybeRun(spark, cfg.dir, Seq("counts"),
-        committed(spark, cfg), pol) {
-      compact(spark, cfg, pol.sizeRatio)
-      gc(spark, cfg, pol.graceMs)
-    }
 }

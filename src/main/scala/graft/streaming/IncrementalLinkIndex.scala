@@ -80,13 +80,14 @@ import graft.streaming.GenStore.{GenView, Side, SidePresence}
   * with the batch `web_link_pipeline`).
   * Ingest contract: page ids unique across epochs (append-only index).
   */
-object IncrementalLinkIndex {
+object IncrementalLinkIndex extends EpochIndex {
 
   final case class Config(dir: String, hashBuckets: Int = 64)
+  type Cfg = Config
 
-  private def sides(cfg: Config) = Seq(
+  def layout(cfg: Config): GenStore.Layout = GenStore.Layout(cfg.dir, Seq(
     Side("links", "b_mod", cfg.hashBuckets, Seq("src", "abs", "text")),
-    Side("urls", "b_mod", cfg.hashBuckets, Seq("url_norm", "dst")))
+    Side("urls", "b_mod", cfg.hashBuckets, Seq("url_norm", "dst"))))
 
   /** Kinds memoized in [[Memo.shared]]: the resolved (src, abs, text,
     * dst) projection and its derivatives, per committed-epoch/generation
@@ -101,83 +102,38 @@ object IncrementalLinkIndex {
     Set("link-urls", "link-resolved", "link-counts", "link-domain-edges")
 
   /** Index one epoch of (idCol, urlCol, htmlCol) crawl records.
-    * Idempotent per epochId: a job-committed `stats/epoch=N` means the
-    * epoch fully landed. */
+    * Idempotent per epochId ([[GenStore.ingestEpoch]]). */
   def ingestBatch(cfg: Config, batch: DataFrame, idCol: String,
-      urlCol: String, htmlCol: String, epochId: Long): Unit = {
-    val spark = batch.sparkSession
-    val marker = s"${cfg.dir}/stats/epoch=$epochId"
-    if (GenStore.hasSuccess(spark, marker)) return
-    val pages = batch.select(col(idCol).as("doc_id"),
-      col(urlCol).as("url"), col(htmlCol).as("html"))
-    // the expensive pass — html parse — runs exactly once, here.
-    // repartition ON the bucket column before the partitioned write:
-    // without it every writer task emits a file into every bucket dir
-    // (tasks × buckets files per epoch — measured 6,336 ~21 KB files at
-    // the 100× rung, and every probe then pays the listing + one task
-    // per shard), with it each epoch lands ONE file per bucket — the
-    // bounded-file-count discipline an append-only index needs at scale
-    pages
-      .select(col("doc_id").as("src"), col("url"),
-        explode(Html.anchors(col("html"))).as("a"))
-      .select(col("src"),
-        Urls.normalize(Urls.resolve(col("url"), col("a.href"))).as("abs"),
-        col("a.text").as("text"))
-      .withColumn("b_mod",
-        pmod(hash(col("abs")), lit(cfg.hashBuckets)).cast("long"))
-      .repartition(cfg.hashBuckets, col("b_mod"))
-      .write.mode("overwrite").partitionBy("b_mod")
-      .parquet(s"${cfg.dir}/links/epoch=$epochId")
-    // slim projections — no html in their lineage
-    pages.select(Urls.normalize(col("url")).as("url_norm"),
-        col("doc_id").as("dst"))
-      .withColumn("b_mod",
-        pmod(hash(col("url_norm")), lit(cfg.hashBuckets)).cast("long"))
-      .repartition(cfg.hashBuckets, col("b_mod"))
-      .write.mode("overwrite").partitionBy("b_mod")
-      .parquet(s"${cfg.dir}/urls/epoch=$epochId")
-    pages.agg(count(lit(1)).as("n_pages"))
-      .coalesce(1).write.mode("overwrite").parquet(marker)
-  }
-
-  /** foreachBatch hook for a crawl-record stream. */
-  def sink(cfg: Config, idCol: String, urlCol: String, htmlCol: String)
-      : (DataFrame, Long) => Unit =
-    (batch, epochId) => ingestBatch(cfg, batch, idCol, urlCol, htmlCol, epochId)
-
-  /** Registry sink (`link-index`): the same ingest, config-driven.
-    * Epoch-keyed idempotency via EpochSink. With `maintain` set, each
-    * epoch commit checks the policy and self-maintains (compact +
-    * rank-table refresh + gc) — the reference's interval-compactor
-    * behavior in the ingest path ([[Maintenance]]). */
-  final case class LinkIndexSink(cfg: Config, idCol: String,
-      urlCol: String, htmlCol: String,
-      maintain: Option[Maintenance.Policy] = None)
-      extends graft.sources.Connectors.EpochSink {
-    def writeEpoch(df: DataFrame, epochId: Long): Unit = {
-      ingestBatch(cfg, df, idCol, urlCol, htmlCol, epochId)
-      maintain.foreach(p => maintainIfDue(df.sparkSession, cfg, p))
-    }
-  }
-
-  /** Run the full maintenance pass — tiered compact, rank-table
-    * refresh for the new view, grace-windowed gc — when the policy's
-    * pressure check says the index is due; skip loudly on a held claim
-    * ([[Maintenance.maybeRun]]). */
-  def maintainIfDue(spark: SparkSession, cfg: Config,
-      pol: Maintenance.Policy,
-      trustSeeds: Seq[(String, Column)] = Nil): Boolean =
-    Maintenance.maybeRun(spark, cfg.dir, Seq("links", "urls"),
-        committed(spark, cfg), pol) {
-      compact(spark, cfg, pol.sizeRatio)
-      refreshPriors(spark, cfg, trustSeeds = trustSeeds)
-      gc(spark, cfg, pol.graceMs)
+      urlCol: String, htmlCol: String, epochId: Long): Unit =
+    GenStore.ingestEpoch(batch.sparkSession, layout(cfg), epochId) {
+      val pages = batch.select(col(idCol).as("doc_id"),
+        col(urlCol).as("url"), col(htmlCol).as("html"))
+      // the expensive pass — html parse — runs exactly once, here
+      val links = pages
+        .select(col("doc_id").as("src"), col("url"),
+          explode(Html.anchors(col("html"))).as("a"))
+        .select(col("src"),
+          Urls.normalize(Urls.resolve(col("url"), col("a.href"))).as("abs"),
+          col("a.text").as("text"))
+        .withColumn("b_mod",
+          pmod(hash(col("abs")), lit(cfg.hashBuckets)).cast("long"))
+      // slim projection — no html in its lineage
+      val urls = pages.select(Urls.normalize(col("url")).as("url_norm"),
+          col("doc_id").as("dst"))
+        .withColumn("b_mod",
+          pmod(hash(col("url_norm")), lit(cfg.hashBuckets)).cast("long"))
+      (Seq("links" -> links, "urls" -> urls),
+        pages.agg(count(lit(1)).as("n_pages")).coalesce(1))
     }
 
-  /** Committed epoch ids (stats marker job-committed), or Nil
-    * pre-ingest. */
-  private def committed(spark: SparkSession, cfg: Config): Seq[Long] =
-    GenStore.markedEpochs(spark, s"${cfg.dir}/stats")
+  protected def ingest(cfg: Config, batch: DataFrame, cols: Seq[String],
+      epochId: Long): Unit =
+    ingestBatch(cfg, batch, cols(0), cols(1), cols(2), epochId)
+
+  /** The maintenance pass refreshes the rank tables for the folded
+    * view, before gc sweeps the stale ones. */
+  override protected def afterFold(spark: SparkSession, cfg: Config): Unit =
+    refreshPriors(spark, cfg)
 
   /** One probe's consistent snapshot: the [[GenStore.GenView]] plus both
     * sides' filesystem presence, computed ONCE per probe entry point and
@@ -197,11 +153,6 @@ object IncrementalLinkIndex {
     LinkView(v, GenStore.sidePresence(spark, v, "links"),
       GenStore.sidePresence(spark, v, "urls"))
   }
-
-  /** The committed epoch set the probes read — `IndexMaint probe` times
-    * this listing alone as the metadata share of cold latency. */
-  private[graft] def committedEpochs(spark: SparkSession,
-      cfg: Config): Seq[Long] = viewOrFail(spark, cfg).v.eps
 
   /** The view's url map: (url_norm, dst) — memoized per view like the
     * resolved projection: the rank/HITS cores re-read the node universe
@@ -492,55 +443,12 @@ object IncrementalLinkIndex {
     }
   }
 
-  /** Stats of one [[compact]] run. */
-  final case class CompactStats(gen: Long, foldedEpochs: Seq[Long],
-      foldedGens: Seq[Long], linkRows: Long, urlRows: Long)
-
-  /** Fold committed epochs (and, size-ratio permitting, prior
-    * generations) into a new compaction generation — the
-    * table-maintenance pass an append-only index needs at scale:
-    * without it the index accretes epochs × buckets files and every
-    * probe's listing/footer overhead grows with ingest HISTORY rather
-    * than corpus size. After a full fold (`sizeRatio` = ∞, the default)
-    * the whole corpus side is `hashBuckets` files, re-bucketed by the
-    * SAME hash the ingest uses, so point-probe pruning and the
-    * bucket-aligned resolution join are preserved. A finite `sizeRatio`
-    * makes the fold SIZE-TIERED: generations join the fold
-    * smallest-first only while each is ≤ sizeRatio × the bytes already
-    * folding, so a small ingest delta never rewrites the big generation
-    * (write amplification bounded by the delta — [[GenStore.compact]]).
-    *
-    * Protocol, verification (single-pass: fold-input rows observed in
-    * the write job itself and checked against the written files' own
-    * parquet footer row counts), crash windows, the single-maintainer
-    * claim, and the marker-written-last adoption point are
-    * [[GenStore]]'s — see its doc. Epoch stats
-    * markers are NEVER removed, so streaming replay of a folded epoch
-    * stays a no-op. Probe results are bit-identical across the swap:
-    * the view is the same union, and every probe recurrence is
-    * layout-independent by construction. Returns None when there is
-    * nothing to fold (no new epochs and ≤ 1 admissible generation). */
-  def compact(spark: SparkSession, cfg: Config,
-      sizeRatio: Double = Double.PositiveInfinity): Option[CompactStats] =
-    GenStore.compact(spark, cfg.dir, sides(cfg),
-        committed(spark, cfg), sizeRatio)
-      .map(s => CompactStats(s.gen, s.foldedEpochs, s.foldedGens,
-        s.rows("links"), s.rows("urls")))
-
-  /** Reclaim data superseded by committed generations — grace-windowed
-    * ([[GenStore.gc]], r14 verdict #3): files are deleted only once the
-    * superseding generation's marker is ≥ `graceMs` old (default 1h),
-    * so an in-flight probe that resolved its plan against the old view
-    * cannot lose files mid-job; `graceMs = 0` reclaims immediately
-    * (tests, offline maintenance). Epoch DIRECTORIES and their stats
-    * markers always remain — replay fencing and the corrupted-vs-empty
-    * split depend on them. */
-  def gc(spark: SparkSession, cfg: Config,
-      graceMs: Long = 3600000L): Unit = {
-    GenStore.gc(spark, cfg.dir, Seq("links", "urls"), graceMs)
-    // stale materialized priors: entries keyed to an epoch set other
-    // than the current committed one are superseded — reclaim once
-    // aged (the grace window keeps an in-flight probe's table alive)
+  /** [[EpochIndex.gc]], then the stale materialized priors: entries
+    * keyed to an epoch set other than the current committed one are
+    * superseded — reclaimed once aged (the grace window keeps an
+    * in-flight probe's table alive). */
+  override def gc(spark: SparkSession, cfg: Config, graceMs: Long): Unit = {
+    super.gc(spark, cfg, graceMs)
     val f = GenStore.fs(spark, cfg.dir)
     val base = new org.apache.hadoop.fs.Path(s"${cfg.dir}/rank-mat")
     if (f.exists(base)) {

@@ -43,66 +43,38 @@ import graft.streaming.GenStore.Side
   * Ingest contract: document ids are unique across epochs (re-ingesting
   * a doc id would double-count it, as in any append-only index).
   */
-object IncrementalSearchIndex {
+object IncrementalSearchIndex extends EpochIndex {
 
   final case class Config(dir: String, hashBuckets: Int = 64,
       k1: Double = 1.2, b: Double = 0.75)
+  type Cfg = Config
 
-  private def sides(cfg: Config) = Seq(
+  def layout(cfg: Config): GenStore.Layout = GenStore.Layout(cfg.dir, Seq(
     Side("postings", "t_mod", cfg.hashBuckets,
-      Seq("term", "doc_id", "dl", "tf")))
+      Seq("term", "doc_id", "dl", "tf"))))
 
   /** Index one epoch of (idCol, textCol) documents. Idempotent per
-    * epochId: a job-committed `stats/epoch=N` means the epoch fully
-    * landed. */
+    * epochId ([[GenStore.ingestEpoch]]). */
   def ingestBatch(cfg: Config, batch: DataFrame, idCol: String,
-      textCol: String, epochId: Long): Unit = {
-    val spark = batch.sparkSession
-    val marker = s"${cfg.dir}/stats/epoch=$epochId"
-    if (GenStore.hasSuccess(spark, marker)) return
-    val docs = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
-      .localCheckpoint(eager = true)
-    TextSearch.postings(docs, "doc_id", "text")
-      .withColumn("t_mod",
-        pmod(hash(col("term")), lit(cfg.hashBuckets)).cast("long"))
-      .repartition(cfg.hashBuckets, col("t_mod"))
-      .write.mode("overwrite").partitionBy("t_mod")
-      .parquet(s"${cfg.dir}/postings/epoch=$epochId")
-    // stats row counts EVERY doc (term-less docs too — they contribute
-    // to N and avgdl exactly as in the batch operator); marker, so last
-    docs.agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(size(TextFunctions.tokens(col("text")))), lit(0L))
-          .as("sum_dl"))
-      .coalesce(1).write.mode("overwrite").parquet(marker)
-  }
-
-  /** foreachBatch hook for a document stream. */
-  def sink(cfg: Config, idCol: String, textCol: String)
-      : (DataFrame, Long) => Unit =
-    (batch, epochId) => ingestBatch(cfg, batch, idCol, textCol, epochId)
-
-  /** Registry sink (`search-index`): the same ingest, config-driven —
-    * a transporter-style pipeline can declare ingest-time search
-    * indexing as a sink row. Epoch-keyed idempotency via EpochSink. */
-  final case class SearchIndexSink(cfg: Config, idCol: String,
-      textCol: String,
-      maintain: Option[Maintenance.Policy] = None)
-      extends graft.sources.Connectors.EpochSink {
-    def writeEpoch(df: DataFrame, epochId: Long): Unit = {
-      ingestBatch(cfg, df, idCol, textCol, epochId)
-      maintain.foreach(p => maintainIfDue(df.sparkSession, cfg, p))
+      textCol: String, epochId: Long): Unit =
+    GenStore.ingestEpoch(batch.sparkSession, layout(cfg), epochId) {
+      val docs = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+        .localCheckpoint(eager = true)
+      val postings = TextSearch.postings(docs, "doc_id", "text")
+        .withColumn("t_mod",
+          pmod(hash(col("term")), lit(cfg.hashBuckets)).cast("long"))
+      // stats row counts EVERY doc (term-less docs too — they contribute
+      // to N and avgdl exactly as in the batch operator)
+      (Seq("postings" -> postings),
+        docs.agg(count(lit(1)).as("n_docs"),
+            coalesce(sum(size(TextFunctions.tokens(col("text")))), lit(0L))
+              .as("sum_dl"))
+          .coalesce(1))
     }
-  }
 
-  /** Policy-gated maintenance pass (tiered compact + gc) — skip loudly
-    * on a held claim ([[Maintenance.maybeRun]]). */
-  def maintainIfDue(spark: SparkSession, cfg: Config,
-      pol: Maintenance.Policy): Boolean =
-    Maintenance.maybeRun(spark, cfg.dir, Seq("postings"),
-        GenStore.markedEpochs(spark, s"${cfg.dir}/stats"), pol) {
-      compact(spark, cfg, pol.sizeRatio)
-      gc(spark, cfg, pol.graceMs)
-    }
+  protected def ingest(cfg: Config, batch: DataFrame, cols: Seq[String],
+      epochId: Long): Unit =
+    ingestBatch(cfg, batch, cols(0), cols(1), epochId)
 
   /** BM25 top-k of each (query_id, query_text) row against everything
     * ingested so far: touched-partition postings read (generations ∪
@@ -119,8 +91,8 @@ object IncrementalSearchIndex {
     // stats write leaves a half-landed epoch whose postings must NOT
     // score: its docs would be ranked while N/avgdl exclude them. The
     // whole probe therefore fences to ONE view of the committed list.
-    val committed = GenStore.markedEpochs(spark, s"${cfg.dir}/stats")
-    if (committed.isEmpty) return empty
+    val eps = committed(spark, cfg)
+    if (eps.isEmpty) return empty
 
     val qTerms = TextSearch.queryTerms(queries, queryIdCol, queryTextCol)
       .localCheckpoint(eager = true) // drives the prune AND the join
@@ -131,12 +103,12 @@ object IncrementalSearchIndex {
     // N and avgdl from the committed epochs' stats rows, each read once
     // per session (GenStore's read-once metadata contract)
     val stats = GenStore.markerRows(spark, cfg.dir, "index-stats",
-      committed.map(e => s"${cfg.dir}/stats/epoch=$e"),
+      eps.map(e => s"${cfg.dir}/stats/epoch=$e"),
       Seq("n_docs", "sum_dl")).flatten
     val n = stats.map(_.getLong(0)).sum
     val avgdl = stats.map(_.getLong(1)).sum.toDouble / n.toDouble
 
-    val v = GenStore.view(spark, cfg.dir, committed)
+    val v = GenStore.view(spark, cfg.dir, eps)
     val pres = GenStore.sidePresence(spark, v, "postings")
     GenStore.sideRead(spark, v, "postings", pres,
         Seq("t_mod", "term", "doc_id", "dl", "tf")) match {
@@ -148,19 +120,4 @@ object IncrementalSearchIndex {
           qTerms, n, avgdl, cfg.k1, cfg.b, k)
     }
   }
-
-  /** Fold committed epochs (and size-ratio-admissible generations) into
-    * a new postings generation — [[GenStore.compact]]; the epoch stats
-    * markers (N/avgdl + replay fence) are never folded. */
-  def compact(spark: SparkSession, cfg: Config,
-      sizeRatio: Double = Double.PositiveInfinity)
-      : Option[GenStore.CompactStats] =
-    GenStore.compact(spark, cfg.dir, sides(cfg),
-      GenStore.markedEpochs(spark, s"${cfg.dir}/stats"), sizeRatio)
-
-  /** Reclaim superseded postings files, grace-windowed
-    * ([[GenStore.gc]]); epoch dirs and stats markers remain. */
-  def gc(spark: SparkSession, cfg: Config,
-      graceMs: Long = 3600000L): Unit =
-    GenStore.gc(spark, cfg.dir, Seq("postings"), graceMs)
 }

@@ -13,10 +13,10 @@ import org.apache.spark.sql.SparkSession
   * after each committed epoch the sink checks PRESSURE (how many
   * committed epochs are still served from the epoch trees, and
   * optionally the live data-file count) and, once a threshold is
-  * crossed, runs the family's maintenance pass — `compact(sizeRatio)`
-  * [+ family extras, e.g. the link index's rank-table refresh] +
-  * `gc(graceMs)` — inline in the ingest thread, under the single-
-  * maintainer claim.
+  * crossed, runs the family's maintenance pass
+  * ([[EpochIndex.maintenancePass]]: `compact(sizeRatio)`, the link
+  * index's rank-table refresh, `gc(graceMs)`) inline in the ingest
+  * thread, under the single-maintainer claim.
   *
   * A held claim (another maintainer in flight, or a crashed one not
   * yet aged out) SKIPS the pass loudly instead of failing the stream:

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.streaming.{IncrementalAnnIndex, IncrementalDedup,
+import graft.streaming.{EpochIndex, IncrementalAnnIndex, IncrementalDedup,
   IncrementalLinkIndex, IncrementalSearchIndex}
 
 /** The one maintenance + measurement CLI for the whole ingest-time index
@@ -99,16 +99,17 @@ object IndexMaint {
         val Array(_, name, idxDir) = args.take(3)
         val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
         val run = probeFn(spark, name, idxDir, sfDir)
-        // the committed-view listing alone (markers + _SUCCESS checks +
-        // generation metas + side presence): the share of cold latency
-        // that is filesystem metadata
-        val (_, tList) = time(
-          if (name.startsWith("link_"))
-            IncrementalLinkIndex.committedEpochs(spark,
-              IncrementalLinkIndex.Config(idxDir)).size
-          else
-            graft.streaming.GenStore.markedEpochs(spark,
-              s"$idxDir/stats").size)
+        // the committed-epoch listing alone (marker tree + _SUCCESS
+        // checks): the share of cold latency that is epoch metadata
+        def listing(m: EpochIndex)(cfg: m.Cfg) = m.committed(spark, cfg).size
+        val (_, tList) = time(name match {
+          case "bm25" => listing(IncrementalSearchIndex)(
+            IncrementalSearchIndex.Config(idxDir))
+          case "ann" => listing(IncrementalAnnIndex)(
+            IncrementalAnnIndex.Config(idxDir, dim = 64))
+          case _ => listing(IncrementalLinkIndex)(
+            IncrementalLinkIndex.Config(idxDir))
+        })
         val (rows, tCold) = time(run())
         val (_, tWarm) = time(run())
         println(f"""{"probe":"$name","rows":$rows,"cold_s":$tCold%.3f,"warm_s":$tWarm%.3f,"listing_s":$tList%.3f,"index":"$idxDir"}""")
@@ -160,34 +161,22 @@ object IndexMaint {
     case other => sys.error(s"unknown kind $other")
   }
 
+  /** One maintenance pass of any kind ([[EpochIndex.maintenancePass]]:
+    * compact, the link index's rank-table refresh, gc). */
   private def maintain(spark: SparkSession, kind: String, idxDir: String,
-      ratio: Double, grace: Long): String = kind match {
-    case "link" =>
-      val cfg = IncrementalLinkIndex.Config(idxDir)
-      val st = IncrementalLinkIndex.compact(spark, cfg, ratio)
-      // the maintenance hook for the retrieval surface: persist the
-      // rank tables (pagerank/domain/hits + the mod-97 trust seed the
-      // probe CLI uses) for the new view before gc sweeps stale ones
-      IncrementalLinkIndex.refreshPriors(spark, cfg,
-        trustSeeds = Seq("mod97" -> (col("doc_id") % 97 === 0)))
-      IncrementalLinkIndex.gc(spark, cfg, grace)
-      st.toString
-    case "search" =>
-      val cfg = IncrementalSearchIndex.Config(idxDir)
-      val st = IncrementalSearchIndex.compact(spark, cfg, ratio)
-      IncrementalSearchIndex.gc(spark, cfg, grace)
-      st.toString
-    case "dedup" =>
-      val cfg = IncrementalDedup.Config(idxDir)
-      val st = IncrementalDedup.compact(spark, cfg, ratio)
-      IncrementalDedup.gc(spark, cfg, grace)
-      st.toString
-    case "ann" =>
-      val cfg = IncrementalAnnIndex.Config(idxDir, dim = 64)
-      val st = IncrementalAnnIndex.compact(spark, cfg, ratio)
-      IncrementalAnnIndex.gc(spark, cfg, grace)
-      st.toString
-    case other => sys.error(s"unknown kind $other")
+      ratio: Double, grace: Long): String = {
+    def pass(m: EpochIndex)(cfg: m.Cfg) =
+      m.maintenancePass(spark, cfg, ratio, grace).toString
+    kind match {
+      case "link" =>
+        pass(IncrementalLinkIndex)(IncrementalLinkIndex.Config(idxDir))
+      case "search" =>
+        pass(IncrementalSearchIndex)(IncrementalSearchIndex.Config(idxDir))
+      case "dedup" => pass(IncrementalDedup)(IncrementalDedup.Config(idxDir))
+      case "ann" =>
+        pass(IncrementalAnnIndex)(IncrementalAnnIndex.Config(idxDir, dim = 64))
+      case other => sys.error(s"unknown kind $other")
+    }
   }
 
   private def probeFn(spark: SparkSession, name: String, idxDir: String,

@@ -123,7 +123,7 @@ class IncrementalDedupSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1).json(dir)
     val q = stream.writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        IncrementalDedup.sink(cfg, "doc_id", "text")(b, id)
+        IncrementalDedup.ingestBatch(cfg, b, "doc_id", "text", id)
       }
       .option("checkpointLocation", s"$tmp/ckpt")
       .trigger(Trigger.AvailableNow())

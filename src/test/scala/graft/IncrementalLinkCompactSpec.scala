@@ -155,7 +155,7 @@ class IncrementalLinkCompactSpec extends SparkSpec {
       .toDF("doc_id", "url", "html")
     IncrementalLinkIndex.ingestBatch(cfg, pages, "doc_id", "url", "html", 0L)
     val stats = IncrementalLinkIndex.compact(spark, cfg).get
-    assert(stats.linkRows == 0L && stats.urlRows == 1L)
+    assert(stats.rows("links") == 0L && stats.rows("urls") == 1L)
     IncrementalLinkIndex.gc(spark, cfg, graceMs = 0L)
     assert(IncrementalLinkIndex.resolved(spark, cfg).count() == 0)
     assert(IncrementalLinkIndex.inlinks(spark, cfg,

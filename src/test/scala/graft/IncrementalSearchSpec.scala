@@ -83,7 +83,7 @@ class IncrementalSearchSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1).json(dir)
     val q = stream.writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        IncrementalSearchIndex.sink(cfg, "doc_id", "text")(b, id)
+        IncrementalSearchIndex.ingestBatch(cfg, b, "doc_id", "text", id)
       }
       .option("checkpointLocation", s"$tmp/ckpt")
       .trigger(Trigger.AvailableNow())

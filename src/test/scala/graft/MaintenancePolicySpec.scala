@@ -26,7 +26,7 @@ class MaintenancePolicySpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-mpol").toString
     val cfg = IncrementalSearchIndex.Config(s"$tmp/index", hashBuckets = 8)
     val plain = IncrementalSearchIndex.Config(s"$tmp/plain", hashBuckets = 8)
-    val sink = IncrementalSearchIndex.SearchIndexSink(cfg, "doc_id", "text",
+    val sink = new IncrementalSearchIndex.IndexSink(cfg, Seq("doc_id", "text"),
       maintain = Some(Maintenance.Policy(everyEpochs = 3, graceMs = 0L)))
     def gens = GenStore.committedGens(spark, cfg.dir)
     (0 until 4).foreach { e =>
@@ -56,7 +56,7 @@ class MaintenancePolicySpec extends SparkSpec {
   test("held claim skips loudly; the next epoch retries and maintains") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-mpol2").toString
     val cfg = IncrementalSearchIndex.Config(s"$tmp/index", hashBuckets = 8)
-    val sink = IncrementalSearchIndex.SearchIndexSink(cfg, "doc_id", "text",
+    val sink = new IncrementalSearchIndex.IndexSink(cfg, Seq("doc_id", "text"),
       maintain = Some(Maintenance.Policy(everyEpochs = 2, graceMs = 0L)))
     sink.writeEpoch(docs.filter(pmod(col("doc_id"), lit(3)) === 0), 0L)
 

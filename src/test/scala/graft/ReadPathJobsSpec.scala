@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.TextSearch
-import graft.streaming.{IncrementalAnnIndex, IncrementalSearchIndex}
+import graft.streaming.{IncrementalAnnIndex, IncrementalDedup,
+  IncrementalSearchIndex}
 
 /** The read path is construction-free: after one warm construction,
   * building a gate query's DataFrame runs no Spark job (schemas come
@@ -73,5 +74,20 @@ class ReadPathJobsSpec extends SparkSpec {
       (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     assert(rows(b2) == rows(TextSearch.bm25TopK(docs, "doc_id", "text", q,
       "query_id", "query_text", 10)))
+  }
+
+  // the touched-bucket prune is GenStore.pruneSet: one job, where a
+  // distinct().collect() runs two under AQE
+  test("a steady dedup epoch ingest fires at most 29 jobs") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-dedupjobs").toString
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select("doc_id", "text")
+    val cfg = IncrementalDedup.Config(s"$tmp/dedup", hashBuckets = 8)
+    def ingest(e: Long): Unit = IncrementalDedup.ingestBatch(cfg,
+      docs.filter(pmod(col("doc_id"), lit(3L)) === e), "doc_id", "text", e)
+    ingest(0); ingest(1) // an index with committed epochs to dedup against
+    val (_, jobs) = jobsDuring(ingest(2))
+    info(s"steady dedup epoch ingest: $jobs jobs")
+    assert(jobs <= 29, s"a steady dedup epoch ingest fired $jobs jobs")
   }
 }
