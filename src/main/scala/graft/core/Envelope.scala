@@ -37,16 +37,26 @@ object Envelope {
   /** Sync-phase metadata beyond op/ts/ns: the Copy/Sync phase marker and
     * the CDC total-order column. Namespaced with a reserved `__` prefix
     * so a replicated table whose PAYLOAD has a column literally named
-    * `mode` or `seq` is never conflated with envelope metadata — sinks
-    * drop metadata by these exact names (e.g. the JDBC upsert's data-
-    * column projection), and a bare-name match would silently eat the
-    * user's column. */
+    * `mode` or `seq` is never conflated with envelope metadata —
+    * [[unwrap]] drops metadata by these exact names, and a bare-name
+    * match would silently eat the user's column. */
   val ModeCol = "__mode"
   val SeqCol = "__seq"
 
-  /** Drop the Sync-phase metadata columns (phase marker + CDC order) —
-    * what CDC apply paths do once ordering is consumed. */
-  def stripMeta(df: DataFrame): DataFrame = df.drop(ModeCol, SeqCol)
+  /** The one namespace rule (`pipeline/node.go:96-100`:
+    * `regexp.Compile(strings.Trim(ns, "/"))`): a config `ns` value, bare
+    * or `/re/`-wrapped, matched with find() semantics — never anchored
+    * for the user, since wrapping the pattern in `.*…*` would break
+    * alternation (`^a|^b`). `nsMatch` is the row predicate on the `ns`
+    * column (Spark's rlike is find()); `nsMatches` the same test for a
+    * listing (table, collection, queue and feed names). */
+  def nsMatch(nsRegex: String): Column = col(NsCol).rlike(nsTrim(nsRegex))
+  def nsMatches(nsRegex: String): String => Boolean = {
+    val re = java.util.regex.Pattern.compile(nsTrim(nsRegex))
+    re.matcher(_).find()
+  }
+  private def nsTrim(nsRegex: String): String =
+    nsRegex.stripPrefix("/").stripSuffix("/")
 
   /** Wrap a plain table read as an insert-mode snapshot stream of envelopes
     * (what a reference snapshot reader emits: op=insert, mode=Copy,
@@ -73,9 +83,12 @@ object Envelope {
       docCols.toSeq: _*)
   }
 
-  /** Drop the envelope columns, leaving the document. */
+  /** The one document boundary: drop every envelope column — op/ts/ns
+    * and the Sync-phase metadata — leaving `msg.Data()` alone, which is
+    * all a reference writer stores. Every document-storing sink goes
+    * through here; none keeps its own list of names to drop. */
   def unwrap(df: DataFrame): DataFrame =
-    df.drop(OpCol, TsCol, NsCol)
+    df.drop(OpCol, TsCol, NsCol, ModeCol, SeqCol)
 
   /** Envelope columns present? (cheap structural check) */
   def isEnveloped(df: DataFrame): Boolean =

@@ -54,10 +54,8 @@ object Transforms {
     * whose ns matches. The reference trims surrounding slashes from
     * `/regex/` literals (`regexp.Compile(strings.Trim(ns,"/"))`).
     */
-  def nsFilter(nsRegex: String)(df: DataFrame): DataFrame = {
-    val re = nsRegex.stripPrefix("/").stripSuffix("/")
-    df.filter(col(Envelope.NsCol).rlike(re))
-  }
+  def nsFilter(nsRegex: String)(df: DataFrame): DataFrame =
+    df.filter(Envelope.nsMatch(nsRegex))
 
   /** `skip` filter (`function/skip/skipper.go:46-111`): keep a row iff
     * `field <operator> value`. Operators and their coercion semantics:
@@ -114,21 +112,23 @@ object Transforms {
     df
   }
 
-  /** Decode a CDC envelope's extended-JSON document column into typed
-    * per-row columns (the schema-on-read step every CDC tailer needs
-    * before a typed sink — the generic form of `MongoOplog.typed` /
-    * `MysqlBinlog.typed`, declarable in a config transform chain so ANY
-    * tailer feeds ANY typed sink, `pipeline/node.go:156-165`). Envelope
-    * metadata and other non-document columns pass through; update
-    * envelopes must be resolved to full documents upstream (the oplog
-    * source's `db_dir` option) or filtered to inserts/deletes first. */
+  /** Decode a CDC envelope's wire-document column into typed per-row
+    * columns — the one schema-on-read step every CDC tailer needs before
+    * a typed sink, declarable in a config transform chain so ANY tailer
+    * feeds ANY typed sink (`pipeline/node.go:156-165`). `wire` is the
+    * source's document decoder: extended JSON (`Mejson.from_mejson`,
+    * the default) for oplog, binlog and decoding logs; plain JSON
+    * (`from_json`) for rethink feeds and queue bodies. Envelope metadata
+    * and other non-document columns pass through; update envelopes must
+    * be resolved to full documents upstream (the oplog source's `db_dir`
+    * option) or filtered to inserts/deletes first. */
   def decode(schema: org.apache.spark.sql.types.StructType,
-      dataCol: String = "data")(df: DataFrame): DataFrame = {
+      dataCol: String = "data",
+      wire: (Column, org.apache.spark.sql.types.DataType) => Column =
+        Mejson.from_mejson)(df: DataFrame): DataFrame = {
     val keep = df.columns.filterNot(c =>
       c == dataCol || schema.fieldNames.contains(c)).map(col).toSeq
-    df.withColumn("__doc",
-        Mejson.from_mejson(col(dataCol),
-          schema: org.apache.spark.sql.types.DataType))
+    df.withColumn("__doc", wire(col(dataCol), schema))
       .select(keep ++
         schema.fieldNames.toSeq.map(f => col(s"__doc.$f").as(f)): _*)
   }

@@ -76,8 +76,7 @@ final case class PipelineSpec(name: String, source: Source,
       // bypasses, so no union re-adds the columns a transform dropped.
       val exemptions = Seq(
         if (t.nsFilter != ".*" && df.columns.contains(graft.core.Envelope.NsCol))
-          Some(not(col(graft.core.Envelope.NsCol)
-            .rlike(t.nsFilter.stripPrefix("/").stripSuffix("/"))))
+          Some(not(graft.core.Envelope.nsMatch(t.nsFilter)))
         else None,
         if (commands && df.columns.contains(graft.core.Envelope.OpCol))
           Some(col(graft.core.Envelope.OpCol) ===

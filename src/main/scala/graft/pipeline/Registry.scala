@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import graft.functions.Transforms
 import graft.sources.Connectors
+import graft.sources.ChangeLog.LogSource
 import graft.sources.Connectors.{Sink, Source}
 
 /** Name-based registries mirroring the reference's adaptor registry
@@ -290,117 +291,80 @@ object Registry {
       p.getOrElse("ns", "file").toString)),
     "parquet" -> (p => Connectors.TableSource(str(p, "dir"), str(p, "table"))),
     "tables" -> (p => Connectors.MultiTableSource(str(p, "dir"),
-      strSeq(p, "tables"), p.getOrElse("ns", ".*").toString)),
+      strSeq(p, "tables"), ns(p))),
     "csv" -> (p => Connectors.CsvSource(str(p, "uri"),
       p.getOrElse("ns", "csv").toString)),
     "orc" -> (p => Connectors.OrcSource(str(p, "uri"),
       p.getOrElse("ns", "orc").toString)),
     "mongodb" -> (p => Connectors.MongoSource(str(p, "uri"),
       collection = p.get("collection").map(_.toString),
-      nsRegex = p.getOrElse("ns", ".*").toString,
+      nsRegex = ns(p),
       collectionFilters = p.get("collection_filters").map(_.toString),
       resumeAfter = p.get("resume_after"))),
     "jdbc" -> jdbcSource, "postgres" -> jdbcSource, "mysql" -> jdbcSource,
-    // the tail phase of the postgres adaptor: a test_decoding log parsed
-    // into CDC envelopes. Batch `read` drains the log; `stream` is the
-    // tail loop (PgDecoding.stream) for the streaming pipeline drive.
-    "postgres-cdc" -> (p => new Connectors.StreamableSource {
-      def read(spark: org.apache.spark.sql.SparkSession): DataFrame =
-        graft.sources.PgDecoding.changes(spark.read.text(str(p, "uri")),
-          p.getOrElse("ns", ".*").toString)
-      def stream(spark: org.apache.spark.sql.SparkSession): DataFrame =
-        graft.sources.PgDecoding.stream(spark, str(p, "uri"),
-          p.getOrElse("ns", ".*").toString)
-    }),
-    // the tail phase of the mongodb adaptor: an oplog.rs document log
-    // parsed into CDC envelopes. Batch `read` drains the log; `stream` is
-    // the tail loop (MongoOplog.stream). With `db_dir`+`collection`,
+    // the tail adaptors: each is one ChangeLog.LogSource over its text
+    // log — batch `read` drains the log, `stream` tails it for the
+    // streaming pipeline drive. postgres: a test_decoding log.
+    "postgres-cdc" -> (p => LogSource(text =>
+      graft.sources.PgDecoding.changes(text.lines(str(p, "uri")), ns(p)))),
+    // mongodb: an oplog.rs document log. With `db_dir`+`collection`,
     // update envelopes are resolved against current collection state
     // (getOriginalDoc, reader.go:296-315) — in the streaming form that is
     // a stream-static join whose static side re-reads the LIVE collection
     // every epoch, exactly the reference's refetch-at-apply-time; without
     // it they carry the o2 id pointer (MongoSyncSink resolves instead).
-    "mongodb-oplog" -> (p => new Connectors.StreamableSource {
+    "mongodb-oplog" -> (p => LogSource { text =>
       // BigDecimal, not a double hop: a raw 64-bit MongoTimestamp
       // ((secs<<32)|ordinal) exceeds double's 2^53 integer range and
       // would round the $gte cursor, skipping events (reader.go:229-230)
-      private def since: Option[Long] =
-        p.get("since_ts").map(v => BigDecimal(v.toString).toLong)
-      private def resolved(spark: org.apache.spark.sql.SparkSession,
-          env: DataFrame): DataFrame =
-        p.get("db_dir") match {
-          case Some(db) =>
-            val coll = spark.read.format("graft-mongo")
-              .option("collection", str(p, "collection")).load(db.toString)
-            graft.sources.MongoOplog.resolveUpdates(env, coll)
-          case None => env
-        }
-      def read(spark: org.apache.spark.sql.SparkSession): DataFrame =
-        resolved(spark, graft.sources.MongoOplog.changes(
-          spark.read.text(str(p, "uri")),
-          p.getOrElse("ns", ".*").toString, sinceTs = since))
-      def stream(spark: org.apache.spark.sql.SparkSession): DataFrame =
-        resolved(spark, graft.sources.MongoOplog.stream(spark,
-          str(p, "uri"), p.getOrElse("ns", ".*").toString, sinceTs = since))
+      val since = p.get("since_ts").map(v => BigDecimal(v.toString).toLong)
+      val env = graft.sources.MongoOplog.changes(text.lines(str(p, "uri")),
+        ns(p), sinceTs = since)
+      p.get("db_dir").fold(env)(db => graft.sources.MongoOplog.resolveUpdates(
+        env, text.spark.read.format("graft-mongo")
+          .option("collection", str(p, "collection")).load(db.toString)))
     }),
-    // the tail phase of the mysql adaptor: a textualized binlog
-    // RowsEvent log. Batch `read` drains the log; `stream` is the binlog
-    // syncer loop (MysqlBinlog.stream). `columns` =
+    // mysql: a textualized binlog RowsEvent log. `columns` =
     // {"db.table": [["name","data_type"], ...]} in ordinal order (the
     // INFORMATION_SCHEMA query of tailer.go:281-303). With
     // `decode_table`, envelopes decode into typed columns for that
     // table's schema (mysql data_types → Spark types) so a relational
     // sink (e.g. the JDBC upsert writer) can apply them directly.
-    "mysql-binlog" -> (p => new Connectors.StreamableSource {
-      private def cols: Map[String, Seq[(String, String)]] =
-        p.get("columns") match {
-          case Some(m: Map[_, _]) => m.map { case (k, v) =>
-            k.toString -> (v match {
-              case s: Seq[_] => s.collect { case pair: Seq[_]
-                  if pair.size >= 2 =>
+    "mysql-binlog" -> (p => LogSource { text =>
+      val cols: Map[String, Seq[(String, String)]] = p.get("columns") match {
+        case Some(m: Map[_, _]) => m.map { case (k, v) =>
+          k.toString -> (v match {
+            case s: Seq[_] => s.collect {
+              case pair: Seq[_] if pair.size >= 2 =>
                 (pair.head.toString, pair(1).toString)
-              }
-              case _ => Seq.empty[(String, String)]
-            })
-          }.toMap
-          case _ => Map.empty
-        }
-      private def decoded(env: DataFrame): DataFrame =
-        p.get("decode_table") match {
-          case Some(t) =>
-            val tcols = cols.getOrElse(t.toString,
-              throw new IllegalArgumentException(
-                s"decode_table '$t' not in columns map"))
-            graft.sources.MysqlBinlog.typed(env,
-              graft.sources.MysqlBinlog.sparkSchema(tcols))
-          case None => env
-        }
-      def read(spark: org.apache.spark.sql.SparkSession): DataFrame =
-        decoded(graft.sources.MysqlBinlog.changes(
-          spark.read.text(str(p, "uri")), cols,
-          p.getOrElse("ns", ".*").toString))
-      def stream(spark: org.apache.spark.sql.SparkSession): DataFrame =
-        decoded(graft.sources.MysqlBinlog.stream(spark, str(p, "uri"),
-          cols, p.getOrElse("ns", ".*").toString))
+            }
+            case _ => Seq.empty[(String, String)]
+          })
+        }.toMap
+        case _ => Map.empty
+      }
+      val env = graft.sources.MysqlBinlog.changes(text.lines(str(p, "uri")),
+        cols, ns(p))
+      p.get("decode_table").fold(env) { t =>
+        val tcols = cols.getOrElse(t.toString,
+          throw new IllegalArgumentException(
+            s"decode_table '$t' not in columns map"))
+        Transforms.decode(graft.sources.MysqlBinlog.sparkSchema(tcols))(env)
+      }
     }),
     // rethink adaptor: Copy-phase snapshot (TableList + ns filter); the
-    // changefeed tail is graft.sources.Rethink.changefeed
-    "rethinkdb" -> (p => new Source {
-      def read(spark: org.apache.spark.sql.SparkSession): DataFrame =
-        graft.sources.Rethink.snapshot(spark, str(p, "uri"),
-          p.getOrElse("ns", ".*").toString)
-    }),
-    // queue adaptor: batch `read` drains pending messages; `stream` is
-    // the pure-Sync consumer (ack = checkpoint, Queue.stream)
-    "rabbitmq" -> (p => new Connectors.StreamableSource {
-      def read(spark: org.apache.spark.sql.SparkSession): DataFrame =
-        graft.sources.Queue.pending(spark, str(p, "uri"),
-          p.getOrElse("ns", ".*").toString)
-      def stream(spark: org.apache.spark.sql.SparkSession): DataFrame =
-        graft.sources.Queue.stream(spark, str(p, "uri"),
-          p.getOrElse("ns", ".*").toString)
-    })
+    // changefeed tail is graft.sources.Rethink.changefeed. Params are
+    // read at read time: a config without `uri` parses, and its run fails
+    "rethinkdb" -> (p => ((spark: org.apache.spark.sql.SparkSession) =>
+      graft.sources.Rethink.snapshot(spark, str(p, "uri"), ns(p))): Source),
+    // queue adaptor: `stream` is the pure-Sync consumer (ack =
+    // checkpoint), batch `read` drains the pending messages
+    "rabbitmq" -> (p => LogSource(
+      graft.sources.Queue.changes(_, str(p, "uri"), ns(p))))
   )
+
+  /** The `ns` regex param of a listing or tail source (all by default). */
+  private def ns(p: Params): String = p.getOrElse("ns", ".*").toString
 
   /** Live JDBC source (embedded Derby offline; any JDBC URL deployed):
     * `table` → single-table snapshot (optionally resumable via
@@ -416,7 +380,7 @@ object Registry {
         resumeAfter = p.get("resume_after"),
         options = opts)
       case None => graft.sources.Jdbc.JdbcMultiTableSource(str(p, "uri"),
-        p.getOrElse("ns", ".*").toString, options = opts)
+        ns(p), options = opts)
     }
   }
 

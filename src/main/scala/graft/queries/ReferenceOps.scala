@@ -211,8 +211,7 @@ object ReferenceOps {
         lit("}}")).as("value"))
       val schema = StructType(Seq(StructField("_id", LongType),
         StructField("user_id", LongType), StructField("value", DoubleType)))
-      graft.sources.MongoOplog.typed(
-          graft.sources.MongoOplog.changes(lines), schema)
+      Transforms.decode(schema)(graft.sources.MongoOplog.changes(lines))
         .select(col("_id"), col("user_id"), col("value"),
           col(graft.core.Envelope.TsCol).as("oplog_ts"))
         .orderBy("_id")
@@ -247,8 +246,8 @@ object ReferenceOps {
         ("event_id", "bigint"), ("user_id", "bigint"),
         ("value", "double"), ("event_type", "varchar")))
       val schema = graft.sources.MysqlBinlog.sparkSchema(columns("db.events"))
-      graft.sources.MysqlBinlog.typed(
-          graft.sources.MysqlBinlog.changes(lines, columns), schema)
+      Transforms.decode(schema)(
+          graft.sources.MysqlBinlog.changes(lines, columns))
         .select(col("event_id"), col("user_id"), col("value"),
           col("event_type"),
           col(graft.core.Envelope.SeqCol).as("seq"),
@@ -282,9 +281,8 @@ object ReferenceOps {
         StructField("user_id", LongType),
         StructField("value", DoubleType),
         StructField("event_type", StringType)))
-      graft.sources.PgDecoding.typed(
-          graft.sources.PgDecoding.changes(lines, "^public\\.events$"),
-          schema)
+      Transforms.decode(schema)(
+          graft.sources.PgDecoding.changes(lines, "^public\\.events$"))
         .select(col("event_id"), col("user_id"), col("value"),
           col("event_type"), col(Envelope.OpCol).as("op"),
           col(Envelope.NsCol).as("ns"))
@@ -325,8 +323,8 @@ object ReferenceOps {
         StructField("id", LongType), StructField("user_id", LongType),
         StructField("value", DoubleType),
         StructField("event_type", StringType)))
-      graft.sources.Rethink.typed(
-          graft.sources.Rethink.classify(lines, "events"), schema)
+      Transforms.decode(schema, wire = from_json)(
+          graft.sources.Rethink.classify(lines, "events"))
         .select(col("id"), col("user_id"), col("value"),
           col("event_type"), col(Envelope.OpCol).as("op"),
           col(Envelope.NsCol).as("ns"))

@@ -25,8 +25,10 @@ object Connectors {
   /** A source with a Sync-phase tail: `stream` returns the SAME envelope
     * shape as `read`, but as a streaming DataFrame (readStream). The
     * config-driven pipeline drive (`PipelineSpec.runStream`) requires
-    * this trait — it is the registry's spelling of the reference's
-    * tail-capable adaptors (oplog, binlog, test_decoding, queue). */
+    * this trait. The reference's tail-capable adaptors (oplog, binlog,
+    * test_decoding, queue) are each one `ChangeLog.LogSource`: the one
+    * change-log reader turns a text log into Sync envelopes, and `read`
+    * and `stream` differ only in `spark.read` vs `spark.readStream`. */
   trait StreamableSource extends Source {
     def stream(spark: SparkSession): DataFrame
   }
@@ -120,12 +122,8 @@ object Connectors {
   final case class MultiTableSource(dir: String, tables: Seq[String],
       nsRegex: String = ".*") extends Source {
     def read(spark: SparkSession): DataFrame = {
-      // find() semantics, same as Transforms.nsFilter's rlike — wrapping
-      // the user pattern in .*…* would break alternation ('^a|^b')
-      val re = java.util.regex.Pattern.compile(
-        nsRegex.stripPrefix("/").stripSuffix("/"))
-      val chosen = tables.filter(t => re.matcher(t).find())
-      require(chosen.nonEmpty, s"no table matches /${re.pattern()}/")
+      val chosen = tables.filter(Envelope.nsMatches(nsRegex))
+      require(chosen.nonEmpty, s"no table matches $nsRegex")
       chosen.map(t => TableSource(dir, t).read(spark))
         .reduce(_.unionByName(_, allowMissingColumns = true))
     }

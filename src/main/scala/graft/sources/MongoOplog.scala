@@ -1,12 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.json4s._
 
 import graft.core.Envelope
-import graft.functions.Mejson
 
 /** MongoDB oplog tailer — the reference's CDC half of the flagship
   * adaptor (`adaptor/mongodb/reader.go:216-333`) made format-real over an
@@ -43,9 +42,9 @@ import graft.functions.Mejson
   *   - Mode is Sync for every row (`reader.go:269-272`); the Copy phase
   *     is `Connectors.MongoSource` / the `graft-mongo` DSv2 scan.
   *
-  * The parse is a `Dataset.flatMap`, so the SAME code runs batch
-  * (fixtures, backfill) and streaming (`stream(spark, dir)` = the tail
-  * loop of `reader.go:234-243`, expressed as a file stream).
+  * The parse runs inside `ChangeLog.envelopes`, so the SAME code runs
+  * batch (fixtures, backfill) and streaming (the tail loop of
+  * `reader.go:234-243`, expressed as a file stream).
   */
 object MongoOplog {
 
@@ -127,44 +126,28 @@ object MongoOplog {
     org.json4s.jackson.JsonMethods.parseOpt(valueJson).flatMap(canonId)
 
   /** Parse a text frame of oplog lines into CDC envelopes
-    * (op, ts, ns, mode, seq, data). Works on `spark.read.text` and
-    * `spark.readStream.text` frames alike. Update envelopes carry the
-    * `o2` id pointer as `data` — resolve them with `resolveUpdates`
-    * before applying. `sinceTs` is the raw-MongoTimestamp resume cursor
+    * (op, ts, ns, mode, seq, data) — `ChangeLog.envelopes`, so
+    * `spark.read.text` and `spark.readStream.text` frames alike (the tail
+    * loop of `reader.go:234-243` as a file stream). Update envelopes
+    * carry the `o2` id pointer as `data` — resolve them with
+    * `resolveUpdates` before applying; the reference also resolves at
+    * apply time, against the LIVE collection (`reader.go:296-315`).
+    * `sinceTs` is the raw-MongoTimestamp resume cursor
     * (`reader.go:229-230`, $gte semantics). */
   def changes(lines: DataFrame, nsRegex: String = ".*",
       sinceTs: Option[Long] = None): DataFrame = {
-    import lines.sparkSession.implicits._
-    val re = nsRegex.stripPrefix("/").stripSuffix("/")
     val since = sinceTs.getOrElse(Long.MinValue)
-    val parsed = lines.select(col("value").cast("string")).as[String]
-      .flatMap { line =>
-        parseLine(line).filter(validOp).filter(_.ts >= since).map { e =>
-          val (op, data) = e.op match {
-            case "i" => (Envelope.Op.Insert, e.o)
-            case "d" => (Envelope.Op.Delete, e.o)
-            case "u" => (Envelope.Op.Update, e.o2) // id pointer; refetch
-          }
-          (op, e.ts >>> 32, e.ns, e.ts, data)
+    ChangeLog.envelopes(lines, Some(nsRegex), ordered = true) { line =>
+      parseLine(line).filter(validOp).filter(_.ts >= since).map { e =>
+        val (op, data) = e.op match {
+          case "i" => (Envelope.Op.Insert, e.o)
+          case "d" => (Envelope.Op.Delete, e.o)
+          case "u" => (Envelope.Op.Update, e.o2) // id pointer; refetch
         }
+        ChangeLog.Entry(op, e.ts >>> 32, e.ns, e.ts, data)
       }
-    parsed.toDF(Envelope.OpCol, Envelope.TsCol, Envelope.NsCol,
-      Envelope.SeqCol, "data")
-      .filter(col(Envelope.NsCol).rlike(re))
-      .select(col(Envelope.OpCol), col(Envelope.TsCol), col(Envelope.NsCol),
-        lit(Envelope.Mode.Sync).as(Envelope.ModeCol), col(Envelope.SeqCol),
-        col("data"))
+    }
   }
-
-  /** The tail loop as a stream (`reader.go:234-243`'s iterate/timeout/
-    * requery cycle → a file stream over the oplog dir). Compose with
-    * `resolveUpdates` + `Upsert.applyCdc` inside `foreachBatch` — the
-    * reference also resolves updates at apply time, against the LIVE
-    * collection (`reader.go:296-315`). */
-  def stream(spark: SparkSession, dir: String, nsRegex: String = ".*",
-      sinceTs: Option[Long] = None,
-      options: Map[String, String] = Map.empty): DataFrame =
-    changes(spark.readStream.options(options).text(dir), nsRegex, sinceTs)
 
   /** `getOriginalDoc` at scale (`reader.go:296-315`): update envelopes
     * carry only the `o2` `{_id}` pointer; join them against the CURRENT
@@ -197,15 +180,6 @@ object MongoOplog {
       .drop("__k")
   }
 
-  /** Decode the extended-JSON `data` column into typed per-collection
-    * columns (post-`resolveUpdates` for updates). */
-  def typed(envelopes: DataFrame, schema: StructType): DataFrame =
-    envelopes.withColumn("doc",
-        Mejson.from_mejson(col("data"), schema: DataType))
-      .select(Seq(col(Envelope.OpCol), col(Envelope.TsCol),
-        col(Envelope.NsCol), col(Envelope.ModeCol), col(Envelope.SeqCol)) ++
-        schema.fieldNames.toSeq.map(f => col(s"doc.$f").as(f)): _*)
-
   /** Snapshot-then-tail end state in one call: resolve updates, decode,
     * and `Upsert.applyCdc` ordered by the oplog's own total order
     * (`seq` = the raw MongoTimestamp). `base` is the Copy-phase snapshot
@@ -215,10 +189,7 @@ object MongoOplog {
     * current collection read; it defaults to `base` for pure
     * replay-from-log scenarios where no fresher state exists. */
   def applyCdc(base: DataFrame, envelopes: DataFrame, schema: StructType,
-      current: Option[DataFrame] = None): DataFrame = {
-    val resolved = resolveUpdates(envelopes, current.getOrElse(base))
-    val batch = typed(resolved, schema).drop(Envelope.ModeCol)
-    graft.operators.Upsert.applyCdc(base, batch, "_id",
-      Seq(col(Envelope.SeqCol))).drop(Envelope.SeqCol)
-  }
+      current: Option[DataFrame] = None): DataFrame =
+    ChangeLog.applyCdc(base,
+      resolveUpdates(envelopes, current.getOrElse(base)), schema, "_id")
 }

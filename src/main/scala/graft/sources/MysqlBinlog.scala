@@ -2,8 +2,7 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
 
@@ -62,9 +61,8 @@ import graft.functions.Mejson
   *     Go's zero time; null is the engine's honest spelling, same
   *     divergence as the pg parser); everything else → string.
   *
-  * The parse is a `Dataset.flatMap`: the SAME code runs batch and
-  * streaming (`stream(spark, dir)` = the binlog syncer loop as a file
-  * stream).
+  * The parse runs inside `ChangeLog.envelopes`: the SAME code runs
+  * batch and streaming (the binlog syncer loop as a file stream).
   */
 object MysqlBinlog {
 
@@ -295,34 +293,18 @@ object MysqlBinlog {
     * LogPos resets at each ROTATE, so the file ordinal carries the
     * cross-rotation order), row index preserves intra-event apply order.
     * `ts` = the EventHeader timestamp (seconds). Order `Upsert.applyCdc`
-    * by `seq`, exactly like `MongoOplog.seq`. */
+    * by `seq`, exactly like `MongoOplog.seq`. `nsRegex` is filterFn
+    * (`tailer.go:246-251`). */
   def changes(lines: DataFrame,
       columns: Map[String, Seq[(String, String)]],
-      nsRegex: String = ".*"): DataFrame = {
-    import lines.sparkSession.implicits._
-    val re = nsRegex.stripPrefix("/").stripSuffix("/")
-    val parsed = lines.select(col("value").cast("string")).as[String]
-      .flatMap { line =>
-        processEvent(line, columns).toSeq.flatMap(ev =>
-          ev.docs.zipWithIndex.map { case (doc, i) =>
-            (ev.op, ev.ts, ev.ns, rowSeq(ev.file, ev.pos, i),
-              Mejson.write(doc))
-          })
-      }
-    parsed.toDF(Envelope.OpCol, Envelope.TsCol, Envelope.NsCol,
-      Envelope.SeqCol, "data")
-      .filter(col(Envelope.NsCol).rlike(re)) // filterFn (tailer.go:246-251)
-      .select(col(Envelope.OpCol), col(Envelope.TsCol), col(Envelope.NsCol),
-        lit(Envelope.Mode.Sync).as(Envelope.ModeCol), col(Envelope.SeqCol),
-        col("data"))
-  }
-
-  /** The binlog syncer loop as a file stream. */
-  def stream(spark: SparkSession, dir: String,
-      columns: Map[String, Seq[(String, String)]],
-      nsRegex: String = ".*",
-      options: Map[String, String] = Map.empty): DataFrame =
-    changes(spark.readStream.options(options).text(dir), columns, nsRegex)
+      nsRegex: String = ".*"): DataFrame =
+    ChangeLog.envelopes(lines, Some(nsRegex), ordered = true) { line =>
+      processEvent(line, columns).toSeq.flatMap(ev =>
+        ev.docs.zipWithIndex.map { case (doc, i) =>
+          ChangeLog.Entry(ev.op, ev.ts, ev.ns, rowSeq(ev.file, ev.pos, i),
+            Mejson.write(doc))
+        })
+    }
 
   /** Spark schema for one table's INFORMATION_SCHEMA (name, data_type)
     * list, mirroring `casifyValue`'s output types: int family → long,
@@ -340,22 +322,11 @@ object MysqlBinlog {
       org.apache.spark.sql.types.StructField(name, t)
     })
 
-  /** Decode the extended-JSON `data` column into typed per-table columns. */
-  def typed(envelopes: DataFrame, schema: StructType): DataFrame =
-    envelopes.withColumn("doc",
-        Mejson.from_mejson(col("data"), schema: DataType))
-      .select(Seq(col(Envelope.OpCol), col(Envelope.TsCol),
-        col(Envelope.NsCol), col(Envelope.ModeCol), col(Envelope.SeqCol)) ++
-        schema.fieldNames.toSeq.map(f => col(s"doc.$f").as(f)): _*)
-
   /** Apply a parsed binlog batch to a base table in binlog order: decode
     * and `Upsert.applyCdc` ordered by `seq` (binlog position), so a
     * delete-then-insert for one id within a batch resolves to the insert,
     * matching the reference's sequential apply (`tailer.go:313-352`). */
   def applyCdc(base: DataFrame, envelopes: DataFrame,
-      schema: StructType, idCol: String): DataFrame = {
-    val batch = typed(envelopes, schema).drop(Envelope.ModeCol)
-    graft.operators.Upsert.applyCdc(base, batch, idCol,
-      Seq(col(Envelope.SeqCol))).drop(Envelope.SeqCol)
-  }
+      schema: StructType, idCol: String): DataFrame =
+    ChangeLog.applyCdc(base, envelopes, schema, idCol)
 }

@@ -2,9 +2,7 @@ package graft.sources
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.DataFrame
 
 import graft.core.Envelope
 import graft.functions.Mejson
@@ -41,10 +39,10 @@ import graft.functions.Mejson
   *
   * Documents leave the parser as extended-JSON strings (the `data`
   * column) so heterogeneous tables share one schema — decode per-table
-  * with `typed(df, schema)` (`Mejson.from_mejson`). The transform is a
-  * `Dataset.map`, so the SAME code runs batch (fixtures, backfill) and
-  * streaming (`stream(spark, dir)` = the 1 s poll loop of
-  * `tailer.go:57`, expressed as a file stream).
+  * with `Transforms.decode(schema)`. The parse runs inside
+  * `ChangeLog.envelopes`, so the SAME code runs batch (fixtures,
+  * backfill) and streaming (the 1 s poll loop of `tailer.go:57`,
+  * expressed as a file stream).
   */
 object PgDecoding {
 
@@ -214,38 +212,16 @@ object PgDecoding {
   // ---- DataFrame surface (batch AND streaming) ----
 
   /** Parse a text frame of test_decoding lines into CDC envelopes
-    * (op, ts, ns, mode, data) with `data` as extended JSON. Works on both
-    * `spark.read.text` and `spark.readStream.text` frames. `nsRegex` is
-    * the listing-level filterFn (`tailer.go:103-106`), applied after
-    * parse like the reference. */
-  def changes(lines: DataFrame, nsRegex: String = ".*"): DataFrame = {
-    import lines.sparkSession.implicits._
-    val re = nsRegex.stripPrefix("/").stripSuffix("/")
-    val parsed: Dataset[(String, String, String)] =
-      lines.select(col("value").cast("string")).as[String]
-        .flatMap(parseLine(_).map(c => (c.op, c.ns, Mejson.write(c.doc))))
-    parsed.toDF(Envelope.OpCol, Envelope.NsCol, "data")
-      .filter(col(Envelope.NsCol).rlike(re))
-      .select(col(Envelope.OpCol), lit(0L).as(Envelope.TsCol),
-        col(Envelope.NsCol), lit(Envelope.Mode.Sync).as(Envelope.ModeCol),
-        col("data"))
-  }
-
-  /** The tail phase as a stream: the reference's 1 s poll loop over the
-    * slot (`tailer.go:57`) becomes a file stream over the decoding log.
-    * Mode is Sync for every row (the snapshot/Copy phase is the batch
-    * reader — `tailer.go:35-47` runs the snapshot Reader first, then
-    * tails; compose with `Upsert.applyCdc` per epoch for the
-    * snapshot-then-tail end state). */
-  def stream(spark: SparkSession, dir: String, nsRegex: String = ".*",
-      options: Map[String, String] = Map.empty): DataFrame =
-    changes(spark.readStream.options(options).text(dir), nsRegex)
-
-  /** Decode the extended-JSON `data` column into typed per-table columns. */
-  def typed(envelopes: DataFrame, schema: StructType): DataFrame =
-    envelopes.withColumn("doc",
-        Mejson.from_mejson(col("data"), schema: DataType))
-      .select(Seq(col(Envelope.OpCol), col(Envelope.TsCol),
-        col(Envelope.NsCol), col(Envelope.ModeCol)) ++
-        schema.fieldNames.toSeq.map(f => col(s"doc.$f").as(f)): _*)
+    * (op, ts, ns, mode, data) with `data` as extended JSON
+    * (`ChangeLog.envelopes`). Works on both `spark.read.text` and
+    * `spark.readStream.text` frames — the stream is the reference's 1 s
+    * poll loop over the slot (`tailer.go:57`) as a file stream. `nsRegex`
+    * is the listing-level filterFn (`tailer.go:103-106`), applied after
+    * parse like the reference. Mode is Sync for every row; the Copy phase
+    * is the batch reader (`tailer.go:35-47`). */
+  def changes(lines: DataFrame, nsRegex: String = ".*"): DataFrame =
+    ChangeLog.envelopes(lines, Some(nsRegex)) { line =>
+      parseLine(line).map(c =>
+        ChangeLog.Entry(c.op, 0L, c.ns, 0L, Mejson.write(c.doc)))
+    }
 }

@@ -1,8 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.core.Envelope
 import graft.sources.Connectors.Sink
@@ -38,36 +37,19 @@ import graft.sources.Connectors.Sink
   */
 object Queue {
 
-  /** The management-API queue listing (`reader.go:59-101`): queue dirs
-    * under the root, regex-filtered (find() semantics like nsFilter). */
-  def listQueues(root: String, nsRegex: String = ".*"): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val p = java.nio.file.Paths.get(root)
-    require(java.nio.file.Files.isDirectory(p), s"not a queue root: $root")
-    val re = java.util.regex.Pattern.compile(
-      nsRegex.stripPrefix("/").stripSuffix("/"))
-    val s = java.nio.file.Files.list(p)
-    try s.iterator().asScala
-      .filter(java.nio.file.Files.isDirectory(_))
-      .map(_.getFileName.toString)
-      .filter(q => re.matcher(q).find())
-      .toSeq.sorted
-    finally s.close()
-  }
-
-  /** Pure-Sync consumer stream over the listed queues: envelopes
-    * (op=insert, ts, ns=queue, mode=sync, data=JSON body). Listing is
-    * fixed at start; `options` pass through to the file source
+  /** The consumer over the listed queues (`ChangeLog.perSubdir`):
+    * envelopes (op=insert, ts, ns=queue, mode=sync, data=JSON body).
+    * A tailing text is the pure-Sync consumer stream; a draining one the
+    * batch drain of currently-pending messages (an operational peek —
+    * the reference has no batch mode for queues). The listing is fixed
+    * at start; the text's options pass through to the file source
     * (`maxFilesPerTrigger`, `cleanSource`, `sourceArchiveDir`, ...). */
-  def stream(spark: SparkSession, root: String, nsRegex: String = ".*",
-      options: Map[String, String] = Map.empty): DataFrame = {
-    val queues = listQueues(root, nsRegex)
-    require(queues.nonEmpty, s"no queue matches /$nsRegex/ under $root")
-    queues.map { q =>
-      spark.readStream
-        .options(options)
-        .option("recursiveFileLookup", "true")
-        .text(s"$root/$q")
+  def changes(text: ChangeLog.Text, root: String, nsRegex: String = ".*")
+      : DataFrame = {
+    val nested = text.copy(options =
+      text.options + ("recursiveFileLookup" -> "true"))
+    ChangeLog.perSubdir(root, nsRegex) { q =>
+      nested.lines(s"$root/$q")
         .select(
           lit(Envelope.Op.Insert).as(Envelope.OpCol),
           lit(0L).as(Envelope.TsCol),
@@ -75,31 +57,8 @@ object Queue {
           lit(Envelope.Mode.Sync).as(Envelope.ModeCol),
           col("value").as("data"))
         .filter(col("data").startsWith("{")) // undecodable → skip (reader.go:126-128)
-    }.reduce(_.unionByName(_))
+    }
   }
-
-  /** Batch drain of currently-pending messages (operational peek — the
-    * reference has no batch mode for queues; this is the engine's extra). */
-  def pending(spark: SparkSession, root: String, nsRegex: String = ".*")
-      : DataFrame = {
-    val queues = listQueues(root, nsRegex)
-    require(queues.nonEmpty, s"no queue matches /$nsRegex/ under $root")
-    queues.map { q =>
-      spark.read.option("recursiveFileLookup", "true").text(s"$root/$q")
-        .select(lit(Envelope.Op.Insert).as(Envelope.OpCol),
-          lit(0L).as(Envelope.TsCol), lit(q).as(Envelope.NsCol),
-          lit(Envelope.Mode.Sync).as(Envelope.ModeCol),
-          col("value").as("data"))
-        .filter(col("data").startsWith("{"))
-    }.reduce(_.unionByName(_))
-  }
-
-  /** Decode the JSON `data` bodies into typed columns. */
-  def typed(envelopes: DataFrame, schema: StructType): DataFrame =
-    envelopes.withColumn("doc", from_json(col("data"), schema: DataType))
-      .select(Seq(col(Envelope.OpCol), col(Envelope.TsCol),
-        col(Envelope.NsCol), col(Envelope.ModeCol)) ++
-        schema.fieldNames.toSeq.map(f => col(s"doc.$f").as(f)): _*)
 
   /** Publisher (`writer.go:34-56`): Insert/Update bodies only (deletes
     * ignored), exchange = the envelope ns, routing key static or from a
@@ -114,11 +73,8 @@ object Queue {
       val rk =
         if (keyInField) col(routingKey).cast("string")
         else lit(routingKey)
-      // the published body is msg.Data() alone (`writer.go:43-48`): strip
-      // the envelope columns AND the stream-phase marker `mode`
-      val docCols = publishable.columns
-        .filter(c => c != Envelope.OpCol && c != Envelope.TsCol &&
-          c != Envelope.NsCol && c != Envelope.ModeCol).toSeq
+      // the published body is msg.Data() alone (`writer.go:43-48`)
+      val docCols = Envelope.unwrap(publishable).columns.toSeq
       val bodies = publishable
         .withColumn("rk", coalesce(rk, lit("")))
         .select(col(Envelope.NsCol).as("__ex"), col("rk"),

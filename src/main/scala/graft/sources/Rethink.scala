@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.core.Envelope
 import graft.sources.Connectors.Sink
@@ -39,97 +39,59 @@ import graft.sources.Connectors.Sink
   */
 object Rethink {
 
-  /** `TableList()` + ns filter (`reader.go:81-103`). */
-  def listTables(root: String, nsRegex: String = ".*"): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val p = java.nio.file.Paths.get(root)
-    require(java.nio.file.Files.isDirectory(p), s"not a rethink db dir: $root")
-    val re = java.util.regex.Pattern.compile(
-      nsRegex.stripPrefix("/").stripSuffix("/"))
-    val s = java.nio.file.Files.list(p)
-    try s.iterator().asScala
-      .filter(java.nio.file.Files.isDirectory(_))
-      .map(_.getFileName.toString)
-      .filter(t => re.matcher(t).find())
-      .toSeq.sorted
-    finally s.close()
-  }
-
-  /** Copy-phase snapshot: per-table scans as ns-tagged insert envelopes
-    * (`reader.go:131-137`). Pass a schema at scale (inference costs a
-    * pass, as everywhere). */
+  /** Copy-phase snapshot: `TableList()` + ns filter (`reader.go:81-103`,
+    * `ChangeLog.subdirs`), then per-table scans as ns-tagged insert
+    * envelopes (`reader.go:131-137`). Pass a schema at scale (inference
+    * costs a pass, as everywhere). */
   def snapshot(spark: SparkSession, root: String, nsRegex: String = ".*",
-      schema: Option[StructType] = None): DataFrame = {
-    val tables = listTables(root, nsRegex)
-    require(tables.nonEmpty, s"no table matches /$nsRegex/ under $root")
-    tables.map { t =>
+      schema: Option[StructType] = None): DataFrame =
+    ChangeLog.perSubdir(root, nsRegex) { t =>
       val r = spark.read
       val df = schema.map(r.schema).getOrElse(r).json(s"$root/$t")
       Envelope.wrap(df, t).withColumn(Envelope.ModeCol,
         lit(Envelope.Mode.Copy))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
+    }
 
   /** Classify one feed's notifications (`reader.go:175-190`). Input: a
-    * text frame of `{error, old_val, new_val}` JSON lines; output: CDC
-    * envelopes with `data` = the carried document as a JSON string.
-    * Works batch and streaming (same `Dataset` ops). An error
-    * notification fails the task — the reference pushes it on `errc` and
-    * stops the feed. */
-  def classify(lines: DataFrame, table: String): DataFrame = {
-    import lines.sparkSession.implicits._
-    val parsed = lines.select(col("value").cast("string")).as[String]
-      .flatMap { line =>
-        org.json4s.jackson.JsonMethods.parseOpt(line) match {
-          case Some(j: org.json4s.JObject) =>
-            val err = j \ "error" match {
-              case org.json4s.JString(e) if e.nonEmpty => Some(e)
-              case _ => None
+    * text frame of `{error, old_val, new_val}` JSON lines, batch or
+    * streaming; output: CDC envelopes (`ChangeLog.envelopes`, ns = the
+    * table) with `data` = the carried document as a JSON string. An
+    * error notification fails the task — the reference pushes it on
+    * `errc` and stops the feed. */
+  def classify(lines: DataFrame, table: String): DataFrame =
+    ChangeLog.envelopes(lines, nsRegex = None) { line =>
+      org.json4s.jackson.JsonMethods.parseOpt(line) match {
+        case Some(j: org.json4s.JObject) =>
+          val err = j \ "error" match {
+            case org.json4s.JString(e) if e.nonEmpty => Some(e)
+            case _ => None
+          }
+          err.foreach(e => throw new IllegalStateException(
+            s"changefeed error on $table: $e")) // reader.go:176-177
+          def opt(f: String): Option[org.json4s.JValue] =
+            j \ f match {
+              case org.json4s.JNothing | org.json4s.JNull => None
+              case v => Some(v)
             }
-            err.foreach(e => throw new IllegalStateException(
-              s"changefeed error on $table: $e")) // reader.go:176-177
-            def opt(f: String): Option[org.json4s.JValue] =
-              j \ f match {
-                case org.json4s.JNothing | org.json4s.JNull => None
-                case v => Some(v)
-              }
-            val render = (v: org.json4s.JValue) =>
-              org.json4s.jackson.JsonMethods.compact(v)
-            (opt("old_val"), opt("new_val")) match {
-              case (Some(_), Some(nv)) => Some((Envelope.Op.Update, render(nv)))
-              case (None, Some(nv)) => Some((Envelope.Op.Insert, render(nv)))
-              case (Some(ov), None) => Some((Envelope.Op.Delete, render(ov)))
-              case (None, None) => None // state notifications etc: skip
-            }
-          case _ => None
-        }
+          val carried = (opt("old_val"), opt("new_val")) match {
+            case (Some(_), Some(nv)) => Some((Envelope.Op.Update, nv))
+            case (None, Some(nv)) => Some((Envelope.Op.Insert, nv))
+            case (Some(ov), None) => Some((Envelope.Op.Delete, ov))
+            case (None, None) => None // state notifications etc: skip
+          }
+          carried.map { case (op, doc) => ChangeLog.Entry(op, 0L, table, 0L,
+            org.json4s.jackson.JsonMethods.compact(doc)) }
+        case _ => None
       }
-    parsed.toDF(Envelope.OpCol, "data")
-      .select(col(Envelope.OpCol), lit(0L).as(Envelope.TsCol),
-        lit(table).as(Envelope.NsCol),
-        lit(Envelope.Mode.Sync).as(Envelope.ModeCol),
-        col("data"))
-  }
+    }
 
-  /** The tail phase: one streaming feed per table dir under
-    * `changesRoot`, unioned (`reader.go:61-71` spawns one sendChanges
-    * goroutine per table). */
-  def changefeed(spark: SparkSession, changesRoot: String,
-      nsRegex: String = ".*", options: Map[String, String] = Map.empty)
-      : DataFrame = {
-    val tables = listTables(changesRoot, nsRegex)
-    require(tables.nonEmpty, s"no feed matches /$nsRegex/ under $changesRoot")
-    tables.map { t =>
-      classify(spark.readStream.options(options).text(s"$changesRoot/$t"), t)
-    }.reduce(_.unionByName(_))
-  }
-
-  /** Decode the carried JSON documents into typed columns. */
-  def typed(envelopes: DataFrame, schema: StructType): DataFrame =
-    envelopes.withColumn("doc", from_json(col("data"), schema: DataType))
-      .select(Seq(col(Envelope.OpCol), col(Envelope.TsCol),
-        col(Envelope.NsCol), col(Envelope.ModeCol)) ++
-        schema.fieldNames.toSeq.map(f => col(s"doc.$f").as(f)): _*)
+  /** The tail phase: one feed per table dir under `changesRoot`, unioned
+    * (`reader.go:61-71` spawns one sendChanges goroutine per table); a
+    * tailing text streams it, a draining one reads it once. */
+  def changefeed(text: ChangeLog.Text, changesRoot: String,
+      nsRegex: String = ".*"): DataFrame =
+    ChangeLog.perSubdir(changesRoot, nsRegex)(t =>
+      classify(text.lines(s"$changesRoot/$t"), t))
 
   /** Conflict:"replace" writer (`writer.go:48-166`): applies an envelope
     * batch to `<root>/<table>/` as a replace-on-id upsert — insert and
@@ -175,7 +137,6 @@ object Rethink {
       val effective = graft.operators.Upsert.collapse("id", order)(writes)
       val survivors = Envelope.unwrap(
         effective.filter(col(Envelope.OpCol) =!= Envelope.Op.Delete))
-        .drop(Envelope.ModeCol)
       val dir = s"$root/$table"
       // read the current table with its OWN inferred schema: replace-on-id
       // must not strip fields from untouched documents just because this

@@ -132,9 +132,8 @@ object MongoDocs {
     require(java.nio.file.Files.isDirectory(dbDir),
       s"graft-mongo: $path is not a database directory")
     val single = Option(options.get("collection"))
-    val nsRe = java.util.regex.Pattern.compile(
-      Option(options.get("ns")).getOrElse(".*")
-        .stripPrefix("/").stripSuffix("/"))
+    val nsMatches = graft.core.Envelope.nsMatches(
+      Option(options.get("ns")).getOrElse(".*"))
     val s = java.nio.file.Files.list(dbDir)
     val collDirs =
       try s.iterator().asScala.filter(java.nio.file.Files.isDirectory(_))
@@ -142,7 +141,7 @@ object MongoDocs {
       finally s.close()
     val chosen = collDirs.filter { c =>
       !c.startsWith("system.") &&
-      single.map(_ == c).getOrElse(nsRe.matcher(c).find())
+      single.map(_ == c).getOrElse(nsMatches(c))
     }
     chosen.map { c =>
       val cs = java.nio.file.Files.list(dbDir.resolve(c))

@@ -95,8 +95,8 @@ class MongoOplogSpec extends SparkSpec {
       .mkString("\n").getBytes)
 
     var state = snapshot
-    val q = MongoOplog.stream(spark, s"$tmp/oplog", "^db\\.users$",
-        options = Map("maxFilesPerTrigger" -> "1"))
+    val q = MongoOplog.changes(spark.readStream.option("maxFilesPerTrigger", "1")
+        .text(s"$tmp/oplog"), "^db\\.users$")
       .writeStream.trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$tmp/ckpt")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -117,7 +117,7 @@ class MongoOplogSpec extends SparkSpec {
       (4L, "dee", 40.0)))
     // restart replays nothing: state unchanged after a second drive
     val before = dump(state)
-    val q2 = MongoOplog.stream(spark, s"$tmp/oplog", "^db\\.users$")
+    val q2 = MongoOplog.changes(spark.readStream.text(s"$tmp/oplog"), "^db\\.users$")
       .writeStream.trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$tmp/ckpt")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>

@@ -62,7 +62,7 @@ class MongoSyncSpec extends SparkSpec {
     // Sync phase: tail the oplog; per epoch, resolve updates against the
     // LIVE source, apply to the target state, and replace-write the
     // target collection — at-least-once, idempotent per batch
-    val q = MongoOplog.stream(spark, s"$work/oplog", "^db\\.users$")
+    val q = MongoOplog.changes(spark.readStream.text(s"$work/oplog"), "^db\\.users$")
       .writeStream.trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$work/ckpt")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -90,7 +90,7 @@ class MongoSyncSpec extends SparkSpec {
       (4L, "dee", 40.0)))
 
     // restart: the checkpoint replays nothing; the target is unchanged
-    val q2 = MongoOplog.stream(spark, s"$work/oplog", "^db\\.users$")
+    val q2 = MongoOplog.changes(spark.readStream.text(s"$work/oplog"), "^db\\.users$")
       .writeStream.trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$work/ckpt")
       .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>

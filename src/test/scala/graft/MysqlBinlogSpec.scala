@@ -105,7 +105,7 @@ class MysqlBinlogSpec extends SparkSpec {
     // typed decode round-trips through the mejson envelope
     val schema = StructType(Seq(StructField("recipe_id", LongType),
       StructField("recipe_name", StringType)))
-    val typed = MysqlBinlog.typed(env, schema)
+    val typed = graft.functions.Transforms.decode(schema)(env)
     assert(typed.filter(col("op") === "update")
       .select("recipe_name").head.getString(0) == "Nachos")
     // ns filter (tailer.go:246-251)
@@ -128,8 +128,8 @@ class MysqlBinlogSpec extends SparkSpec {
       StructField("recipe_name", StringType)))
 
     var state = snapshot
-    val q = MysqlBinlog.stream(spark, s"$tmp/binlog", cols,
-        options = Map("maxFilesPerTrigger" -> "1"))
+    val q = MysqlBinlog.changes(spark.readStream.option("maxFilesPerTrigger", "1")
+        .text(s"$tmp/binlog"), cols)
       .writeStream.trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$tmp/ckpt")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>

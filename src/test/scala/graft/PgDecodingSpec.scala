@@ -97,7 +97,7 @@ class PgDecodingSpec extends SparkSpec {
     assert(rows.forall(_.getAs[String]("__mode") == "sync"))
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("name", StringType)))
-    val typed = PgDecoding.typed(env, schema).orderBy("id")
+    val typed = graft.functions.Transforms.decode(schema)(env).orderBy("id")
     assert(typed.select("id", "name").collect().map(r =>
       (r.getLong(0), r.getString(1))).toSeq == Seq((1L, "ann"), (2L, "bob")))
   }
@@ -124,12 +124,12 @@ class PgDecodingSpec extends SparkSpec {
 
     // stream drive: foreachBatch applies each epoch's changes in order
     var state = snapshot
-    val q = PgDecoding.stream(spark, s"$tmp/wal", nsRegex = "^public\\.users$",
-        options = Map("maxFilesPerTrigger" -> "1"))
+    val q = PgDecoding.changes(spark.readStream.option("maxFilesPerTrigger", "1")
+        .text(s"$tmp/wal"), nsRegex = "^public\\.users$")
       .writeStream.trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$tmp/ckpt")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val typed = PgDecoding.typed(batch, docSchema)
+        val typed = graft.functions.Transforms.decode(docSchema)(batch)
           .withColumn("seq", monotonically_increasing_id())
         state = Upsert.applyCdc(state, typed, "id", Seq(col("seq")))
           .localCheckpoint(true)
@@ -138,8 +138,8 @@ class PgDecodingSpec extends SparkSpec {
     q.awaitTermination()
 
     // batch apply of the same log in one shot
-    val allTyped = PgDecoding.typed(PgDecoding.changes(
-        spark.read.text(s"$tmp/wal"), "^public\\.users$"), docSchema)
+    val allTyped = graft.functions.Transforms.decode(docSchema)(PgDecoding.changes(
+        spark.read.text(s"$tmp/wal"), "^public\\.users$"))
       .withColumn("seq", monotonically_increasing_id())
     val batchEnd = Upsert.applyCdc(snapshot, allTyped, "id", Seq(col("seq")))
 

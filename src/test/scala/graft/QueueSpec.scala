@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.core.Envelope
-import graft.sources.Queue
+import graft.sources.{ChangeLog, Queue}
 
 /** Queue-shaped adaptor (`adaptor/rabbitmq`): pure-Sync consumer stream
   * (no Copy phase), ack ↔ checkpoint commit, JSON bodies, publisher that
@@ -30,8 +30,8 @@ class QueueSpec extends SparkSpec {
     mkQueue(root, "task_events", Seq("""{"id":1,"v":"a"}"""))
     mkQueue(root, "task_audit", Seq("""{"id":2,"v":"b"}"""))
     mkQueue(root, "other", Seq("""{"id":3,"v":"c"}"""))
-    assert(Queue.listQueues(root) == Seq("other", "task_audit", "task_events"))
-    assert(Queue.listQueues(root, "^task_") == Seq("task_audit", "task_events"))
+    assert(ChangeLog.subdirs(root) == Seq("other", "task_audit", "task_events"))
+    assert(ChangeLog.subdirs(root, "^task_") == Seq("task_audit", "task_events"))
   }
 
   test("pure-Sync consumer: ns-tagged envelopes, undecodable bodies skip") {
@@ -41,7 +41,7 @@ class QueueSpec extends SparkSpec {
     mkQueue(root, "users", Seq("""{"id":9,"v":"z"}"""))
     val ckpt = Files.createTempDirectory("graft-q-ck").toString
     var got: Seq[(String, String, String, String)] = Nil
-    val q = Queue.stream(spark, root)
+    val q = Queue.changes(ChangeLog.Text(spark, tail = true), root)
       .writeStream.trigger(Trigger.AvailableNow())
       .option("checkpointLocation", ckpt)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -55,7 +55,8 @@ class QueueSpec extends SparkSpec {
     assert(got.forall(_._1 == Envelope.Op.Insert)) // queues only insert
     assert(got.forall(_._3 == Envelope.Mode.Sync)) // pure Sync, no Copy
     assert(got.count(_._2 == "orders") == 2 && got.count(_._2 == "users") == 1)
-    val typed = Queue.typed(Queue.pending(spark, root), docSchema)
+    val typed = graft.functions.Transforms.decode(docSchema, wire = from_json)(
+      Queue.changes(ChangeLog.Text(spark, tail = false), root))
     assert(typed.agg(sum("id")).head.getLong(0) == 12L)
   }
 
@@ -65,11 +66,11 @@ class QueueSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-q-ack-ck").toString
     def drain(): Seq[Long] = {
       var ids: Seq[Long] = Nil
-      val q = Queue.stream(spark, root)
+      val q = Queue.changes(ChangeLog.Text(spark, tail = true), root)
         .writeStream.trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckpt)
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          ids = ids ++ Queue.typed(b, docSchema).select("id")
+          ids = ids ++ graft.functions.Transforms.decode(docSchema, wire = from_json)(b).select("id")
             .collect().map(_.getLong(0)).toSeq
           ()
         }.start()
@@ -94,10 +95,11 @@ class QueueSpec extends SparkSpec {
       .toDF("op", "ts", "ns", "id", "region", "v")
     Queue.QueuePublishSink(root, routingKey = "region", keyInField = true)
       .write(df)
-    assert(Queue.listQueues(root) == Seq("orders", "users"))
-    val back = Queue.typed(Queue.pending(spark, root),
+    assert(ChangeLog.subdirs(root) == Seq("orders", "users"))
+    val back = graft.functions.Transforms.decode(wire = from_json, schema =
       StructType(Seq(StructField("id", LongType),
-        StructField("region", StringType), StructField("v", StringType))))
+        StructField("region", StringType), StructField("v", StringType))))(
+        Queue.changes(ChangeLog.Text(spark, tail = false), root))
     // the delete was never published
     assert(back.count() == 3)
     assert(back.filter(col("v") === "dead").count() == 0)
@@ -116,12 +118,13 @@ class QueueSpec extends SparkSpec {
 
   test("publisher: ONE job for all exchanges; mode never leaks into bodies") {
     val root = Files.createTempDirectory("graft-q-one").toString
-    // envelopes as they arrive from Queue.stream / PgDecoding: with `mode`
+    // envelopes as they arrive from an ordered tail (binlog, oplog):
+    // with the `__mode` marker and the `__seq` order column
     val df = Seq(
-      ("insert", 0L, "orders", "sync", 1L, "eu"),
-      ("insert", 0L, "users", "sync", 2L, "us"),
-      ("update", 0L, "orders", "sync", 3L, "eu"))
-      .toDF("op", "ts", "ns", "__mode", "id", "region")
+      ("insert", 0L, "orders", "sync", 11L, 1L, "eu"),
+      ("insert", 0L, "users", "sync", 12L, 2L, "us"),
+      ("update", 0L, "orders", "sync", 13L, 3L, "eu"))
+      .toDF("op", "ts", "ns", "__mode", "__seq", "id", "region")
     val sc = spark.sparkContext
     sc.setJobGroup("qpub-one", "publisher job count", false)
     try Queue.QueuePublishSink(root, routingKey = "region",
@@ -135,10 +138,12 @@ class QueueSpec extends SparkSpec {
     assert(jobs == 1, s"expected ONE publish job for 2 exchanges, got $jobs")
     // the published body is msg.Data() alone (`writer.go:43-48`): no
     // envelope columns, no stream-phase marker
-    val bodies = Queue.pending(spark, root).select("data")
+    val bodies = Queue.changes(ChangeLog.Text(spark, tail = false), root)
+      .select("data")
       .collect().map(_.getString(0))
     assert(bodies.length == 3)
-    assert(bodies.forall(b => !b.contains("\"mode\"")), bodies.toSeq)
+    assert(bodies.forall(b => !b.contains("\"__mode\"")), bodies.toSeq)
+    assert(bodies.forall(b => !b.contains("\"__seq\"")), bodies.toSeq)
     assert(bodies.forall(b => !b.contains("\"op\"")), bodies.toSeq)
     assert(Files.isDirectory(Paths.get(root, "orders", "rk=eu")))
     assert(Files.isDirectory(Paths.get(root, "users", "rk=us")))
@@ -146,6 +151,7 @@ class QueueSpec extends SparkSpec {
     Queue.QueuePublishSink(root, routingKey = "region", keyInField = true)
       .write(Seq(("insert", 0L, "orders", "sync", 9L, "eu"))
         .toDF("op", "ts", "ns", "__mode", "id", "region"))
-    assert(Queue.pending(spark, root, "^orders$").count() == 3)
+    assert(Queue.changes(ChangeLog.Text(spark, tail = false), root,
+      "^orders$").count() == 3)
   }
 }

@@ -26,8 +26,8 @@ class RethinkSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-rt-snap").toString
     mkTable(root, "users", Seq("""{"id":1,"v":"a"}""", """{"id":2,"v":"b"}"""))
     mkTable(root, "audit_log", Seq("""{"id":9,"v":"z"}"""))
-    assert(Rethink.listTables(root) == Seq("audit_log", "users"))
-    assert(Rethink.listTables(root, "^users$") == Seq("users"))
+    assert(graft.sources.ChangeLog.subdirs(root) == Seq("audit_log", "users"))
+    assert(graft.sources.ChangeLog.subdirs(root, "^users$") == Seq("users"))
     val snap = Rethink.snapshot(spark, root, "^users$")
     assert(snap.count() == 2)
     assert(snap.select("op").distinct().collect().map(_.getString(0))
