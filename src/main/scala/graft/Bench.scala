@@ -411,6 +411,23 @@ object Bench {
       s""""distrust":$distrust,"sf":"$sf"}"""
   }
 
+  /** One off-clock run of query `name` over `dir` (a warm pass or an
+    * index build). A failure is reported, not swallowed — a stderr line
+    * and `phase:name` in `failed` — as it leaves its slot timing a cold
+    * or unbuilt path. */
+  def offClock(spark: org.apache.spark.sql.SparkSession, phase: String,
+      name: String, dir: String,
+      failed: scala.collection.mutable.Buffer[String] =
+        scala.collection.mutable.Buffer.empty): Unit =
+    SparkEntry.queries.get(name).foreach { fn =>
+      try fn(spark, dir).write.format("noop").mode("overwrite").save()
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $phase $name failed: $e")
+          failed += s"$phase:$name"
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // SPARK_GRAFT_BENCH_ONLY=a,b,c times a subset (spot benches, e.g. the
@@ -425,20 +442,7 @@ object Bench {
     val cpus = graft.tools.Sessions.defaultCpus
     val spark = graft.tools.Sessions.local("graft-bench")
 
-    // Off-clock failures are reported, not swallowed: a stderr line per
-    // failure and the (phase:query) names in the full record's
-    // `build_failed` list — a warm or index build that threw leaves its
-    // slot timing a cold or unbuilt path.
     val buildFailed = scala.collection.mutable.ArrayBuffer.empty[String]
-    def offClock(phase: String, name: String, dir: String): Unit =
-      SparkEntry.queries.get(name).foreach { fn =>
-        try fn(spark, dir).write.format("noop").mode("overwrite").save()
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $phase $name failed: $e")
-            buildFailed += s"$phase:$name"
-        }
-      }
 
     // warm the JVM/codegen/parquet paths with the same plan shapes at the
     // smallest SF, off the clock — measures steady-state, not first-JIT.
@@ -449,11 +453,12 @@ object Bench {
     // compilation finishes for the round-loop code paths.
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory)
-      for (_ <- 1 to 2; name <- headlineRun) offClock("warm", name, warmDir)
+      for (_ <- 1 to 2; name <- headlineRun)
+        offClock(spark, "warm", name, warmDir, buildFailed)
 
     // off-clock index build at the MEASURED sfDir (see indexBuildQueries)
     for (name <- indexBuildQueries.filter(headlineRun.contains))
-      offClock("index_build", name, sfDir)
+      offClock(spark, "index_build", name, sfDir, buildFailed)
 
     // ≥3 timed rounds, ROUND-ROBIN (q1..qn, q1..qn, ...) so slow
     // environment drift within the run lands on every query equally; the

@@ -38,7 +38,8 @@ final case class EsBulkSink(url: String, index: String, idCol: String,
   require(bulkActions > 0 && bulkBytes > 0, "flush thresholds must be > 0")
 
   def write(df: DataFrame): Unit = {
-    val docCols = df.columns.filter(c =>
+    // the document is the unwrapped row: no envelope field is indexed
+    val docCols = Envelope.unwrap(df).columns.filter(c =>
       c != idCol && !opCol.contains(c) && !parentCol.contains(c))
     val op = opCol.map(col).getOrElse(lit(Envelope.Op.Insert))
     // parent id is hoisted OUT of the doc like _id (`writer.go:90-94`)

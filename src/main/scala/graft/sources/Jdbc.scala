@@ -2,9 +2,9 @@ package graft.sources
 
 import java.sql.{Connection, DriverManager, ResultSet}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.jdbc.GraftDerbyDialect
 import graft.core.Envelope
 import graft.sources.Connectors.{Sink, Source}
 
@@ -34,13 +34,14 @@ import graft.sources.Connectors.{Sink, Source}
   * range queries (`partitionColumn`/`numPartitions`) so a 1000-executor
   * cluster reads 1000 disjoint slices concurrently — the reference reads
   * every table on one goroutine. The upsert sink compacts CDC to one final
-  * row per key in Spark (one shuffle) and then MERGEs per partition over
-  * its own connection; distinct keys mean partitions never contend on a
-  * row, and MERGE/DELETE are idempotent so at-least-once replay converges.
+  * row per key in Spark (one shuffle), stages those rows with Spark's JDBC
+  * writer (every partition in parallel), and applies the stage with one
+  * set-based MERGE and one DELETE in one driver transaction, so an epoch
+  * lands whole or not at all, and replay converges.
   *
-  * Tested against embedded Derby (`/opt/spark/jars/derby*.jar`) — the same
-  * code paths (DriverManager, metadata, MERGE, Spark JDBC relation) a
-  * deployed postgres/mysql URL would exercise.
+  * Tested against embedded Derby (`derby*.jar`, shipped with Spark) — the
+  * same code paths (DriverManager, metadata, MERGE, Spark JDBC relation) a
+  * deployed postgres URL would exercise.
   */
 object Jdbc {
 
@@ -93,22 +94,19 @@ object Jdbc {
       numPartitions: Int = 1,
       options: Map[String, String] = Map.empty) extends Source {
     def read(spark: SparkSession): DataFrame = {
-      var r = spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-      options.foreach { case (k, v) => r = r.option(k, v) }
-      partitionColumn.foreach { pc =>
+      val r = spark.read.format("jdbc")
+        .option("url", url).option("dbtable", table).options(options)
+      val base = partitionColumn.fold(r) { pc =>
         // bounds queried once up front; at scale pass them in via options
         val (lo, hi) = withConnection(url, options) { c =>
           val rs = c.createStatement().executeQuery(
             s"SELECT MIN($pc), MAX($pc) FROM $table")
           rs.next(); (rs.getLong(1), rs.getLong(2))
         }
-        r = r.option("partitionColumn", pc)
+        r.option("partitionColumn", pc)
           .option("lowerBound", lo).option("upperBound", hi)
           .option("numPartitions", numPartitions)
-      }
-      val base = r.load()
+      }.load()
       val resumed = (resumeIdCol, resumeAfter) match {
         case (Some(c), Some(v)) => base.filter(col(c) > lit(v))
         case _ => base
@@ -138,52 +136,35 @@ object Jdbc {
   final case class JdbcSink(url: String, table: String,
       mode: String = "append",
       options: Map[String, String] = Map.empty) extends Sink {
-    def write(df: DataFrame): Unit = {
-      var w = Envelope.unwrap(df).write.format("jdbc").mode(mode)
-        .option("url", url).option("dbtable", table)
-      options.foreach { case (k, v) => w = w.option(k, v) }
-      w.save()
-    }
+    def write(df: DataFrame): Unit =
+      save(Envelope.unwrap(df), url, table, mode, options)
   }
 
-  /** Rows per JDBC statement batch in the upsert sink. */
-  private val BatchSize = 500
-
-  private def sqlTypeOf(dt: DataType): Int = dt match {
-    case BooleanType => java.sql.Types.BOOLEAN
-    case ByteType => java.sql.Types.TINYINT
-    case ShortType => java.sql.Types.SMALLINT
-    case IntegerType => java.sql.Types.INTEGER
-    case LongType => java.sql.Types.BIGINT
-    case FloatType => java.sql.Types.REAL
-    case DoubleType => java.sql.Types.DOUBLE
-    case _: DecimalType => java.sql.Types.DECIMAL
-    case StringType => java.sql.Types.VARCHAR
-    case BinaryType => java.sql.Types.BINARY
-    case DateType => java.sql.Types.DATE
-    case TimestampType | TimestampNTZType => java.sql.Types.TIMESTAMP
-    case other => throw new IllegalArgumentException(
-      s"unsupported JDBC upsert column type: ${other.sql}")
+  /** Spark's JDBC writer: the one row path into a database. */
+  private def save(df: DataFrame, url: String, table: String, mode: String,
+      options: Map[String, String]): Unit = {
+    GraftDerbyDialect.install
+    df.write.format("jdbc").mode(mode)
+      .option("url", url).option("dbtable", table).options(options).save()
   }
 
   /** Idempotent CDC upsert sink — `adaptor/postgres/writer.go:33-160`'s
     * op dispatch (INSERT / UPDATE WHERE pk / DELETE WHERE pk), Spark-first:
     *
     *   1. compact the epoch to its LAST state per key in Spark
-    *      (`Upsert.applyCdc` algebra; one shuffle, map-side combinable) —
-    *      each key then reaches the database exactly once, so partitions
-    *      carry no cross-row ordering hazard;
-    *   2. per partition, one connection: ANSI `MERGE INTO` for surviving
-    *      rows, `DELETE WHERE pk` for deleted keys — both idempotent, so
-    *      at-least-once epoch replay converges (the reference gets the
-    *      same property from insert-dup→update,
-    *      `adaptor/mongodb/writer.go:53-59`).
+    *      (`Upsert.applyCdc` algebra; one shuffle, map-side combinable);
+    *   2. stage those rows and their op in `stage` (`<table>_graft_stage`,
+    *      created with the target's column types by `CREATE TABLE … AS
+    *      SELECT … WITH NO DATA`) through Spark's JDBC writer;
+    *   3. in ONE driver transaction, apply the stage with one `MERGE …
+    *      USING <stage>` and one `DELETE … WHERE EXISTS`, and drop it.
     *
-    * Limit: each partition commits on its own, so an epoch is not
-    * atomic, and the engine must survive concurrent MERGE connections.
-    * Embedded Derby does not: with 4 partitions an epoch of ~7,000 rows
-    * fails inside Derby and leaves about half of it committed (3,000
-    * rows pass).
+    * An epoch is atomic: a failed apply rolls back to the previous rows.
+    * A stage a crash left is dropped before the next one, and MERGE/DELETE
+    * are idempotent, so at-least-once replay converges (the reference:
+    * insert-dup→update, `adaptor/mongodb/writer.go:53-59`). One writer
+    * per target table. The engine needs `MERGE … USING <table>`: Derby,
+    * DB2 and PostgreSQL 15+ have it; MySQL does not.
     *
     * PKs come from connector metadata unless given. Expects envelope CDC
     * columns (op + data); `orderCols` break ties within the epoch
@@ -193,6 +174,9 @@ object Jdbc {
       idCols: Seq[String] = Nil,
       orderCols: Seq[String] = Nil,
       options: Map[String, String] = Map.empty) extends Sink {
+
+    /** The epoch's stage table. */
+    val stage: String = s"${table}_graft_stage"
 
     def write(rawDf: DataFrame): Unit = {
       val keys = if (idCols.nonEmpty) idCols else primaryKeys(url, table, options)
@@ -215,62 +199,53 @@ object Jdbc {
         .select(col(s"w.col${lastIdx + 1}.*"))
 
       val dataCols = Envelope.unwrap(finalOps).columns.toSeq
-      val nonKey = dataCols.filterNot(keys.contains)
-      val schema = finalOps.schema
-      val colType = schema.fields.map(f => f.name -> sqlTypeOf(f.dataType)).toMap
+      val nonKey = dataCols.filterNot(c => keys.exists(_.equalsIgnoreCase(c)))
+      val op = Envelope.OpCol
+      val on = keys.map(k => s"t.$k = s.$k").mkString(" AND ")
+      val live = s"s.$op <> '${Envelope.Op.Delete}'"
+      val update = if (nonKey.isEmpty) "" else
+        s"WHEN MATCHED AND $live THEN UPDATE SET " +
+          nonKey.map(c => s"$c = s.$c").mkString(", ") + " "
+      val merge = s"MERGE INTO $table t USING $stage s ON ($on) $update" +
+        s"WHEN NOT MATCHED AND $live THEN INSERT (${dataCols.mkString(", ")})" +
+        s" VALUES (${dataCols.map(c => s"s.$c").mkString(", ")})"
+      val delete = s"DELETE FROM $table t WHERE EXISTS (SELECT 1 FROM " +
+        s"$stage s WHERE s.$op = '${Envelope.Op.Delete}' AND $on)"
 
-      val mergeSql = {
-        val on = keys.map(k => s"t.$k = ?").mkString(" AND ")
-        val set = nonKey.map(c => s"$c = ?").mkString(", ")
-        val insCols = dataCols.mkString(", ")
-        val insVals = dataCols.map(_ => "?").mkString(", ")
-        val matched = if (nonKey.nonEmpty)
-          s"WHEN MATCHED THEN UPDATE SET $set " else ""
-        s"MERGE INTO $table t USING SYSIBM.SYSDUMMY1 ON ($on) " + matched +
-          s"WHEN NOT MATCHED THEN INSERT ($insCols) VALUES ($insVals)"
+      withConnection(url, options) { c =>
+        val st = c.createStatement()
+        dropLeftStage(c)
+        // the target's own column types; CASE drops NOT NULL from the
+        // non-key columns, so a delete that carries only its key stages
+        st.execute(s"CREATE TABLE $stage AS SELECT " + (keys ++
+          nonKey.map(c => s"CASE WHEN 1 = 0 THEN $c END AS $c") :+
+          s"CAST(NULL AS VARCHAR(16)) AS $op").mkString(", ") +
+          s" FROM $table WITH NO DATA")
+        save(finalOps.select((dataCols :+ op).map(col): _*), url, stage,
+          "append", options)
+        c.setAutoCommit(false)
+        try {
+          st.executeUpdate(merge)
+          st.executeUpdate(delete)
+          st.execute(s"DROP TABLE $stage")
+          c.commit()
+        } catch { case e: Throwable => c.rollback(); throw e }
       }
-      val deleteSql =
-        s"DELETE FROM $table WHERE " + keys.map(k => s"$k = ?").mkString(" AND ")
+    }
 
-      val urlL = url; val optionsL = options; val keysL = keys
-      val nonKeyL = nonKey; val dataColsL = dataCols
-      val mergeSqlL = mergeSql
-      val deleteSqlL = deleteSql
-      val opIdx = schema.fieldIndex(Envelope.OpCol)
-      val fieldIdx = schema.fieldNames.zipWithIndex.toMap
-
-      finalOps.foreachPartition { (rows: Iterator[Row]) =>
-        if (rows.nonEmpty) withConnection(urlL, optionsL) { conn =>
-          conn.setAutoCommit(false)
-          val merge = conn.prepareStatement(mergeSqlL)
-          val del = conn.prepareStatement(deleteSqlL)
-          var pendingMerge = 0
-          var pendingDel = 0
-          def bind(ps: java.sql.PreparedStatement, i: Int, row: Row,
-              c: String, types: Map[String, Int]): Unit = {
-            val v = row.get(fieldIdx(c))
-            if (v == null) ps.setNull(i, types(c)) else ps.setObject(i, v)
-          }
-          rows.foreach { row =>
-            if (row.getString(opIdx) == Envelope.Op.Delete) {
-              keysL.zipWithIndex.foreach { case (k, i) =>
-                bind(del, i + 1, row, k, colType) }
-              del.addBatch(); pendingDel += 1
-              if (pendingDel >= BatchSize) { del.executeBatch(); pendingDel = 0 }
-            } else {
-              var i = 1
-              keysL.foreach { k => bind(merge, i, row, k, colType); i += 1 }
-              nonKeyL.foreach { c => bind(merge, i, row, c, colType); i += 1 }
-              dataColsL.foreach { c => bind(merge, i, row, c, colType); i += 1 }
-              merge.addBatch(); pendingMerge += 1
-              if (pendingMerge >= BatchSize) { merge.executeBatch(); pendingMerge = 0 }
-            }
-          }
-          if (pendingMerge > 0) merge.executeBatch()
-          if (pendingDel > 0) del.executeBatch()
-          conn.commit()
-        }
+    /** Drops a stage a crash left behind, found through metadata: Derby
+      * has no `DROP TABLE IF EXISTS`. */
+    private def dropLeftStage(c: Connection): Unit = {
+      val md = c.getMetaData
+      val norm = (id: String) =>
+        if (md.storesLowerCaseIdentifiers) id.toLowerCase else id.toUpperCase
+      val (schema, name) = stage.split('.') match {
+        case Array(sc, t) => (norm(sc), norm(t))
+        case _ => (c.getSchema, norm(stage))
       }
+      if (drain(md.getTables(null, schema, name, null))(
+          _.getString("TABLE_NAME")).contains(name))
+        c.createStatement().execute(s"DROP TABLE $stage")
     }
   }
 }

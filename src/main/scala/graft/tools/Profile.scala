@@ -79,19 +79,14 @@ object Profile {
     val queries = graft.SparkEntry.queries
 
     // Bench warm protocol: two passes at sf0.001, then the off-clock
-    // index build at the measured dir for indexBuildQueries members
+    // index build at the measured dir for indexBuildQueries members;
+    // Bench's off-clock step reports a failure on stderr
     val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory) {
-      for (_ <- 1 to 2; n <- names) queries.get(n).foreach { fn =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
-    }
+    if (new java.io.File(warmDir).isDirectory)
+      for (_ <- 1 to 2; n <- names)
+        graft.Bench.offClock(spark, "warm", n, warmDir)
     for (n <- names.filter(graft.Bench.indexBuildQueries.contains))
-      queries.get(n).foreach { fn =>
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
+      graft.Bench.offClock(spark, "index_build", n, sfDir)
 
     for (n <- names; fn <- queries.get(n); r <- 1 to rounds) {
       val marker = s"profile:$n#$r"

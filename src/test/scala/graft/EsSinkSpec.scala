@@ -137,6 +137,24 @@ class EsSinkSpec extends SparkSpec {
     }
   }
 
+  test("an enveloped frame indexes its document, not the envelope") {
+    withServer { srv =>
+      val df = Seq(("insert", 5L, "db.t", "sync", 1L, 1L, "a"),
+          ("update", 6L, "db.t", "sync", 2L, 2L, "b"))
+        .toDF("op", "ts", "ns", "__mode", "__seq", "id", "text")
+        .repartition(1)
+      EsBulkSink(srv.url, "corpus", "id", opCol = Some("op")).write(df)
+      val docs = srv.actionLines.filter(l =>
+        (l \ "index") == JNothing && (l \ "update") == JNothing)
+        .map(l => if ((l \ "doc") != JNothing) l \ "doc" else l)
+      assert(docs.size == 2)
+      docs.foreach { d =>
+        val keys = d.asInstanceOf[JObject].obj.map(_._1).toSet
+        assert(keys == Set("text"), keys)
+      }
+    }
+  }
+
   test("per-item errors and HTTP failures fail the job loudly") {
     withServer { srv =>
       val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "text")

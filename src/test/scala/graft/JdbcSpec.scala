@@ -201,6 +201,104 @@ class JdbcSpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
+  private def exec(sql: String*): Unit = {
+    val c = DriverManager.getConnection(url)
+    try sql.foreach(c.createStatement().execute(_)) finally c.close()
+  }
+
+  /** `(id, name, qty)` rows of `table`, by id. */
+  private def rowsOf(table: String): Map[Long, (String, Int)] = {
+    val c = DriverManager.getConnection(url)
+    try {
+      val rs = c.createStatement().executeQuery(
+        s"SELECT id, name, qty FROM $table")
+      Iterator.continually(rs).takeWhile(_.next())
+        .map(r => r.getLong(1) -> (r.getString(2), r.getInt(3))).toMap
+    } finally c.close()
+  }
+
+  private type Event = (String, Long, Long, String, Int)
+
+  /** An epoch frame of `(op, ts, ID, NAME, QTY)` events over 4 partitions. */
+  private def epochOf(events: Seq[Event]) =
+    spark.createDataFrame(events).toDF("op", "ts", "ID", "NAME", "QTY")
+      .repartition(4)
+
+  /** The last write per key of `events` applied over `base`. */
+  private def lastWrite(base: Map[Long, (String, Int)],
+      events: Seq[Event]): Map[Long, (String, Int)] =
+    events.groupBy(_._3).values.map(_.maxBy(_._2)).foldLeft(base) {
+      case (m, (op, _, k, _, _)) if op == "delete" => m - k
+      case (m, (_, _, k, name, qty)) => m + (k -> (name, qty))
+    }
+
+  /** Inserts every key in `keys`, updates each third and deletes each
+    * seventh, later in the epoch; every eleventh name is NULL. */
+  private def churn(keys: Range, tag: String): Seq[Event] = keys.flatMap { k =>
+    val name = if (k % 11 == 0) null else s"$tag$k"
+    Seq(("insert", 1L, k.toLong, name, k % 100)) ++
+      (if (k % 3 == 0) Seq(("update", 2L, k.toLong, s"$tag-u$k", k % 50))
+       else Nil) ++
+      (if (k % 7 == 0) Seq(("delete", 3L, k.toLong, name, 0)) else Nil)
+  }
+
+  private def stageTables(): Seq[String] =
+    Jdbc.listTables(url).filter(_.endsWith("_GRAFT_STAGE"))
+
+  test("20,000-row epoch over 4 partitions applies, and its replay converges") {
+    seeded
+    exec("""CREATE TABLE big_target (id BIGINT NOT NULL PRIMARY KEY,
+      name VARCHAR(32), qty INT)""")
+    val sink = Jdbc.JdbcUpsertSink(url, "BIG_TARGET", options = opts)
+    val seed = (1 to 20000).map(k => ("insert", 0L, k.toLong, s"a$k", 1))
+    sink.write(epochOf(seed))
+    val s0 = lastWrite(Map.empty, seed)
+    assert(rowsOf("big_target") == s0)
+    val events = churn(1 to 20000, "b")
+    val epoch = epochOf(events)
+    val expect = lastWrite(s0, events)
+    sink.write(epoch)
+    assert(rowsOf("big_target") == expect)
+    sink.write(epoch) // at-least-once replay of the same epoch
+    assert(rowsOf("big_target") == expect)
+    assert(stageTables().isEmpty)
+  }
+
+  test("an epoch is atomic: a failing row leaves the previous state") {
+    seeded
+    exec("""CREATE TABLE checked_target (id BIGINT NOT NULL PRIMARY KEY,
+      name VARCHAR(32), qty INT CHECK (qty >= 0))""")
+    val sink = Jdbc.JdbcUpsertSink(url, "CHECKED_TARGET", options = opts)
+    val seed = (1 to 500).map(k => ("insert", 0L, k.toLong, s"a$k", 1))
+    sink.write(epochOf(seed))
+    val before = rowsOf("checked_target")
+    assert(before == lastWrite(Map.empty, seed))
+    val valid = churn(1 to 3000, "b")
+    val bad = ("insert", 1L, 3001L, "bad", -1)
+    intercept[Exception](sink.write(epochOf(valid :+ bad)))
+    assert(rowsOf("checked_target") == before)
+    sink.write(epochOf(valid))
+    assert(rowsOf("checked_target") == lastWrite(before, valid))
+  }
+
+  test("a stage left behind by a crash is replaced, then dropped") {
+    seeded
+    exec("""CREATE TABLE restaged (id BIGINT NOT NULL PRIMARY KEY,
+      name VARCHAR(32) NOT NULL, qty INT)""",
+      // what a crash between fill and apply leaves: a stage with rows
+      """CREATE TABLE restaged_graft_stage (id BIGINT NOT NULL,
+      name VARCHAR(32), qty INT, op VARCHAR(16))""",
+      """INSERT INTO restaged_graft_stage VALUES (1, 'junk', 9, 'insert'),
+      (999, 'junk', 9, 'insert'), (2, 'junk', 9, 'delete')""")
+    val sink = Jdbc.JdbcUpsertSink(url, "RESTAGED", options = opts)
+    // deletes carry no name, although the column is NOT NULL
+    val events = (1 to 100).map(k => ("insert", 1L, k.toLong, s"a$k", k)) ++
+      (7 to 100 by 7).map(k => ("delete", 2L, k.toLong, null, 0))
+    sink.write(epochOf(events))
+    assert(rowsOf("restaged") == lastWrite(Map.empty, events))
+    assert(stageTables().isEmpty)
+  }
+
   test("registry: postgres/mysql/jdbc names resolve to the live connector") {
     seeded
     val src = graft.pipeline.Registry.sources("postgres")(Map(
