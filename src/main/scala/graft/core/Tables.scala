@@ -1,7 +1,7 @@
 package graft.core
 
 import scala.jdk.CollectionConverters._
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -101,7 +101,10 @@ object Tables {
     * written file with its job's UUID, so a rewrite, a grown table or a
     * new partition directory changes the signature and the entry is
     * rebuilt — an entry is never served for files that changed at this
-    * level. A nested file rewritten IN PLACE under an unchanged child
+    * level. A rebuild walks the tree with [[dataFiles]] (plain statuses,
+    * no per-file process start), so the first probe after an ingest,
+    * which rebuilds the entry of every side it reads, pays only the
+    * listing and one footer read. A nested file rewritten IN PLACE under an unchanged child
     * (same name, length and mtime) is not seen: the partitioned index
     * trees read through here change by whole UUID-named files and
     * partition directories under one fixed schema, and Spark lists the
@@ -125,32 +128,44 @@ object Tables {
     entries.compute(path, (_, old) =>
       if (old != null && old.sig == sig) old
       else {
-        var bytes = 0L
-        var files = 0
-        var first: FileStatus = null
-        val it = fs.listFiles(p, true)
-        while (it.hasNext) {
-          val f = it.next()
-          val name = f.getPath.getName
-          if (!name.startsWith("_") && !name.startsWith(".")) {
-            bytes += f.getLen; files += 1
-            if (first == null ||
-                f.getPath.toString < first.getPath.toString) first = f
-          }
-        }
+        val data = dataFiles(fs, p).toSeq
+        val bytes = data.map(_.getLen).sum
         val merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false")
-        if (first == null || merge.toBoolean)
-          Entry(sig, None, Set.empty, bytes, files)
-        else {
-          val r = ParquetFileReader.open(HadoopInputFile.fromStatus(first, hconf))
-          try {
-            val meta = r.getFooter
-            Entry(sig,
-              Some(Bridge.parquetSchema(spark, meta)),
-              nanosFields(meta), bytes, files)
-          } finally r.close()
+        data.minByOption(_.getPath.toString) match {
+          case Some(first) if !merge.toBoolean =>
+            val r = ParquetFileReader.open(
+              HadoopInputFile.fromStatus(first, hconf))
+            try {
+              val meta = r.getFooter
+              Entry(sig, Some(Bridge.parquetSchema(spark, meta)),
+                nanosFields(meta), bytes, data.size)
+            } finally r.close()
+          case _ => Entry(sig, None, Set.empty, bytes, data.size)
         }
       })
+  }
+
+  /** The non-hidden data files under `path`, recursively — exactly the
+    * files Hadoop's recursive `listFiles` returns whose names start with
+    * neither `_` nor `.` (hidden directories are still descended, as
+    * `listFiles` does); the path itself when it is such a file, and
+    * nothing when it is missing. Built on `listStatus` alone: on the
+    * local filesystem without native Hadoop, `listFiles` builds a
+    * `LocatedFileStatus` per file, whose constructor reads the file's
+    * permissions through a forked `ls -ld` — one process start per file
+    * (Spark's own listing avoids that constructor for the same reason).
+    * Lazy: a caller that stops early lists no further directory. */
+  def dataFiles(fs: FileSystem, path: Path): Iterator[FileStatus] = {
+    def walk(st: FileStatus): Iterator[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).iterator.flatMap(walk)
+      else Iterator.single(st)
+    val root =
+      try Iterator.single(fs.getFileStatus(path))
+      catch { case _: java.io.FileNotFoundException => Iterator.empty }
+    root.flatMap(walk).filter { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
   }
 
   /** Fan a SMALL, UNSPLITTABLE scan out to the session's cores.

@@ -2,8 +2,11 @@ package graft.functions.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
+  ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -41,6 +44,97 @@ object CodebookExpressions {
   /** x·c_j for every centroid j, as array<double>. */
   def codebook_dots(vec: Column, codebook: Array[Array[Float]]): Column =
     Bridge.column(CodebookDots(Bridge.expression(vec), codebook))
+
+  /** Hyperplane-LSH sign bits of an `array<float>` column under the
+    * seeded `bits × dim` plane set of [[LshSignature]], as one long. */
+  def lsh_signature(vec: Column, dim: Int, bits: Int): Column =
+    Bridge.column(LshSignature(Bridge.expression(vec), dim, bits))
+}
+
+/** Sign-bit signature under `bits` seeded hyperplanes of `dim`
+  * components: bit p is set when x·plane_p is not below 0. The planes
+  * are ONE attached `float[][]` reference object (the [[CodebookTopN]]
+  * pattern), so the expression is one node whatever `bits × dim` — the
+  * literal form (one `dot_product_f(x, array(dim literals)) >= 0` branch
+  * per bit) had Catalyst analyze and optimize `bits × dim` literals on
+  * every construction. Semantics are EXACTLY that form's: `float` planes
+  * (`planeComponent` narrowed as `cast(array<float>)` does), double
+  * accumulation in element order over min(|x|, dim) components as in
+  * [[DotProductFloat]], and Spark's `>=` on doubles — −0.0 sets the
+  * bit, and so does a NaN dot (Spark orders NaN above every number). A
+  * null vector gives 0: every branch of the literal form fell to its
+  * `otherwise(0)`. The planes are derived from (dim, bits), so equal
+  * expressions compare and hash equal. */
+case class LshSignature(child: Expression, dim: Int, bits: Int)
+    extends UnaryExpression {
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def prettyName: String = "lsh_signature"
+
+  @transient private lazy val planes: Array[Array[Float]] =
+    Array.tabulate(bits, dim)((p, j) =>
+      LshSignature.planeComponent(p, j).toFloat)
+
+  override def eval(input: InternalRow): Any = {
+    val v = child.eval(input)
+    var sig = 0L
+    if (v != null) {
+      val x = v.asInstanceOf[ArrayData]
+      var p = 0
+      while (p < planes.length) {
+        val c = planes(p)
+        val d = math.min(x.numElements(), c.length)
+        var dot = 0.0
+        var i = 0
+        while (i < d) { dot += x.getFloat(i).toDouble * c(i).toDouble; i += 1 }
+        if (!(dot < 0.0)) sig |= 1L << p
+        p += 1
+      }
+    }
+    sig
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val x = child.genCode(ctx)
+    val pl = ctx.addReferenceObj("planes", planes, "float[][]")
+    val arr = ctx.freshName("x")
+    val p = ctx.freshName("p")
+    val i = ctx.freshName("i")
+    val c = ctx.freshName("c")
+    val d = ctx.freshName("d")
+    val dot = ctx.freshName("dot")
+    ev.copy(code = code"""
+      |${x.code}
+      |long ${ev.value} = 0L;
+      |if (!${x.isNull}) {
+      |  org.apache.spark.sql.catalyst.util.ArrayData $arr = ${x.value};
+      |  for (int $p = 0; $p < $pl.length; $p++) {
+      |    float[] $c = $pl[$p];
+      |    int $d = Math.min($arr.numElements(), $c.length);
+      |    double $dot = 0.0;
+      |    for (int $i = 0; $i < $d; $i++) {
+      |      $dot += (double) $arr.getFloat($i) * (double) $c[$i];
+      |    }
+      |    if (!($dot < 0.0)) ${ev.value} |= 1L << $p;
+      |  }
+      |}
+     """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object LshSignature {
+
+  /** Component j of hyperplane p: a hash-derived value in [-1, 1).
+    * Seeded, so stable across runs and executors — and the same
+    * constants the DuckDB oracles inline to replicate a signature. */
+  def planeComponent(p: Int, j: Int): Double = {
+    val h = scala.util.hashing.MurmurHash3.productHash((p, j, 42))
+    h.toDouble / Int.MaxValue.toDouble
+  }
 }
 
 /** Top-`n` centroid indices by score over an attached codebook.

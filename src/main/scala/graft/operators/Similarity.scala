@@ -148,22 +148,18 @@ object Similarity {
     * hash-derived value in [-1, 1). Seeded — stable across runs/executors,
     * and exposed so the DuckDB oracle can inline the SAME constants and
     * replicate the signature bit-for-bit. */
-  private[graft] def planeComponent(p: Int, j: Int): Double = {
-    val h = scala.util.hashing.MurmurHash3.productHash((p, j, 42))
-    (h.toDouble / Int.MaxValue.toDouble)
-  }
+  private[graft] def planeComponent(p: Int, j: Int): Double =
+    graft.functions.expressions.LshSignature.planeComponent(p, j)
 
-  /** Sign-bit signature of a vector under `bits` hyperplanes, as a Column.
-    * Expression form: bit p = (sum_j v[j] * plane[p][j]) >= 0. Planes are
-    * literal arrays, so this stays inside codegen. */
-  def lshSignature(vecCol: Column, dim: Int, bits: Int): Column = {
-    val bitCols = (0 until bits).map { p =>
-      val plane = array((0 until dim).map(j => lit(planeComponent(p, j))): _*)
-      when(dot_product_f(vecCol.cast("array<float>"),
-        plane.cast("array<float>")) >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bitCols.reduce(_.bitwiseOR(_))
-  }
+  /** Sign-bit signature of a vector under `bits` hyperplanes, as a Column:
+    * bit p = (Σ_j v[j] · plane[p][j]) >= 0, over the `float` planes of
+    * [[planeComponent]]; a null vector signs as 0. ONE expression node
+    * ([[graft.functions.expressions.LshSignature]]) that binds its planes
+    * as one attached array and stays inside codegen — never a tree of
+    * `bits × dim` literals for Catalyst to analyze on every
+    * construction. */
+  def lshSignature(vecCol: Column, dim: Int, bits: Int): Column =
+    lsh_signature(vecCol.cast("array<float>"), dim, bits)
 
   /** Banded bucket keys from a signature: `numBands` structs of
     * (band_idx, band_bits) where each band uses `bitsPerBand` sign bits.

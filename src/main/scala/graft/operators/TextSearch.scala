@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.functions.TextFunctions
 import graft.functions.expressions.TopKAggregate.top_k_by
 
@@ -94,17 +97,44 @@ object TextSearch {
         .as("term"))
       .filter(col("term") =!= "")
 
-  /** The scoring tail shared by [[bm25TopK]] and the incremental index's
-    * probe: df over the given postings (complete for any term present —
-    * a term's postings are never split across the term-partitioned
-    * index), integer-grid contributions, bounded-heap top-k. The
-    * incremental probe keeps this SCALAR form (its N/avgdl come from the
-    * epoch stats markers, no corpus pass involved); the batch path binds
-    * the stats as columns via [[scoreBm25Joined]]. */
+  /** [[queryTerms]] as a driver-local frame (a `LocalRelation`): the
+    * query side's (query_id, array_distinct(tokens)) rows are collected
+    * ONCE — no job when `queries` is itself local (the projection folds
+    * into its `LocalRelation`), one collect job when it is distributed —
+    * and exploded on the driver, so every use downstream (bucket ids,
+    * the join) is a local relation too. The query batch must fit on the
+    * driver. */
+  private[graft] def localQueryTerms(queries: DataFrame, queryIdCol: String,
+      queryTextCol: String): DataFrame = {
+    val toks = queries.select(col(queryIdCol).as("query_id"),
+      array_distinct(TextFunctions.tokens(col(queryTextCol))).as("terms"))
+    val rows = toks.collect().toSeq.flatMap { r =>
+      if (r.isNullAt(1)) Nil
+      else r.getSeq[String](1).filter(t => t != null && t.nonEmpty)
+        .map(t => Row(r.get(0), t))
+    }
+    queries.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      toks.schema("query_id"), StructField("term", StringType, false))))
+  }
+
+  /** The incremental index's scoring tail, over the touched postings and
+    * a driver-local [[localQueryTerms]] frame, in ONE shuffle: the
+    * postings join the broadcast query terms, are hash-partitioned on
+    * `query_id`, and each (query_id, term) window counts its distinct
+    * documents as df — complete for any queried term, because a term's
+    * postings all sit in its own bucket of the term-partitioned index —
+    * before the [[scoreBm25Joined]] expressions, whose aggregates need no
+    * further exchange. Same rows as [[bm25TopK]]'s `docFreq` join; the
+    * trade-off is one task per query in the window and the aggregates.
+    * N/avgdl are scalars here (the epoch stats markers); the batch path
+    * binds them as columns. */
   private[graft] def scoreBm25(post: DataFrame, qTerms: DataFrame,
       n: Long, avgdl: Double, k1: Double, b: Double, k: Int): DataFrame =
     scoreBm25Joined(
-      broadcast(qTerms.join(docFreq(post), "term")).join(post, Seq("term")),
+      post.join(broadcast(qTerms), Seq("term"))
+        .repartition(col("query_id"))
+        .withColumn("df", size(collect_set(col("doc_id"))
+          .over(Window.partitionBy("query_id", "term")))),
       lit(n.toDouble), lit(avgdl), k1, b, k)
 
   /** BM25 scoring over a joined (query_id, doc_id, tf, dl, df, …) frame

@@ -193,19 +193,8 @@ private[graft] object GenStore {
     fs(spark, dir).exists(new Path(dir, "_SUCCESS"))
 
   /** True when `dir` exists and holds at least one non-hidden file. */
-  def dirHasDataFiles(spark: SparkSession, dir: String): Boolean = {
-    val f = fs(spark, dir)
-    val p = new Path(dir)
-    if (!f.exists(p)) return false
-    val it = f.listFiles(p, true)
-    var found = false
-    while (!found && it.hasNext) {
-      val st = it.next()
-      val n = st.getPath.getName
-      found = st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    found
-  }
+  def dirHasDataFiles(spark: SparkSession, dir: String): Boolean =
+    Tables.dataFiles(fs(spark, dir), new Path(dir)).hasNext
 
   /** `epoch=N` children of `base` whose marker job committed
     * (`_SUCCESS` present), ascending — the family's committed-epoch
@@ -415,22 +404,13 @@ private[graft] object GenStore {
     * record of what the write job committed. Metadata-only: reads ≤
     * `buckets` footers, never data pages. */
   private def footerRows(spark: SparkSession, dir: String): Long = {
-    val f = fs(spark, dir)
     val conf = spark.sparkContext.hadoopConfiguration
-    val it = f.listFiles(new Path(dir), true)
-    var total = 0L
-    while (it.hasNext) {
-      val st = it.next()
-      val n = st.getPath.getName
-      if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try total += r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-        finally r.close()
-      }
-    }
-    total
+    Tables.dataFiles(fs(spark, dir), new Path(dir)).map { st =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+      finally r.close()
+    }.sum
   }
 
   /** [[writeSide]] with single-DATA-SCAN count verification (r14

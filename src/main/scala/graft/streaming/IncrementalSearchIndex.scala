@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.TextSearch
@@ -53,6 +53,11 @@ object IncrementalSearchIndex extends EpochIndex {
     Side("postings", "t_mod", cfg.hashBuckets,
       Seq("term", "doc_id", "dl", "tf"))))
 
+  /** A term's postings bucket — the ingest's partition value and the
+    * probe's prune key. */
+  private def tMod(cfg: Config): Column =
+    pmod(hash(col("term")), lit(cfg.hashBuckets)).cast("long")
+
   /** Index one epoch of (idCol, textCol) documents. Idempotent per
     * epochId ([[GenStore.ingestEpoch]]). */
   def ingestBatch(cfg: Config, batch: DataFrame, idCol: String,
@@ -61,8 +66,7 @@ object IncrementalSearchIndex extends EpochIndex {
       val docs = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
         .localCheckpoint(eager = true)
       val postings = TextSearch.postings(docs, "doc_id", "text")
-        .withColumn("t_mod",
-          pmod(hash(col("term")), lit(cfg.hashBuckets)).cast("long"))
+        .withColumn("t_mod", tMod(cfg))
       // stats row counts EVERY doc (term-less docs too — they contribute
       // to N and avgdl exactly as in the batch operator)
       (Seq("postings" -> postings),
@@ -77,10 +81,17 @@ object IncrementalSearchIndex extends EpochIndex {
     ingestBatch(cfg, batch, cols(0), cols(1), epochId)
 
   /** BM25 top-k of each (query_id, query_text) row against everything
-    * ingested so far: touched-partition postings read (generations ∪
-    * remainder epochs, one consistent [[GenStore.GenView]]) → shared
-    * scoring tail. Output (query_id, rank, doc_id, score_e9), best
-    * first. */
+    * ingested so far, built as ONE plan with no Spark job before the
+    * caller's action: the query terms are a driver-local frame
+    * ([[TextSearch.localQueryTerms]] — no job for a local query frame,
+    * one collect for a distributed one), their `t_mod` buckets are
+    * computed on the driver with the ingest's own `pmod(hash(term))`
+    * expression, and the touched-bucket postings read (generations ∪
+    * remainder epochs, one consistent [[GenStore.GenView]]) feeds the
+    * single-shuffle scoring tail ([[TextSearch.scoreBm25]]). N/avgdl
+    * come from the committed epochs' stats rows, read once per session.
+    * The query batch must fit on the driver. Output (query_id, rank,
+    * doc_id, score_e9), best first. */
   def probe(spark: SparkSession, cfg: Config, queries: DataFrame,
       queryIdCol: String, queryTextCol: String, k: Int): DataFrame = {
     import spark.implicits._
@@ -94,10 +105,10 @@ object IncrementalSearchIndex extends EpochIndex {
     val eps = committed(spark, cfg)
     if (eps.isEmpty) return empty
 
-    val qTerms = TextSearch.queryTerms(queries, queryIdCol, queryTextCol)
-      .localCheckpoint(eager = true) // drives the prune AND the join
-    val touched = GenStore.pruneSet(qTerms
-      .select(pmod(hash(col("term")), lit(cfg.hashBuckets)).cast("long")))
+    val qTerms = TextSearch.localQueryTerms(queries, queryIdCol,
+      queryTextCol)
+    val touched = qTerms.select(tMod(cfg)).collect().map(_.getLong(0))
+      .distinct.sorted
     if (touched.isEmpty) return empty
 
     // N and avgdl from the committed epochs' stats rows, each read once

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import graft.core.Tables
 
 /** Policy-driven ingest-path maintenance for the [[GenStore]] index
   * family — the engine's counterpart of the reference's interval
@@ -57,19 +58,8 @@ object Maintenance {
     * from the epoch trees, and (−1 when not counted) live data files. */
   final case class Pressure(remainderEpochs: Int, liveFiles: Long)
 
-  private def countFiles(spark: SparkSession, base: String): Long = {
-    val f = GenStore.fs(spark, base)
-    val p = new Path(base)
-    if (!f.exists(p)) return 0L
-    val it = f.listFiles(p, true)
-    var n = 0L
-    while (it.hasNext) {
-      val st = it.next()
-      val nm = st.getPath.getName
-      if (st.isFile && !nm.startsWith("_") && !nm.startsWith(".")) n += 1
-    }
-    n
-  }
+  private def countFiles(spark: SparkSession, base: String): Long =
+    Tables.dataFiles(GenStore.fs(spark, base), new Path(base)).size.toLong
 
   /** Measure the index's current pressure. The remainder count is a
     * marker listing (bounded metadata); the file walk runs only when

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.Tables
 import graft.streaming.{EpochIndex, IncrementalAnnIndex, IncrementalDedup,
   IncrementalLinkIndex, IncrementalSearchIndex}
 
@@ -74,19 +75,10 @@ object IndexMaint {
         val idxDir = args(1)
         val f = new org.apache.hadoop.fs.Path(idxDir)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def stats(p: org.apache.hadoop.fs.Path): (Long, Long) = {
-          if (!f.exists(p)) return (0L, 0L)
-          val it = f.listFiles(p, true)
-          var n = 0L; var b = 0L
-          while (it.hasNext) {
-            val st = it.next()
-            val nm = st.getPath.getName
-            if (st.isFile && !nm.startsWith("_") && !nm.startsWith(".")) {
-              n += 1; b += st.getLen
-            }
+        def stats(p: org.apache.hadoop.fs.Path): (Long, Long) =
+          Tables.dataFiles(f, p).foldLeft((0L, 0L)) { case ((n, b), st) =>
+            (n + 1, b + st.getLen)
           }
-          (n, b)
-        }
         val subs = f.listStatus(f.makeQualified(
             new org.apache.hadoop.fs.Path(idxDir)))
           .filter(_.isDirectory).map(_.getPath).sortBy(_.getName)
