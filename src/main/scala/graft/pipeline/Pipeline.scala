@@ -16,9 +16,12 @@ import graft.sources.Connectors.{Sink, Source}
   *
   * Execution model difference, by design: the reference pumps one message
   * at a time through goroutines+channels; here the "logical plan" IS a
-  * Catalyst plan and each sink is an independent action over a shared,
-  * cached source. Fan-out therefore costs one source scan (cached) + N
-  * sink-side plans, all vectorized.
+  * Catalyst plan and the sinks are concurrent actions over a shared,
+  * cached source (`StreamPipeline.concurrently`, as each reference sink
+  * node is its own goroutine). Fan-out therefore costs one source scan
+  * (cached) + N sink-side plans, all vectorized and written at once.
+  * The sinks of one pipeline must not share a target: no sink sees
+  * another's writes, and no order between them is kept.
   */
 final case class TransformStep(name: String, nsFilter: String,
     fn: DataFrame => DataFrame)
@@ -31,15 +34,11 @@ final case class PipelineSpec(name: String, source: Source,
     streamCheckpoint: Option[String] = None) {
 
   /** `transporter test`-style tree rendering (`pipeline/node.go:233-252`). */
-  def describe: String = {
-    val sb = new StringBuilder(s"$name:\n - Source: $sourceName\n")
-    sinks.foreach { s =>
-      sb.append(s"   - Sink: ${s.name} (ns=/${s.nsFilter}/)\n")
-      s.transforms.foreach(t =>
-        sb.append(s"     - Transform: ${t.name} (ns=/${t.nsFilter}/)\n"))
-    }
-    sb.result()
-  }
+  def describe: String =
+    (s"$name:\n - Source: $sourceName\n" +: sinks.flatMap { s =>
+      s"   - Sink: ${s.name} (ns=/${s.nsFilter}/)\n" +: s.transforms.map(t =>
+        s"     - Transform: ${t.name} (ns=/${t.nsFilter}/)\n")
+    }).mkString
 
   /** Compile each sink's full lineage (for explain/inspection). */
   def compile(spark: SparkSession): Map[String, DataFrame] = {
@@ -95,9 +94,10 @@ final case class PipelineSpec(name: String, source: Source,
     }
   }
 
-  /** Run all sinks off one cached source scan — or, when the config
-    * declared `mode: stream`, drive the source's tail as a streaming
-    * query until the pending input drains (Trigger.AvailableNow). */
+  /** Run all sinks concurrently off one cached source scan, returning
+    * once every sink has finished — or, when the config declared
+    * `mode: stream`, drive the source's tail as a streaming query until
+    * the pending input drains (Trigger.AvailableNow). */
   def run(spark: SparkSession): Unit = streamCheckpoint match {
     case Some(cp) => runStream(spark, cp).awaitTermination()
     case None => runImpl(spark, None)
@@ -105,10 +105,11 @@ final case class PipelineSpec(name: String, source: Source,
 
   /** The Sync-phase drive: the source's tail (`StreamableSource.stream`)
     * fanned out to every sink through one shared checkpoint —
-    * `StreamPipeline.fanout`, so the epoch commits only after ALL sinks
-    * wrote it (the per-sink offset logs collapsing to the min offset on
-    * resume, `pipeline/node.go:269-345`). Each sink sees the epoch after
-    * its own ns filter + transform chain, identical to the batch drive.
+    * `StreamPipeline.fanout`: the sinks write each epoch concurrently,
+    * and it commits only after ALL sinks wrote it (the per-sink offset
+    * logs collapsing to the min offset on resume,
+    * `pipeline/node.go:269-345`). Each sink sees the epoch after its own
+    * ns filter + transform chain, identical to the batch drive.
     * Sinks must be idempotent per epoch (at-least-once), which every
     * registry writer is. */
   def runStream(spark: SparkSession, checkpoint: String,
@@ -137,9 +138,10 @@ final case class PipelineSpec(name: String, source: Source,
   /** Run with the events surface attached (`events/events.go`): emits
     * `boot` {endpoints} → one `metrics` {path, records} per sink (counted
     * by a CollectMetrics node riding the sink's own query — no extra
-    * pass) → `exit`; a sink failure emits `error` {path, message}, then
-    * `exit`, then rethrows (error tears the pipeline down,
-    * `pipeline/pipeline.go:135-144`). */
+    * pass), in node order once every sink has finished → `exit`; a
+    * failed sink gets `error` {path, message} in its place, then `exit`
+    * is emitted and the first failure rethrown (error tears the pipeline
+    * down, `pipeline/pipeline.go:135-144`). */
   def run(spark: SparkSession, emitter: graft.events.Events.Emitter): Unit =
     runImpl(spark, Some(emitter))
 
@@ -156,31 +158,32 @@ final case class PipelineSpec(name: String, source: Source,
     val shared = if (sinks.length > 1)
       src.persist(StorageLevel.MEMORY_AND_DISK) else src
     try {
-      sinks.foreach { s =>
-        val df = compileSink(shared, s, commands)
-        emitter match {
-          case None => s.sink.write(df)
-          case Some(em) =>
-            // Observation = CollectMetrics + a blocking read of the
-            // counter once the sink's action completes — metrics arrive
-            // in node order, before exit, like emitMetrics' node walk
-            val obs = new org.apache.spark.sql.Observation(
-              s"graft.pipeline:$name/${s.name}")
-            try {
+      val outcomes = graft.streaming.StreamPipeline.concurrently(spark,
+        sinks.map { s => () => {
+          val df = compileSink(shared, s, commands)
+          emitter match {
+            case None => s.sink.write(df); -1L
+            case Some(_) =>
+              // Observation = CollectMetrics + a blocking read of the
+              // counter once the sink's action completes
+              val obs = new org.apache.spark.sql.Observation(
+                s"graft.pipeline:$name/${s.name}")
               s.sink.write(df.observe(obs,
                 org.apache.spark.sql.functions.count(
                   org.apache.spark.sql.functions.lit(1)).as("records")))
-              em.emit(Events.GraftEvent(System.currentTimeMillis(),
-                "metrics", path = s"$name/${s.name}",
-                records = obs.get.apply("records").asInstanceOf[Long]))
-            } catch {
-              case e: Throwable =>
-                Events.error(em, s"$name/${s.name}",
-                  String.valueOf(e.getMessage))
-                throw e
-            }
-        }
-      }
+              obs.get.apply("records").asInstanceOf[Long]
+          }
+        }})
+      // metrics (or the error) in node order, before exit, like
+      // emitMetrics' node walk
+      emitter.foreach(em => sinks.zip(outcomes).foreach {
+        case (s, scala.util.Success(records)) =>
+          em.emit(Events.GraftEvent(System.currentTimeMillis(),
+            "metrics", path = s"$name/${s.name}", records = records))
+        case (s, scala.util.Failure(e)) =>
+          Events.error(em, s"$name/${s.name}", String.valueOf(e.getMessage))
+      })
+      graft.streaming.StreamPipeline.firstFailure(outcomes).foreach(throw _)
     } finally {
       if (sinks.length > 1) shared.unpersist()
       emitter.foreach(Events.exit(_, "graft-0.1", endpoints))

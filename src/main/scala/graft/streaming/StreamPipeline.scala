@@ -260,13 +260,20 @@ object StreamPipeline {
   /** Streaming fan-out: ONE stream drives N sinks inside a single
     * foreachBatch — the reference's source-broadcast tree
     * (`pipe/pipe.go:158-165`) in micro-batch form. Each sink sees the
-    * epoch after its own ns-filter + transform chain; the epoch commits
-    * only after EVERY sink write returns, so all sinks share one offset
-    * log (at-least-once per sink, exactly like the per-sink offset logs
+    * epoch after its own ns-filter + transform chain. The sinks write
+    * the one persisted epoch concurrently (`concurrently`), as the
+    * reference runs each sink node in its own goroutine
+    * (`pipeline/node.go:55-85`); their jobs keep the stream's job group,
+    * so `query.stop()` cancels them. The epoch commits only after EVERY
+    * sink write has finished, so all sinks share one offset log
+    * (at-least-once per sink, exactly like the per-sink offset logs
     * collapsing to the min offset on resume, `pipeline/node.go:269-345`).
+    * A failed sink fails the epoch once its siblings have finished,
+    * with the first failure in sink order; the epoch stays uncommitted.
     *
-    * Idempotent sinks are still required: a crash mid-epoch replays the
-    * epoch into ALL sinks, including those that already wrote it.
+    * Idempotent sinks are still required: a crash or a failed sibling
+    * replays the epoch into ALL sinks, including those that already
+    * wrote it. Sinks of one fan-out must not share a target.
     */
   def fanout(stream: DataFrame, checkpoint: String,
       sinks: Seq[(String, DataFrame => DataFrame,
@@ -280,22 +287,80 @@ object StreamPipeline {
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         // one cached scan of the epoch serves every sink
         batch.persist()
-        try sinks.foreach { case (name, transform, write) =>
-          // with observeAs, each sink's epoch count rides its own query
-          // as a CollectMetrics node → `metrics` events per sink per
-          // epoch through Events.BatchListener (pipe.MessageCount for the
-          // multiplexed fan-out tree)
-          val df = transform(batch)
-          val instrumented = observeAs match {
-            case Some(prefix) =>
-              graft.events.Events.instrument(df, s"$prefix/$name")
-            case None => df
+        try firstFailure(concurrently(batch.sparkSession, sinks.map {
+          case (name, transform, write) => () => {
+            // with observeAs, each sink's epoch count rides its own query
+            // as a CollectMetrics node → `metrics` events per sink per
+            // epoch through Events.BatchListener (pipe.MessageCount for
+            // the multiplexed fan-out tree)
+            val df = transform(batch)
+            val instrumented = observeAs match {
+              case Some(prefix) =>
+                graft.events.Events.instrument(df, s"$prefix/$name")
+              case None => df
+            }
+            write(instrumented, epochId)
           }
-          write(instrumented, epochId)
-        } finally batch.unpersist()
+        })).foreach(throw _) finally batch.unpersist()
         ()
       }
       .start()
+
+  /** Daemon threads for the fan-out's sibling writes; idle ones expire. */
+  private lazy val sinkPool: java.util.concurrent.ExecutorService = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    java.util.concurrent.Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, s"graft-sink-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  }
+
+  /** The one concurrent fan-out (the batch Copy and every stream epoch):
+    * starts every write at once and returns each one's outcome, in
+    * order, only after all of them have finished. The first runs on the
+    * calling thread; the rest run on daemon threads through
+    * `SQLExecution.withThreadLocalCaptured` (Spark's helper for broadcast
+    * and subquery futures), so each carries the caller's local
+    * properties — a stream's job group, so `stop()` cancels its jobs,
+    * and the job tags — and the active session. Waiting ignores
+    * interrupts until every write has finished; the interrupt flag is
+    * then restored. */
+  def concurrently[A](spark: SparkSession, writes: Seq[() => A])
+      : Seq[scala.util.Try[A]] = {
+    import scala.util.{Failure, Success}
+    def attempt(w: () => A) = try Success(w()) catch {
+      case e: Throwable => Failure(e)
+    }
+    writes match {
+      case Seq() => Nil
+      case first +: rest =>
+        val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        val siblings = rest.map(w => org.apache.spark.sql.execution.SQLExecution
+          .withThreadLocalCaptured(session, sinkPool)(w()))
+        attempt(first) +: siblings.map(f => attempt(() => f.join()) match {
+          case Failure(e) => Failure(unwrap(e))
+          case ok => ok
+        })
+    }
+  }
+
+  private def unwrap(e: Throwable): Throwable = e match {
+    case _: java.util.concurrent.ExecutionException |
+         _: java.util.concurrent.CompletionException if e.getCause != null =>
+      unwrap(e.getCause)
+    case _ => e
+  }
+
+  /** The first failure in order, with the later ones added as
+    * suppressed. */
+  def firstFailure(outcomes: Seq[scala.util.Try[_]]): Option[Throwable] = {
+    val failures = outcomes.collect { case scala.util.Failure(e) => e }
+    failures.headOption.map { first =>
+      failures.tail.filter(_ ne first).foreach(first.addSuppressed)
+      first
+    }
+  }
 
   /** Windowed streaming aggregation with watermark (beyond the reference's
     * phase markers — the idiomatic home for its flush-cadence semantics). */

@@ -112,6 +112,81 @@ class PipelineSpec extends SparkSpec {
       env ++ Seq("n_nationkey", "name", "n_regionkey"))
   }
 
+  test("run writes every sink at once, each with the caller's session, " +
+      "local properties and job tags") {
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    // each sink waits for the other to start: a serial fan-out times out
+    val both = new CountDownLatch(2)
+    val seen = new ConcurrentHashMap[String, String]()
+    final class Meeting(name: String) extends Sink {
+      def write(df: org.apache.spark.sql.DataFrame): Unit = {
+        df.count()
+        val sc = df.sparkSession.sparkContext
+        seen.put(name, Seq(
+          org.apache.spark.sql.SparkSession.getActiveSession.exists(_ eq spark),
+          sc.getLocalProperty("graft.test.prop"),
+          sc.getJobTags().contains("graft-test-tag")).mkString(","))
+        both.countDown()
+        assert(both.await(60, TimeUnit.SECONDS), s"$name's sibling never started")
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    sc.setLocalProperty("graft.test.prop", "p")
+    sc.addJobTag("graft-test-tag")
+    try Pipeline.builder("meet")
+      .source("fixtures", MultiTableSource(sf, Seq("region")))
+      .save("a", new Meeting("a"))
+      .save("b", new Meeting("b"))
+      .build().run(spark)
+    finally {
+      sc.setLocalProperty("graft.test.prop", null)
+      sc.removeJobTag("graft-test-tag")
+    }
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toMap == Map("a" -> "true,p,true", "b" -> "true,p,true"))
+  }
+
+  test("a failing sink fails the run only after its siblings have " +
+      "finished; events keep node order") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val thrown = new CountDownLatch(1)
+    val boom1 = new IllegalStateException("boom1")
+    val boom2 = new IllegalArgumentException("boom2")
+    val late = new MemorySink
+    final class Failing(e: Exception, first: Boolean) extends Sink {
+      def write(df: org.apache.spark.sql.DataFrame): Unit = {
+        df.count()
+        if (first) thrown.countDown()
+        throw e
+      }
+    }
+    // writes only once the first sink has thrown
+    object Late extends Sink {
+      def write(df: org.apache.spark.sql.DataFrame): Unit = {
+        assert(thrown.await(60, TimeUnit.SECONDS), "the failing sink never ran")
+        late.write(df)
+      }
+    }
+    val em = new graft.events.Events.BufferingEmitter
+    val spec = Pipeline.builder("fail")
+      .source("fixtures", MultiTableSource(sf, Seq("region")))
+      .save("boom1", new Failing(boom1, first = true))
+      .save("late", Late)
+      .save("boom2", new Failing(boom2, first = false))
+      .build()
+    val e = intercept[IllegalStateException](spec.run(spark, em))
+    // the first failure in node order, unwrapped, the other suppressed
+    assert(e eq boom1)
+    assert(e.getSuppressed.toSeq == Seq(boom2))
+    assert(late.rows.size == 5)
+    assert(em.events.map(ev => (ev.name, ev.path, ev.records)) == Seq(
+      ("boot", "", -1L), ("error", "fail/boom1", -1L),
+      ("metrics", "fail/late", 5L), ("error", "fail/boom2", -1L),
+      ("exit", "", -1L)))
+    assert(em.ofKind("error").map(_.message) == Seq("boom1", "boom2"))
+  }
+
   test("describe renders the node tree; build without sinks fails") {
     val d = Pipeline.builder("t")
       .source("s", MultiTableSource(sf, Seq("region")))

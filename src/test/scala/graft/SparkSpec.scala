@@ -26,6 +26,33 @@ trait SparkSpec extends AnyFunSuite {
       (v, n.get)
     } finally sc.removeSparkListener(l)
   }
+
+  /** `body`'s value and every process the JVM started while it ran, as
+    * "command (thread)", read from an in-process JFR recording of
+    * `jdk.ProcessStart` events. Spark's housekeeping runs on its own
+    * clock and is left out: the heartbeat's one-off `getconf PAGESIZE`
+    * and the `rm -rf` of a collected session's artifact directory. */
+  def processStartsDuring[T](body: => T): (T, Seq[String]) = {
+    val housekeeping = Seq("org.apache.spark.Heartbeater",
+      "org.apache.spark.sql.artifact.ArtifactManager$StateCleanupRunner")
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withoutThreshold().withStackTrace()
+    rec.start()
+    val v = try body finally rec.stop()
+    val dump = java.nio.file.Files.createTempFile("graft-forks", ".jfr")
+    try {
+      rec.dump(dump)
+      import scala.jdk.CollectionConverters._
+      (v, jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .filterNot(e => Option(e.getStackTrace).exists(_.getFrames.asScala
+          .exists(f => housekeeping.exists(f.getMethod.getType.getName.startsWith))))
+        .map(e => s"${e.getString("command")} (${e.getThread.getJavaName})"))
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(dump)
+    }
+  }
 }
 
 object SparkSpec {
