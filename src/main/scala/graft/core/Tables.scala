@@ -1,7 +1,9 @@
 package graft.core
 
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -115,6 +117,15 @@ object Tables {
   private val entries =
     new java.util.concurrent.ConcurrentHashMap[String, Entry]()
 
+  /** A footer reader for one parquet file, with read options over the
+    * caller's `conf`: `ParquetFileReader.open(file)` alone builds its
+    * options from a NEW Hadoop `Configuration`, which re-parses
+    * core-default.xml and core-site.xml on every footer. */
+  private[graft] def footerReader(st: FileStatus,
+      conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+      HadoopReadOptions.builder(conf).build())
+
   private def entryOf(spark: SparkSession, path: String): Entry = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val p = new Path(path)
@@ -133,8 +144,7 @@ object Tables {
         val merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false")
         data.minByOption(_.getPath.toString) match {
           case Some(first) if !merge.toBoolean =>
-            val r = ParquetFileReader.open(
-              HadoopInputFile.fromStatus(first, hconf))
+            val r = footerReader(first, hconf)
             try {
               val meta = r.getFooter
               Entry(sig, Some(Bridge.parquetSchema(spark, meta)),

@@ -10,25 +10,24 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Centroid-codebook expressions for the large-`nlist` ANN paths.
+/** Centroid-codebook expressions: every centroid scan of the ANN stack
+  * (IVF assign/probe, PQ encode, IVF-ADC/IVF-SQ coarse dots and LUTs).
   *
-  * The small-`nlist` form inlines every centroid as literal arrays inside
-  * one projection (`Similarity.assignExpr` / `ProductQuantizer.argminL2`)
-  * — ideal to ~10³ centroids, but the expression TREE is O(nlist × dim):
-  * at the list counts `Similarity.autoNlist` targets for real corpora
-  * (up to 2¹⁶), Catalyst analysis and Janino collapse under ~4M literal
-  * nodes long before any row is scored.
+  * The codebook is bound as ONE attached `float[][]` reference object
+  * (`ctx.addReferenceObj` — shipped with the serialized plan once, like
+  * a broadcast small table), so plan size is O(1) in nlist × dim and the
+  * per-row scan is a tight generated loop over the array. A literal
+  * form (one `dot_product_f(x, array(dim literals))` struct per
+  * centroid) has Catalyst analyze O(nlist × dim) nodes on every
+  * construction and, for the PQ encode, generates code past Janino's
+  * 64 KB method limit. Scores accumulate in double in element order and
+  * ties break toward the smaller centroid index — the literal form's
+  * `array_min`/`array_sort` over (score, idx) structs, which
+  * `CodebookEquivalenceSpec` keeps as the bit-for-bit oracle.
   *
-  * These expressions bind the codebook as ONE attached `float[][]`
-  * reference object instead (`ctx.addReferenceObj` — shipped with the
-  * serialized plan once, like a broadcast small table), so plan size is
-  * O(1) in nlist and the per-row scan is a tight generated loop over the
-  * array. Semantics are EXACTLY the literal form's: scores accumulate in
-  * double in element order, ties break toward the smaller centroid index
-  * (the literal path's `array_min`/`array_sort` over (score, idx)
-  * structs), so the two forms are bit-identical and the threshold switch
-  * in [[graft.operators.Similarity]] / [[graft.operators.ProductQuantizer]]
-  * never changes results.
+  * Equal codebooks compare and hash equal ([[ValueArrays]]): the
+  * analyzed plan's `semanticHash` — [[graft.operators.Memo]]'s input
+  * fingerprint — must not change when a caller rebuilds the same array.
   */
 object CodebookExpressions {
 
@@ -137,12 +136,33 @@ object LshSignature {
   }
 }
 
+/** Value identity for an expression holding attached `float[][]`
+  * codebooks: a case class compares and hashes an array field by
+  * reference, so two constructions over the same centroids (each
+  * `normalized` call makes a new array) would be different expressions.
+  * Arrays compare by content, floats by bit pattern. */
+private[expressions] trait ValueArrays extends Product {
+  @transient private lazy val valueHash = productIterator.map {
+    case a: Array[AnyRef] => java.util.Arrays.deepHashCode(a)
+    case x => x.##
+  }.toSeq.##
+  override def hashCode(): Int = valueHash
+  override def equals(o: Any): Boolean = o match {
+    case e: ValueArrays if e.getClass == getClass => (this eq e) ||
+      productIterator.zip(e.productIterator).forall {
+        case (a: Array[AnyRef], b: Array[AnyRef]) => java.util.Arrays.deepEquals(a, b)
+        case (x, y) => x == y
+      }
+    case _ => false
+  }
+}
+
 /** Top-`n` centroid indices by score over an attached codebook.
   * One fused loop per row: nlist sub-scores, bounded insertion into an
   * n-slot selection (n is 1 or nprobe — tiny), no intermediate arrays.
   */
 case class CodebookTopN(child: Expression, codebook: Array[Array[Float]],
-    metric: String, n: Int) extends UnaryExpression {
+    metric: String, n: Int) extends UnaryExpression with ValueArrays {
   require(metric == "dot" || metric == "l2", s"bad metric $metric")
   require(n >= 1, "n must be >= 1")
 
@@ -243,10 +263,10 @@ case class CodebookTopN(child: Expression, codebook: Array[Array[Float]],
 }
 
 /** x·c_j for every centroid of an attached codebook, as array<double>.
-  * The large-nlist form of the per-query coarse-dot table in
+  * The per-query coarse-dot table and ADC lookup table of
   * [[graft.operators.ProductQuantizer.ivfAdcTopK]]. */
 case class CodebookDots(child: Expression, codebook: Array[Array[Float]])
-    extends UnaryExpression {
+    extends UnaryExpression with ValueArrays {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "codebook_dots"

@@ -46,7 +46,8 @@ object CodebookTwoLevel {
   * global list j belongs to cell j / k2. */
 case class CodebookTopNTwoLevel(child: Expression,
     l1: Array[Array[Float]], l2flat: Array[Array[Float]], k2: Int,
-    metric: String, n: Int, probe1: Int) extends UnaryExpression {
+    metric: String, n: Int, probe1: Int) extends UnaryExpression
+    with ValueArrays {
   require(metric == "dot" || metric == "l2", s"bad metric $metric")
   require(n >= 1 && probe1 >= 1, "n and probe1 must be >= 1")
   require(l2flat.length == l1.length * k2,

@@ -4,9 +4,13 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
+  ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData,
+  SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -63,6 +67,12 @@ object TopKAggregate {
       Bridge.expression(id), k,
       payExpr = Some(Bridge.expression(payload.cast("array<float>"))))
       .toAggregateExpression())
+
+  /** The cosine pairs of one [[top_k_by_carry]] heap (payload = vector)
+    * as array<struct<id_a, id_b, cos>>: every entry pair with
+    * `id_a < id_b` and `cos >= threshold` ([[BucketCosinePairs]]). */
+  def bucket_cosine_pairs(tops: Column, threshold: Double): Column =
+    Bridge.column(BucketCosinePairs(Bridge.expression(tops), threshold))
 
   /** Id types the heap can order AND (de)serialize. */
   private[expressions] val supportedIdTypes: Seq[DataType] = Seq(
@@ -333,4 +343,93 @@ case class TopKByAggregate(simExpr: Expression, idExpr: Expression, k: Int,
       newChildren: IndexedSeq[Expression]): Expression =
     copy(simExpr = newChildren(0), idExpr = newChildren(1),
       payExpr = if (newChildren.length > 2) Some(newChildren(2)) else None)
+}
+
+/** Every within-bucket pair of a `top_k_by_carry` heap scored in one
+  * pass: each vector's norm is computed once per bucket (not once per
+  * pair occurrence), and no pair row exists before it passes the
+  * threshold. The values are EXACTLY those of the plan it replaces —
+  * explode the heap twice, keep `a.corpus_id < b.corpus_id`, project
+  * `Similarity.cosine(a, b, l2norm(a), l2norm(b))`, filter
+  * `cos >= threshold` (`BucketPairsSpec` keeps that plan as the oracle):
+  *   - dots are [[DotProductFloat]]'s double accumulation of float
+  *     products in element order over min(|a|, |b|) components;
+  *   - `cos = dot(a, b) / (sqrt(dot(a, a)) · sqrt(dot(b, b)))`;
+  *   - a zero norm product or a null vector gives a null cosine, which
+  *     the threshold drops; a NaN cosine passes, as Spark's `>=` orders
+  *     NaN above every number;
+  *   - ids compare with Spark's ordering for their type, so equal ids
+  *     never pair. */
+case class BucketCosinePairs(child: Expression, threshold: Double)
+    extends UnaryExpression {
+
+  private def entry: StructType =
+    child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+  private lazy val idField = entry("corpus_id")
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(st: StructType, _) if st.fieldNames.contains("corpus_id") &&
+        st.find(_.name == "payload").exists(_.dataType.isInstanceOf[ArrayType]) =>
+      TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"bucket_cosine_pairs needs a top_k_by_carry heap, got ${other.sql}")
+  }
+
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("id_a", idField.dataType, idField.nullable),
+    StructField("id_b", idField.dataType, idField.nullable),
+    StructField("cos", DoubleType))), containsNull = false)
+  override def prettyName: String = "bucket_cosine_pairs"
+
+  @transient private lazy val idOrd: Ordering[Any] =
+    TypeUtils.getInterpretedOrdering(idField.dataType).asInstanceOf[Ordering[Any]]
+
+  private def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
+    s
+  }
+
+  override def nullSafeEval(input: Any): Any = pairs(input.asInstanceOf[ArrayData])
+
+  /** Generated code calls the same Scala loop: a fallback expression
+    * would take its Generate out of whole-stage codegen. */
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("pairs", this, getClass.getName)
+    nullSafeCodeGen(ctx, ev, t => s"${ev.value} = $self.pairs($t);")
+  }
+
+  def pairs(tops: ArrayData): ArrayData = {
+    val (idIdx, payIdx) = (entry.fieldIndex("corpus_id"), entry.fieldIndex("payload"))
+    val n = tops.numElements()
+    val ids = new Array[Any](n)
+    val vs = new Array[ArrayData](n)
+    val norms = new Array[Double](n)
+    for (i <- 0 until n) {
+      val e = tops.getStruct(i, entry.size)
+      ids(i) = e.get(idIdx, idField.dataType)
+      if (!e.isNullAt(payIdx)) {
+        vs(i) = e.getArray(payIdx)
+        norms(i) = math.sqrt(dot(vs(i), vs(i)))
+      }
+    }
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    for (i <- 0 until n; j <- i + 1 until n if vs(i) != null && vs(j) != null) {
+      val c = idOrd.compare(ids(i), ids(j))
+      val a = if (c < 0) i else j
+      val b = i + j - a
+      val denom = norms(a) * norms(b)
+      if (c != 0 && denom != 0.0) {
+        val cos = dot(vs(a), vs(b)) / denom
+        if (SQLOrderingUtil.compareDoubles(cos, threshold) >= 0)
+          out += InternalRow(ids(a), ids(b), cos)
+      }
+    }
+    new GenericArrayData(out.toArray)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }

@@ -31,7 +31,7 @@ import graft.functions.expressions.TopKAggregate.top_k_by
   * Scale shape: training cost is corpus-size-independent
   * ([[Similarity.autoSampleMod]]'s sampling, one job per Lloyd
   * iteration covering ALL m subspaces); encode is one scan (m · ksub
-  * fused sub-dot-products per row, codegen'd literals); the ADC scan
+  * fused sub-dot-products per row over bound codebooks); the ADC scan
   * shuffles only k-bounded heaps per query ([[top_k_by]]); the exact
   * rerank touches R · #queries vectors, never the corpus.
   *
@@ -55,24 +55,18 @@ object ProductQuantizer {
   private def subVec(v: Column, s: Int, dsub: Int): Column =
     slice(v, s * dsub + 1, dsub).cast("array<float>")
 
-  /** argmin_j ‖x − c_j‖² as a codegen'd expression: ‖x‖² is common per
-    * row, so score_j = ‖c_j‖² − 2·x·c_j with ‖c_j‖² precomputed.
-    * Literal centroid arrays up to [[Similarity.LiteralCentroidMax]];
-    * one bound codebook object above (identical scores/tie-breaks —
-    * see `CodebookEquivalenceSpec`), so the coarse quantizer keeps
-    * working at the 2¹⁶ lists [[Similarity.autoNlist]] reaches on
-    * real corpora. `ksub` sub-codebooks (≤256) always take the
-    * literal form. */
-  private[operators] def argminL2(x: Column, cents: Array[Array[Float]]): Column =
-    if (Similarity.literalForm(cents)) {
-      val scored = cents.zipWithIndex.map { case (c, j) =>
-        val c2 = c.map(v => v.toDouble * v).sum
-        val centLit = array(c.map(lit(_)): _*).cast("array<float>")
-        struct((lit(c2) - lit(2.0) * dot_product_f(x, centLit)).as("d"),
-          lit(j).as("c"))
-      }
-      array_min(array(scored: _*)).getField("c")
-    } else codebook_topn(x, cents, "l2", 1)
+  /** argmin_j ‖x − c_j‖² as one codegen'd expression over the bound
+    * codebook: ‖x‖² is common per row, so score_j = ‖c_j‖² − 2·x·c_j
+    * with ‖c_j‖² precomputed ([[CodebookTopN]]'s `l2` metric). */
+  private def argminL2(x: Column, cents: Array[Array[Float]]): Column =
+    codebook_topn(x, cents, "l2", 1)
+
+  /** The per-query ADC lookup table: lut(s)(j) = q_s · c_{s,j}, exact
+    * sub-dot-products against each bound sub-codebook. */
+  private def lutCol(q: Column, books: Codebooks): Column = {
+    val dsub = books(0)(0).length
+    array(books.indices.map(s => codebook_dots(subVec(q, s, dsub), books(s))): _*)
+  }
 
   /** Train the m × ksub codebooks. One Lloyd job per iteration covers
     * every subspace: the assignment row is built BELOW the explode
@@ -174,23 +168,13 @@ object ProductQuantizer {
     val books = Memo.shared.once(cacheKey, s"pq-books/$dim/$m/$ksub/$iters") {
       codebooks(corpus, idCol, vecCol, dim, m, ksub, iters)
     }
-    val dsub = dim / m
     val codes = memoCodes(cacheKey, s"adc/$dim/$m/$ksub/$iters") {
       encode(corpus, idCol, vecCol, books)
         .select(col(idCol).as("corpus_id"), col("codes"))
     }
 
-    // per-query LUT: lut(s)(j) = q_s · c_{s,j} (exact sub-dot-products
-    // against literal centroids; m·ksub fused loops per query row)
-    val qUnit = unit(col(vecCol))
-    val lutCol = array((0 until m).map { s =>
-      array(books(s).map { c =>
-        dot_product_f(subVec(qUnit, s, dsub),
-          array(c.map(lit(_)): _*).cast("array<float>"))
-      }: _*)
-    }: _*)
-    val q = queries.select(col(idCol).as("query_id"), lutCol.as("lut"),
-      col(vecCol).as("qv"))
+    val q = queries.select(col(idCol).as("query_id"),
+      lutCol(unit(col(vecCol)), books).as("lut"), col(vecCol).as("qv"))
 
     // ADC score = sum_s lut(s)(code_s): zip the code array against the
     // LUT row and fold — integer lookups only, stays in codegen
@@ -238,33 +222,6 @@ object ProductQuantizer {
 
   // ---- IVF-ADC (the composed 100 TB architecture) ---------------------
 
-  /** nlist centroids as one array-of-arrays column (element_at selects
-    * the assigned one inside codegen). Below
-    * [[Similarity.LiteralCentroidMax]] the table is literal arrays —
-    * one CreateArray tree, fully folded. Above, it is a SINGLE `typedlit`
-    * Literal (one constant ArrayData node, added to the generated class
-    * as a reference object) — same value, plan size O(1) in nlist. */
-  private[operators] def centTable(cents: Array[Array[Float]]): Column =
-    if (Similarity.literalForm(cents))
-      array(cents.map(c => array(c.map(lit(_)): _*).cast("array<float>")): _*)
-    else typedlit[Seq[Seq[Float]]](cents.map(_.toSeq).toSeq)
-      .cast("array<array<float>>")
-
-  /** The nprobe L2-nearest coarse lists of a vector (ascending). Same
-    * literal/bound-codebook switch as [[argminL2]]. */
-  private[operators] def probeL2(x: Column, cents: Array[Array[Float]],
-      nprobe: Int): Column =
-    if (Similarity.literalForm(cents)) {
-      val scored = cents.zipWithIndex.map { case (c, j) =>
-        val c2 = c.map(v => v.toDouble * v).sum
-        val centLit = array(c.map(lit(_)): _*).cast("array<float>")
-        struct((lit(c2) - lit(2.0) * dot_product_f(x, centLit)).as("d"),
-          lit(j).as("c"))
-      }
-      transform(slice(array_sort(array(scored: _*)), 1, nprobe),
-        s => s.getField("c"))
-    } else codebook_topn(x, cents, "l2", nprobe)
-
   /** IVF-ADC approximate top-k (Jégou 2011 §IV: IVFADC): coarse
     * quantizer routes vectors to inverted lists, PQ encodes the
     * RESIDUAL x − c_list, queries probe `nprobe` lists and ADC-score
@@ -295,8 +252,7 @@ object ProductQuantizer {
     // unit-vector inner product); flat at oracle scale, two-level above
     // [[Similarity.TwoLevelMinLists]]
     val cq = pqCoarse(corpus, idCol, vecCol, dim, nl, iters, cacheKey)
-    val coarse = cq.allCents
-    val table = centTable(coarse)
+    val table = cq.table
 
     // residual PQ: prep = unit vector minus its assigned coarse centroid
     val residualPrep: Column => Column = { v =>
@@ -328,50 +284,19 @@ object ProductQuantizer {
             argminL2(subVec(col("__r"), s, dsub), books(s))): _*).as("codes"))
     }
 
-    // query side: probed lists + q·c_list for every list + the LUT over
+    // query side: probed lists + q·c_list per probed list + the LUT over
     // the residual codebooks (the LUT is against q itself — the coarse
     // term is added separately per probed list)
     val qUnit = unit(col(vecCol))
-    val lutCol = array((0 until m).map { s =>
-      array(books(s).map { c =>
-        dot_product_f(subVec(qUnit, s, dsub),
-          array(c.map(lit(_)): _*).cast("array<float>"))
-      }: _*)
-    }: _*)
-    val qProbes = cq match {
-      case PqFlat(_) =>
-        // historical flat plan, kept byte-for-byte: all-list dots once
-        // per query row, element_at per probed row
-        val coarseDots =
-          if (Similarity.literalForm(coarse))
-            array(coarse.map { c =>
-              dot_product_f(qUnit,
-                array(c.map(lit(_)): _*).cast("array<float>"))
-            }: _*)
-          else codebook_dots(qUnit, coarse)
-        queries
-          .select(col(idCol).as("query_id"), qUnit.as("__q"),
-            probeL2(qUnit, coarse, nprobe).as("__probes"),
-            coarseDots.as("__cd"), lutCol.as("lut"))
-          .select(col("query_id"), explode(col("__probes")).as("list"),
-            col("__cd"), col("lut"))
-          .select(col("query_id"), col("list"),
-            element_at(col("__cd"), col("list") + 1).as("coarse_dot"),
-            col("lut"))
-      case _: PqTwoLevel =>
-        // at two-level list counts an all-list dots array is O(nlist)
-        // per query; compute only the probed lists' dots instead (same
-        // element-order double accumulation — identical values)
-        queries
-          .select(col(idCol).as("query_id"), qUnit.as("__q"),
-            cq.probe(qUnit, nprobe).as("__probes"), lutCol.as("lut"))
-          .select(col("query_id"), explode(col("__probes")).as("list"),
-            col("__q"), col("lut"))
-          .select(col("query_id"), col("list"),
-            dot_product_f(col("__q"), element_at(table, col("list") + 1))
-              .as("coarse_dot"),
-            col("lut"))
-    }
+    val qProbes = queries
+      .select(col(idCol).as("query_id"), qUnit.as("__q"),
+        cq.probe(qUnit, nprobe).as("__probes"), lutCol(qUnit, books).as("lut"))
+      .select(col("query_id"), explode(col("__probes")).as("list"),
+        col("__q"), col("lut"))
+      .select(col("query_id"), col("list"),
+        dot_product_f(col("__q"), element_at(table, col("list") + 1))
+          .as("coarse_dot"),
+        col("lut"))
 
     // candidate generation is an equi-join on the list id; ADC score =
     // coarse term + residual LUT fold (integer lookups, codegen'd)
@@ -405,26 +330,32 @@ object ProductQuantizer {
   /** The IVF-ADC / IVF-SQ coarse stage behind the flat/two-level
     * switch (the [[Similarity.Coarse]] twin, in UNIT space with L2
     * routing). `allCents` is the flat GLOBAL-list centroid table either
-    * way — residual lookups (`centTable(allCents)` + `element_at` by
-    * list id) are form-identical across the switch, which is what lets
-    * the composed indexes keep their exact residual algebra while the
-    * ROUTING cost drops from O(nlist) to O(√nlist) per vector. */
+    * way — residual lookups and probed-list dots (`table` + `element_at`
+    * by list id) are form-identical across the switch, which is what
+    * lets the composed indexes keep their exact residual algebra while
+    * the ROUTING cost drops from O(nlist) to O(√nlist) per vector. */
   private[operators] sealed trait PqCoarse {
     def assign(x: Column): Column
     def probe(x: Column, nprobe: Int): Column
     def allCents: Array[Array[Float]]
+    /** `allCents` as ONE constant `array<array<float>>` Literal: plan
+      * size O(1) in nlist × dim. */
+    def table: Column = typedlit[Seq[Seq[Float]]](allCents.map(_.toSeq).toSeq)
+      .cast("array<array<float>>")
   }
   private[operators] final case class PqFlat(cents: Array[Array[Float]])
       extends PqCoarse {
     def assign(x: Column): Column = argminL2(x, cents)
-    def probe(x: Column, nprobe: Int): Column = probeL2(x, cents, nprobe)
+    def probe(x: Column, nprobe: Int): Column =
+      if (nprobe == 1) array(assign(x))
+      else codebook_topn(x, cents, "l2", nprobe)
     def allCents: Array[Array[Float]] = cents
   }
   private[operators] final case class PqTwoLevel(l1: Array[Array[Float]],
       l2flat: Array[Array[Float]], k2: Int) extends PqCoarse {
     import graft.functions.expressions.CodebookTwoLevel.codebook_topn_2l
     // RAW (unnormalized) centroids under the L2 metric — exactly
-    // argminL2/probeL2's convention; the c² terms live in the expression
+    // PqFlat's convention; the c² terms live in the expression
     def assign(x: Column): Column =
       codebook_topn_2l(x, l1, l2flat, k2, "l2", 1, 1)
     def probe(x: Column, nprobe: Int): Column =

@@ -179,8 +179,7 @@ object ScalarQuantizer {
 
     val cq = ProductQuantizer.pqCoarse(corpus, idCol, vecCol, dim, nl,
       iters, cacheKey)
-    val coarse = cq.allCents
-    val table = ProductQuantizer.centTable(coarse)
+    val table = cq.table
     val residual: Column => Column = { v =>
       val u = ProductQuantizer.unit(v)
       zip_with(u,
@@ -208,50 +207,23 @@ object ScalarQuantizer {
             (a, c) => a - c).cast("array<float>"), b).as("codes"))
     }
 
-    // query side: probed lists + q·c_list per list + the flat-SQ
+    // query side: probed lists + q·c_list per probed list + the flat-SQ
     // offset/premultiplied pair over the residual grid
     val qUnit = ProductQuantizer.unit(col(vecCol))
     val minsF = lit(b.mins.map(_.toFloat)) // one Literal (see codesExpr)
     val scalesLit = lit(b.scales)
-    val qProbes = cq match {
-      case ProductQuantizer.PqFlat(_) =>
-        // historical flat plan, kept byte-for-byte
-        val coarseDots =
-          if (Similarity.literalForm(coarse))
-            array(coarse.map { c =>
-              dot_product_f(qUnit,
-                array(c.map(lit(_)): _*).cast("array<float>"))
-            }: _*)
-          else graft.functions.expressions.CodebookExpressions
-            .codebook_dots(qUnit, coarse)
-        queries
-          .select(col(idCol).as("query_id"), qUnit.as("__q"),
-            ProductQuantizer.probeL2(qUnit, coarse, nprobe).as("__probes"),
-            coarseDots.as("__cd"),
-            dot_product_f(qUnit, minsF).as("offset"),
-            zip_with(qUnit, scalesLit,
-              (x, s) => x.cast("double") * s).as("sq"))
-          .select(col("query_id"), explode(col("__probes")).as("list"),
-            col("__cd"), col("offset"), col("sq"))
-          .select(col("query_id"), col("list"),
-            element_at(col("__cd"), col("list") + 1).as("coarse_dot"),
-            col("offset"), col("sq"))
-      case _: ProductQuantizer.PqTwoLevel =>
-        // probed-list dots only (see ivfAdcTopK) — identical values,
-        // O(nprobe) instead of O(nlist) per query
-        queries
-          .select(col(idCol).as("query_id"), qUnit.as("__q"),
-            cq.probe(qUnit, nprobe).as("__probes"),
-            dot_product_f(qUnit, minsF).as("offset"),
-            zip_with(qUnit, scalesLit,
-              (x, s) => x.cast("double") * s).as("sq"))
-          .select(col("query_id"), explode(col("__probes")).as("list"),
-            col("__q"), col("offset"), col("sq"))
-          .select(col("query_id"), col("list"),
-            dot_product_f(col("__q"), element_at(table, col("list") + 1))
-              .as("coarse_dot"),
-            col("offset"), col("sq"))
-    }
+    val qProbes = queries
+      .select(col(idCol).as("query_id"), qUnit.as("__q"),
+        cq.probe(qUnit, nprobe).as("__probes"),
+        dot_product_f(qUnit, minsF).as("offset"),
+        zip_with(qUnit, scalesLit,
+          (x, s) => x.cast("double") * s).as("sq"))
+      .select(col("query_id"), explode(col("__probes")).as("list"),
+        col("__q"), col("offset"), col("sq"))
+      .select(col("query_id"), col("list"),
+        dot_product_f(col("__q"), element_at(table, col("list") + 1))
+          .as("coarse_dot"),
+        col("offset"), col("sq"))
 
     val scored = codes.join(broadcast(qProbes), Seq("list"))
       .filter(col("corpus_id") =!= col("query_id"))

@@ -293,82 +293,33 @@ object Similarity {
     } finally { sample.unpersist(); () }
   }
 
-  /** Largest centroid count the literal-array expression form is used
-    * for. Below this, centroids inline as literals inside one projection
-    * — fully unrolled codegen, the fastest form at dimension-table size.
-    * Above it, the SAME scores/tie-breaks come from [[CodebookTopN]],
-    * which binds the codebook as one attached `float[][]` reference
-    * (plan size O(1) in nlist) — the form that survives the 2¹⁶ lists
-    * [[autoNlist]] targets at real corpus sizes, where ~4M literal
-    * nodes would kill Catalyst analysis and Janino before the first
-    * row. Both forms are bit-identical (see `CodebookEquivalenceSpec`),
-    * so the switch never moves a pinned oracle. */
-  private[graft] val LiteralCentroidMax = 1024
-
-  /** Literal-vs-bound is really a budget on TOTAL literal float nodes,
-    * not centroid count: plan-build cost is nlist × dim (Catalyst
-    * analysis walks every literal; Janino compiles every constant), so
-    * 390 dim-64 centroids (~25k nodes, seconds of per-query PLAN time —
-    * measured 14.7 s/call on the sf1 cluster-balance slot) hurt as much
-    * as 1500 dim-8 ones. Budget 4096 keeps every pinned-fixture plan
-    * (nlist ≤ 16 × dim 64 = 1024) and the PQ sub-codebooks (ksub × dsub
-    * ≤ 256 × 16) literal, and routes genuinely big tables to the bound
-    * [[CodebookTopN]] form — bit-identical by `CodebookEquivalenceSpec`,
-    * so the switch never moves an oracle. */
-  private[graft] val LiteralElementBudget = 4096L
-
-  private[graft] def literalForm(cents: Array[Array[Float]]): Boolean =
-    cents.length <= LiteralCentroidMax &&
-      cents.length.toLong * cents(0).length <= LiteralElementBudget
-
   private def normalized(cents: Array[Array[Float]]): Array[Array[Float]] =
     cents.map { c =>
       val n = math.sqrt(c.map(x => x.toDouble * x).sum)
       if (n == 0) c else c.map(x => (x / n).toFloat)
     }
 
-  /** argmin over centroids as a codegen'd expression: per row, nlist
+  /** argmin over centroids as one codegen'd expression: per row, nlist
     * fused dot products against the L2-normalized centroids (argmax dot
-    * == argmax cosine since |v| is common). Literal arrays below
-    * [[LiteralCentroidMax]]; one bound codebook object above. */
+    * == argmax cosine since |v| is common), the codebook bound as one
+    * attached array ([[CodebookTopN]]) — plan size O(1) in nlist × dim
+    * at every list count. */
   private[graft] def assignExpr(vec: Column, cents: Array[Array[Float]]): Column =
-    if (literalForm(cents)) {
-      val scored = normalized(cents).zipWithIndex.map { case (unit, i) =>
-        val centLit = array(unit.map(lit(_)): _*).cast("array<float>")
-        struct((-dot_product_f(vec, centLit)).as("d"), lit(i).as("c"))
-      }
-      array_min(array(scored: _*)).getField("c")
-    } else codebook_topn(vec, normalized(cents), "dot", 1)
+    codebook_topn(vec, normalized(cents), "dot", 1)
 
-  /** The nprobe nearest centroid ids for a vector (sorted by distance). */
+  /** The nprobe nearest centroid ids for a vector (sorted by distance),
+    * always as an array. */
   private[graft] def probeExpr(vec: Column, cents: Array[Array[Float]],
                                nprobe: Int): Column =
-    if (literalForm(cents)) {
-      val scored = normalized(cents).zipWithIndex.map { case (unit, i) =>
-        val centLit = array(unit.map(lit(_)): _*).cast("array<float>")
-        struct((-dot_product_f(vec, centLit)).as("d"), lit(i).as("c"))
-      }
-      transform(slice(array_sort(array(scored: _*)), 1, nprobe),
-        s => s.getField("c"))
-    } else codebook_topn(vec, normalized(cents), "dot", nprobe)
+    if (nprobe == 1) array(assignExpr(vec, cents))
+    else codebook_topn(vec, normalized(cents), "dot", nprobe)
 
-  /** IVF approximate top-k: corpus vectors are assigned to their nearest
-    * centroid's inverted list (ONE scan, hash-partitioned by list);
-    * each query probes its `nprobe` nearest lists and reranks exactly
-    * within them via the bounded-heap aggregate.
-    *
-    * The 100 TB path alongside `lshTopK`: per-query candidate work is
-    * ~corpus × nprobe/nlist, the lists are disjoint (no band
-    * duplication), and recall degrades gracefully with data geometry
-    * instead of hash luck. Training auto-sizes its sample to
-    * ~[[TrainTargetVectors]] vectors regardless of corpus size
-    * (`sampleMod = 0`); pass an explicit modulus to override.
-    */
   /** Kinds of the IVF artifacts this object memoizes in [[Memo.shared]]:
     * the auto-nlist corpus count, trained centroids and corpus list
-    * assignments. The (id, list,
-    * vector, norm) table IS the IVF inverted index, built once at ingest
-    * (the ProductQuantizer codes twin). Re-running `assignExpr`/
+    * assignments. The (id, list, vector, norm) table — for the pair
+    * paths the (id, vector, probe-list array) table, one row per
+    * vector — IS the IVF inverted index, built once at ingest (the
+    * ProductQuantizer codes twin). Re-running `assignExpr`/
     * `probeExpr` over the whole corpus on every probe call costs
     * O(N·nlist·dim) float work per call — and under [[autoNlist]]
     * (nlist ~ N/128) that is QUADRATIC in corpus size, which is exactly
@@ -553,6 +504,18 @@ object Similarity {
     else autoNlist(
       corpusCount(corpus, idCol, cacheKey) * math.max(1, nprobe))
 
+  /** IVF approximate top-k: corpus vectors are assigned to their nearest
+    * centroid's inverted list (ONE scan, hash-partitioned by list);
+    * each query probes its `nprobe` nearest lists and reranks exactly
+    * within them via the bounded-heap aggregate.
+    *
+    * The 100 TB path alongside `lshTopK`: per-query candidate work is
+    * ~corpus × nprobe/nlist, the lists are disjoint (no band
+    * duplication), and recall degrades gracefully with data geometry
+    * instead of hash luck. Training auto-sizes its sample to
+    * ~[[TrainTargetVectors]] vectors regardless of corpus size
+    * (`sampleMod = 0`); pass an explicit modulus to override.
+    */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, dim: Int, nlist: Int = 0,
               nprobe: Int = 4, iters: Int = 3,
@@ -578,10 +541,6 @@ object Similarity {
     rankTopK(scored, k)
   }
 
-  /** Embedding near-duplicate pairs: banded LSH self-join, verified by
-    * exact cosine ≥ threshold. The embedding analogue of
-    * Dedup.minhashPairs. Shuffle is keyed by band bucket; candidate count
-    * per bucket is ~corpus/2^bitsPerBand per band. */
   /** Embedding near-duplicate pairs via the IVF coarse quantizer: two
     * vectors are candidates when they land in the same inverted list —
     * the natural pair generator when an IVF index already exists (the
@@ -612,44 +571,38 @@ object Similarity {
     // (nlist ∝ N under the occupancy rule).
     val quant = trainCoarse(corpus, idCol, vecCol, dim, nl, iters,
       sampleMod, cacheKey)
-    // The multi-probe (list, id, vector) assignment IS the ingest-built
-    // IVF index ([[memoKinds]]): without the memo each call pays the full
-    // quantizer scan per query call.
+    // The multi-probe assignment IS the ingest-built IVF index
+    // ([[memoKinds]]): without the memo each call pays the full quantizer
+    // scan per query call. It holds ONE row per vector — (id, vector,
+    // probe-list array) — and the explode into (list, id, vector) rows
+    // runs after the memo read, so the persisted artifact is ~1/nprobe
+    // of the exploded one.
     val listed = Memo.shared(cacheKey,
         s"probedv/$idCol/$vecCol/$dim/$nl/$nprobe/$iters/$sampleMod") {
       base.select(col("id"), col("v"),
-        explode(quant.probe(col("v"), nprobe)).as("__cl"))
-    }
+        quant.probe(col("v"), nprobe).as("__cls"))
+    }.select(col("id"), col("v"), explode(col("__cls")).as("__cl"))
     // Capped-bucket pair generation with the vector CARRIED through the
     // bounded heap (same membership as Dedup.bucketPairs: constant score
     // → deterministic smallest-id set, over-cap buckets dropped), and
-    // the exact-cosine rerank computed INSIDE the post-agg projection.
-    // The alternative — distinct the id pairs, then join vectors back —
+    // the exact-cosine rerank computed by one kernel over each heap
+    // ([[graft.functions.expressions.BucketCosinePairs]]: norms once
+    // per bucket member, only threshold survivors become rows). The
+    // alternative — distinct the id pairs, then join vectors back —
     // exchanges |candidate pairs| × 2·dim floats (measured 15-30 GB of
     // shuffle-spill at the 100× bench rung); here no exchange ever sees
     // a pair row with payloads: the shuffle into the aggregate moves
     // N·nprobe vectors once, and only threshold SURVIVORS reach the
     // distinct. Per-bucket pair work stays in the bucket's task, bounded
-    // by cap²·dim exactly as the join form's candidate volume was.
-    // Norms are recomputed per pair occurrence (l2norm is deterministic,
-    // so values are bit-identical to the precomputed-norm join form at
-    // 2 extra fused dots per pair — cheaper than shuffling them).
-    import graft.functions.expressions.TopKAggregate.top_k_by_carry
-    val pairVec = (s: Column) => s.getField("payload")
+    // by cap²·dim.
+    import graft.functions.expressions.TopKAggregate.{bucket_cosine_pairs,
+      top_k_by_carry}
     listed
       .groupBy("__cl")
       .agg(top_k_by_carry(lit(0.0), col("id"), col("v"),
         maxBucketSize + 1).as("tops"))
       .filter(size(col("tops")) <= maxBucketSize)
-      .select(col("tops"))
-      .select(explode(col("tops")).as("a"), col("tops"))
-      .select(col("a"), explode(col("tops")).as("b"))
-      .filter(col("a").getField("corpus_id") < col("b").getField("corpus_id"))
-      .select(col("a").getField("corpus_id").as("id_a"),
-        col("b").getField("corpus_id").as("id_b"),
-        cosine(pairVec(col("a")), pairVec(col("b")),
-          l2norm(pairVec(col("a"))), l2norm(pairVec(col("b")))).as("cos"))
-      .filter(col("cos") >= threshold)
+      .select(inline(bucket_cosine_pairs(col("tops"), threshold)))
       .distinct()
   }
 
@@ -718,6 +671,10 @@ object Similarity {
     Splits.capPerGroup(assigned, "cluster_id", idCol, perCluster, salt)
   }
 
+  /** Embedding near-duplicate pairs: banded LSH self-join, verified by
+    * exact cosine ≥ threshold. The embedding analogue of
+    * Dedup.minhashPairs. Shuffle is keyed by band bucket; candidate count
+    * per bucket is ~corpus/2^bitsPerBand per band. */
   def nearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
                    dim: Int, threshold: Double = 0.9,
                    bitsPerBand: Int = 4, numBands: Int = 8): DataFrame = {

@@ -406,8 +406,7 @@ private[graft] object GenStore {
   private def footerRows(spark: SparkSession, dir: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
     Tables.dataFiles(fs(spark, dir), new Path(dir)).map { st =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      val r = Tables.footerReader(st, conf)
       try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
       finally r.close()
     }.sum

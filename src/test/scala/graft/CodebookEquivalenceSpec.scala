@@ -7,14 +7,14 @@ import graft.functions.expressions.HashExpressions._
 import graft.functions.expressions.CodebookExpressions._
 import graft.operators.{ProductQuantizer, Similarity}
 
-/** The literal-centroid / bound-codebook switch
-  * ([[Similarity.LiteralCentroidMax]]): above the threshold the ANN
-  * stack swaps its per-centroid literal arrays for [[CodebookTopN]] /
-  * [[CodebookDots]] with the codebook attached as one reference object.
-  * These tests pin (a) bit-identity between the two forms — so the
-  * switch can never move a pinned oracle — and (b) that IVF / IVF-ADC
-  * actually build and run at nlist = 4096, where the literal form's
-  * ~10⁵–10⁶ expression nodes would kill analysis/Janino at plan time.
+/** The bound codebook forms: every centroid scan of the ANN stack is a
+  * [[CodebookTopN]] / [[CodebookDots]] with the codebook attached as one
+  * reference object. The per-centroid literal forms the stack used at
+  * small list counts live on HERE, as the oracle. These tests pin (a)
+  * bit-identity between the two forms — so dropping the literal form
+  * moved no pinned oracle — and (b) that IVF / IVF-ADC actually build
+  * and run at nlist = 4096, where the literal form's ~10⁵–10⁶
+  * expression nodes would kill analysis/Janino at plan time.
   */
 class CodebookEquivalenceSpec extends SparkSpec {
   import spark.implicits._
@@ -24,7 +24,7 @@ class CodebookEquivalenceSpec extends SparkSpec {
   private def mkVec(rnd: scala.util.Random): Array[Float] =
     Array.fill(dim)(rnd.nextFloat() * 2f - 1f)
 
-  /** 1500 centroids (> LiteralCentroidMax) incl. a deliberate duplicate
+  /** 1500 centroids incl. a deliberate duplicate
     * pair, so the smaller-index tie-break is actually exercised. */
   private lazy val cents: Array[Array[Float]] = {
     val rnd = new scala.util.Random(42)
@@ -40,8 +40,9 @@ class CodebookEquivalenceSpec extends SparkSpec {
       .select(col("id"), col("v").cast("array<float>").as("v"))
   }
 
-  // the literal forms, reconstructed exactly as the small-nlist paths
-  // build them (Similarity.assignExpr / ProductQuantizer.argminL2)
+  // the literal forms, exactly as the small-nlist paths built them
+  // (Similarity.assignExpr / ProductQuantizer.argminL2) before every
+  // scan took the bound codebook
   private def litDot(vec: Column, cs: Array[Array[Float]]): Seq[Column] =
     cs.zipWithIndex.map { case (c, i) =>
       val n = math.sqrt(c.map(x => x.toDouble * x).sum)
@@ -65,7 +66,7 @@ class CodebookEquivalenceSpec extends SparkSpec {
     }
 
   // literal expressions over 1500 centroids are slow to ANALYZE (that is
-  // the point of the switch) — keep the literal sides to a 128-centroid
+  // why the stack binds codebooks) — keep the literal sides to a 128-centroid
   // slice and compare against the codebook form on the SAME slice
   private lazy val centsSmall = cents.take(128)
 
@@ -164,12 +165,13 @@ class CodebookEquivalenceSpec extends SparkSpec {
 
   /** No projection anywhere in the plan may carry a centroid-table-sized
     * literal array: that is the plan-build ceiling the codebook form
-    * removes. (Small CreateArrays — band keys, probe structs — are fine.) */
+    * removes. (Small CreateArrays — band keys, probe structs — are fine;
+    * 1024 was the largest centroid count the literal form ever took.) */
   private def assertNoGiantLiteralArray(df: DataFrame): Unit = {
     val sizes = df.queryExecution.optimizedPlan.collect { case p => p }
       .flatMap(_.expressions)
       .flatMap(_.collect { case ca: CreateArray => ca.children.size })
-    assert(sizes.forall(_ <= Similarity.LiteralCentroidMax),
+    assert(sizes.forall(_ <= 1024),
       s"giant literal array in plan: max=${sizes.maxOption.getOrElse(0)}")
   }
 
