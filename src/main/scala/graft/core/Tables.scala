@@ -200,22 +200,10 @@ object Tables {
     * pushdown-preserving scan; predicates and column pruning still reach
     * the scan through the repartition node either way. Partition count
     * follows `defaultParallelism`, so the driver's core-scaling bench
-    * run keeps its contract. `SPARK_GRAFT_SCAN_FANOUT=0` disables (or
-    * overrides the per-core byte budget). */
+    * run keeps its contract. */
   private def fanOutSmall(spark: SparkSession, e: Entry,
                           df: DataFrame): DataFrame = {
-    // malformed values fail fast WITH the env var named — an unguarded
-    // toLong threw a bare NumberFormatException from every call site
-    // (advisor r17)
-    val perCore = sys.env.get("SPARK_GRAFT_SCAN_FANOUT").map { v =>
-      try v.trim.toLong
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_SCAN_FANOUT must be a byte count (got '$v'); " +
-            "0 disables the fan-out, unset uses the 4 MiB/core default")
-      }
-    }.getOrElse(4L * 1024 * 1024)
-    if (perCore <= 0) return df
+    val perCore = 4L * 1024 * 1024
     val cores = spark.sparkContext.defaultParallelism
     if (e.files < cores && e.bytes > 0 && e.bytes < cores.toLong * perCore)
       df.repartition(cores)

@@ -77,20 +77,21 @@ object Urls {
 
   private val GenericSld = Seq("co", "com", "net", "org", "gov", "ac", "edu")
 
-  /** Registered domain of the host (public-suffix heuristic). */
-  def registeredDomain(url: Column): Column = {
-    val h = host(url)
-    val labels = split(h, "\\.")
-    val n = size(labels)
-    val tld = element_at(labels, -1)
-    val sld = element_at(labels, -2)
-    val ccSld = length(tld) === 2 &&
-      array_contains(array(GenericSld.map(lit): _*), sld)
-    when(n <= 2, h)
-      .when(ccSld && n >= 3, concat_ws(".",
-        element_at(labels, -3), sld, tld))
-      .otherwise(concat_ws(".", sld, tld))
-  }
+  /** A host's registered domain as one suffix match: its last three
+    * labels when the second-last is a generic second-level label under a
+    * 2-letter TLD, else its last two, else (one label) the whole host.
+    * The leftmost match wins, so a host whose last three labels fit the
+    * first branch never falls to the second. `\z`, not `$`: `$` would
+    * also match before a trailing line break. */
+  private val RegisteredSuffix =
+    s"(?:[^.]*\\.(?:${GenericSld.mkString("|")})\\.[^.]{2}|[^.]*\\.[^.]*|^[^.]*)\\z"
+
+  /** Registered domain of the host (public-suffix heuristic): the host
+    * is extracted once and matched once, which keeps the generated code
+    * of a (src, dst) domain aggregate under Janino's 64 KB method limit.
+    * A URL with no host (null included) has the empty domain. */
+  def registeredDomain(url: Column): Column =
+    coalesce(regexp_extract(host(url), RegisteredSuffix, 0), lit(""))
 
   /** TRUE when the registered domain is on the blocklist. */
   def blocked(url: Column, blocklist: Seq[String]): Column =

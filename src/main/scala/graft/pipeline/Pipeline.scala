@@ -141,9 +141,17 @@ final case class PipelineSpec(name: String, source: Source,
     * pass), in node order once every sink has finished → `exit`; a
     * failed sink gets `error` {path, message} in its place, then `exit`
     * is emitted and the first failure rethrown (error tears the pipeline
-    * down, `pipeline/pipeline.go:135-144`). */
-  def run(spark: SparkSession, emitter: graft.events.Events.Emitter): Unit =
+    * down, `pipeline/pipeline.go:135-144`). A `mode: stream` spec is
+    * refused: draining its tail here as one batch would write every
+    * epoch sink as epoch 0, which the real stream's epoch 0 then skips
+    * as a replay. */
+  def run(spark: SparkSession, emitter: graft.events.Events.Emitter): Unit = {
+    if (streamCheckpoint.isDefined) throw new IllegalArgumentException(
+      s"pipeline '$name' is mode: stream; run(spark, emitter) drives only " +
+        "batch pipelines. Use run(spark) for the stream and " +
+        "Events.attach(spark, emitter) for its events.")
     runImpl(spark, Some(emitter))
+  }
 
   private def endpoints: Map[String, String] =
     (Map(sourceName -> source.getClass.getSimpleName.stripSuffix("$")) ++

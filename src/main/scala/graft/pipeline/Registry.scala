@@ -24,6 +24,11 @@ import graft.sources.Connectors.{Sink, Source}
   * name in the reference registry now resolves to a working
   * implementation; the wire formats without live servers are modeled by
   * their on-disk/file-stream equivalents, loudly documented per source.
+  *
+  * JSON-lines has one reader, `file` (`Connectors.JsonLinesSource`,
+  * Spark's JSON scan): pushed filters and pruned columns reach its
+  * `FileSourceScanExec` (Dsv2Spec asserts them on the scan node).
+  * `describe` carries exactly one entry per source and sink name.
   */
 object Registry {
 
@@ -287,8 +292,6 @@ object Registry {
         org.apache.spark.sql.types.StructType.fromDDL(s.toString)),
       maxFilesPerTrigger = p.get("max_files_per_trigger")
         .map(_.toString.toDouble.toInt))),
-    "file-v2" -> (p => Connectors.JsonLinesV2Source(str(p, "uri"),
-      p.getOrElse("ns", "file").toString)),
     "parquet" -> (p => Connectors.TableSource(str(p, "dir"), str(p, "table"))),
     "tables" -> (p => Connectors.MultiTableSource(str(p, "dir"),
       strSeq(p, "tables"), ns(p))),
@@ -529,8 +532,6 @@ object Registry {
     * maps for ConfigLoader (modulo paths existing). */
   val describe: Map[String, (String, Map[String, Any])] = Map(
     "file" -> ("JSON-lines file source/sink (adaptor/file)",
-      Map("uri" -> "/tmp/graft-sample/in.jsonl", "ns" -> "docs")),
-    "file-v2" -> ("JSON-lines via the DSv2 connector (plan-visible pushdown)",
       Map("uri" -> "/tmp/graft-sample/in.jsonl", "ns" -> "docs")),
     "parquet" -> ("parquet table-dir source / parquet sink",
       Map("dir" -> "/root/testdata/sf0.001", "table" -> "nation")),

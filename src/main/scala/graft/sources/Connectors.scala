@@ -60,19 +60,6 @@ object Connectors {
     }
   }
 
-  /** JSON-lines source over the DSv2 connector (`graft-jsonl`,
-    * sources.dsv2.JsonLinesV2): same data as JsonLinesSource but with
-    * plan-visible filter pushdown + parse-time column pruning, one
-    * partition per file. */
-  final case class JsonLinesV2Source(path: String, ns: String,
-      schema: Option[StructType] = None) extends Source {
-    def read(spark: SparkSession): DataFrame = {
-      val r = spark.read.format("graft-jsonl")
-      val df = schema.map(r.schema).getOrElse(r).load(path)
-      Envelope.wrap(df, ns)
-    }
-  }
-
   /** CSV file source (header row, optional explicit schema; schema
     * inference costs an extra pass — pass a schema at scale).
     * `multiLine` so quoted newline-bearing cells round-trip — the

@@ -30,17 +30,6 @@ import graft.operators.Upsert
   */
 object StreamPipeline {
 
-  /** File-backed envelope stream: JSON-lines files appearing in `dir`,
-    * each line an envelope document (op, ts, id, ...). `maxFilesPerTrigger`
-    * bounds the epoch, standing in for the reference's bulk-flush count
-    * threshold. */
-  def envelopeFileStream(spark: SparkSession, dir: String, schema: StructType,
-      maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dir)
-
   /** Parquet-table upsert sink driven by foreachBatch, with a
     * hash-bucketed target so an epoch rewrites ONLY the buckets its keys
     * touch (the reference writes per-document by id,

@@ -76,7 +76,7 @@ object RunPipeline {
     // path-writing sinks get their own output dir (never where the source
     // reads); store sinks keep their sample connection params
     val sinkSample = Registry.describe(sink)._2 ++
-      (if (Seq("file", "file-v2", "parquet").contains(sink))
+      (if (Seq("file", "parquet").contains(sink))
         Map[String, Any]("uri" -> "/tmp/graft-sample/out")
       else Map.empty[String, Any])
     val cfg = Map(
@@ -85,7 +85,7 @@ object RunPipeline {
       "sinks" -> Seq(sinkSample ++ Map("adaptor" -> sink, "name" -> "sink",
         "ns" -> ".*")))
     // make the file-source sample actually runnable: write its input
-    if (source == "file" || source == "file-v2") {
+    if (source == "file") {
       val uri = java.nio.file.Paths.get(srcSample("uri").toString)
       java.nio.file.Files.createDirectories(uri.getParent)
       if (!java.nio.file.Files.exists(uri))

@@ -8,20 +8,13 @@ import org.apache.spark.sql.SparkSession
   *
   * Knobs (read once, at first use):
   *   - `SPARK_GRAFT_CPUS` — default core count (else every available core)
-  *   - `SPARK_GRAFT_SHUFFLE_PARTITIONS` — shuffle partitions (else cpus)
   *   - `SPARK_GRAFT_AQE` — `false` for AQE-off comparison spots
-  *   - `SPARK_GRAFT_AQE_MIN_PARTITION` — coalescing floor (else 64k)
+  *
+  * Shuffle partitions are `cpus`; the AQE coalescing floor is 64k.
   */
 object Sessions {
   val defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
-  // scale-experiment knob: on a real cluster shuffle partitions scale
-  // with data; local spots at 30-100x data on a FIXED partition count
-  // keep growing per-partition sort/spill volume, which shows up as a
-  // super-linear tail on sort-heavy slots. Overriding lets the
-  // partition-scaling hypothesis be MEASURED instead of asserted (see
-  // BENCH_sf10.json).
-  private val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
   // prod runs AQE on; the plan fingerprints pin AQE-off shapes (the
   // AqePlanSpec story) — timing both ways shows the re-plan is free
   private val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
@@ -33,15 +26,16 @@ object Sessions {
   // constant). 64 KiB keeps parallelismFirst's totalBytes/parallelism
   // target in charge down to genuinely tiny shuffles; at scale
   // partitions sit at the advisory size and this floor is inert.
-  private val aqeMinPartition =
-    sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k")
+  private val aqeMinPartition = "64k"
 
   def local(appName: String, cpus: Int = defaultCpus): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions",
-        shufflePartitions.getOrElse(cpus.toString))
+      // one shuffle partition per core: local runs keep the partition
+      // count fixed, so sort-heavy slots at 30-100x data grow their
+      // per-partition sort/spill volume instead (see BENCH_sf10.json)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", aqe)
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         aqeMinPartition)

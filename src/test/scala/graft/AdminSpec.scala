@@ -57,8 +57,8 @@ class AdminSpec extends SparkSpec {
     val sink = new StreamPipeline.ParquetUpsertSink(spark, s"$tmp/target",
       "user_id", StructType(Seq(StructField("user_id", LongType),
         StructField("value", DoubleType))))
-    val stream = StreamPipeline.envelopeFileStream(spark, s"$tmp/in",
-      envSchema, maxFilesPerTrigger = 1)
+    val stream = spark.readStream.schema(envSchema)
+      .option("maxFilesPerTrigger", 1).json(s"$tmp/in")
       .select("op", "ts", "event_id", "user_id", "value")
     val q1 = sink.start(stream, s"$tmp/ckpt")
     q1.awaitTermination(120000)

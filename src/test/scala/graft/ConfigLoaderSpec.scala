@@ -270,6 +270,12 @@ class ConfigLoaderSpec extends SparkSpec {
     assert(got.subsetOf(sampled), s"$got not from $sampled")
   }
 
+  test("describe covers exactly the registered source and sink names") {
+    import graft.pipeline.Registry
+    assert(Registry.describe.keySet ==
+      Registry.sources.keySet ++ Registry.sinks.keySet)
+  }
+
   test("unknown names and missing env vars fail loudly") {
     intercept[IllegalArgumentException] {
       ConfigLoader.parse("""{"source": {"adaptor": "nope"}, "sinks": []}""")

@@ -1,15 +1,17 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, GreaterThan,
+  IsNotNull, LessThanOrEqual, Literal}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{Filter, GreaterThan, IsNotNull}
 import org.apache.spark.sql.types._
-import graft.sources.dsv2.JsonLinesScan
+import graft.sources.Connectors.JsonLinesSource
 
-/** DSv2 connector: pushdown asserted at the PLAN level — the
-  * BatchScanExec's Scan object is ours and carries the pushed filters —
-  * not by string-matching explain output. */
+/** The `file` adaptor's pushdown, asserted at the PLAN level: the
+  * `FileSourceScanExec` under `JsonLinesSource.read` carries the pushed
+  * filters and the pruned read schema — not by string-matching explain
+  * output. `MongoV2Spec` holds the same asserts for the DSv2 connector. */
 class Dsv2Spec extends SparkSpec {
 
   private lazy val dir: String = {
@@ -26,74 +28,66 @@ class Dsv2Spec extends SparkSpec {
     StructField("event_type", StringType),
     StructField("value", DoubleType)))
 
-  private def readV2: DataFrame =
-    spark.read.format("graft-jsonl").schema(schema).load(dir)
+  private def readFile: DataFrame =
+    JsonLinesSource(dir, "events", Some(schema)).read(spark)
 
-  /** The one custom Scan node of a plan (descending through AQE). */
-  private def scanOf(df: DataFrame): JsonLinesScan = {
+  /** The one file scan node of a plan (descending through AQE). */
+  private def scanOf(df: DataFrame): FileSourceScanExec = {
     val base = df.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         a.executedPlan
       case p => p
     }
-    val scans = base.collect { case b: BatchScanExec => b.scan }
+    val scans = base.collect { case s: FileSourceScanExec => s }
     assert(scans.size == 1, base)
-    scans.head.asInstanceOf[JsonLinesScan]
+    scans.head
   }
 
-  test("reads a json-lines dir with one partition per file") {
-    val expect = spark.read.schema(schema).json(dir)
-    assert(readV2.count() == expect.count())
-    assert(readV2.rdd.getNumPartitions == 3)
-    assert(readV2.exceptAll(expect).count() == 0)
-  }
+  /** The filters the scan hands to the JSON reader (its `dataFilters`),
+    * each matched as a comparison of a column with a literal. */
+  private def pushedOf(df: DataFrame): Set[(String, String, Any)] =
+    scanOf(df).dataFilters.map {
+      case GreaterThan(a: Attribute, Literal(v, _)) => (a.name, ">", v)
+      case LessThanOrEqual(a: Attribute, Literal(v, _)) => (a.name, "<=", v)
+      case IsNotNull(a: Attribute) => (a.name, "is not null", null)
+      case e => (e.sql, "", null)
+    }.toSet
+
+  /** Every row of the dir, filtered on the driver: no pushdown applies. */
+  private def plainRows(keep: Row => Boolean): Set[Row] =
+    spark.read.schema(schema).json(dir).collect().filter(keep).toSet
 
   test("filter pushdown is plan-visible and evaluated in the scan") {
-    val df = readV2.filter(col("event_id") > 600L)
-    val scan = scanOf(df)
-    val pushed: Seq[Filter] = scan.pushedFilters
-    assert(pushed.contains(GreaterThan("event_id", 600L)), pushed)
-    assert(pushed.contains(IsNotNull("event_id")), pushed)
-    val expect = spark.read.schema(schema).json(dir)
-      .filter(col("event_id") > 600L)
-    assert(df.count() == expect.count() && df.count() > 0)
+    val df = readFile.filter(col("event_id") > 600L)
+    val pushed = pushedOf(df)
+    assert(pushed.contains(("event_id", ">", 600L)), pushed)
+    assert(pushed.contains(("event_id", "is not null", null)), pushed)
+    val got = df.select(schema.fieldNames.map(col).toSeq: _*).collect().toSet
+    val expect = plainRows(r => !r.isNullAt(0) && r.getLong(0) > 600L)
+    assert(got == expect && got.nonEmpty)
   }
 
-  test("unsupported predicates stay residual, supported ones push") {
-    val df = readV2.filter(col("event_type").contains("ck") &&
+  test("a contains predicate returns the same rows; user_id <= 50 pushes") {
+    val df = readFile.filter(col("event_type").contains("ck") &&
       col("user_id") <= 50L)
-    val pushed = scanOf(df).pushedFilters
-    assert(pushed.exists {
-      case org.apache.spark.sql.sources.LessThanOrEqual("user_id", 50L) => true
-      case _ => false
-    }, pushed)
-    // StringContains is NOT pushable here — Spark must keep the residual
-    assert(!pushed.exists(_.toString.contains("Contains")), pushed)
-    val expect = spark.read.schema(schema).json(dir)
-      .filter(col("event_type").contains("ck") && col("user_id") <= 50L)
-    assert(df.exceptAll(expect).count() == 0 &&
-      expect.exceptAll(df).count() == 0)
+    val pushed = pushedOf(df)
+    assert(pushed.contains(("user_id", "<=", 50L)), pushed)
+    val got = df.select(schema.fieldNames.map(col).toSeq: _*).collect().toSet
+    val expect = plainRows(r => !r.isNullAt(1) && !r.isNullAt(2) &&
+      r.getString(2).contains("ck") && r.getLong(1) <= 50L)
+    assert(got == expect && got.nonEmpty)
   }
 
   test("column pruning reaches the scan's read schema") {
-    val df = readV2.select("event_id", "value")
-    assert(scanOf(df).readSchema().fieldNames.toSeq == Seq("event_id", "value"))
+    val df = readFile.select("event_id", "value")
+    assert(scanOf(df).requiredSchema.fieldNames.toSeq == Seq("event_id", "value"))
   }
 
   test("resumable scan = pushed GreaterThan (reference cursor semantics)") {
-    val resumed = readV2.filter(col("event_id") > 500L)
+    val resumed = readFile.filter(col("event_id") > 500L)
       .select("event_id").orderBy("event_id")
-    val scan = scanOf(resumed)
-    assert(scan.pushedFilters.contains(GreaterThan("event_id", 500L)))
+    assert(pushedOf(resumed).contains(("event_id", ">", 500L)))
     // pruning composes with pushdown
-    assert(scan.readSchema().fieldNames.toSeq == Seq("event_id"))
-  }
-
-  test("schema inference from the first line (atomic types)") {
-    val inferred = spark.read.format("graft-jsonl").load(dir)
-    val byName = inferred.schema.fields.map(f => f.name -> f.dataType).toMap
-    assert(byName("event_id") == LongType)
-    assert(byName("event_type") == StringType)
-    assert(byName("value") == DoubleType)
+    assert(scanOf(resumed).requiredSchema.fieldNames.toSeq == Seq("event_id"))
   }
 }

@@ -47,6 +47,24 @@ class EventsSpec extends SparkSpec {
     assert(em.ofKind("error").isEmpty)
   }
 
+  test("run with an emitter refuses a stream spec instead of draining it as a batch") {
+    val em = new Events.BufferingEmitter
+    val mem = new Connectors.MemorySink
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ev-mode").toString
+    val spec = Pipeline.builder("tail")
+      .source("src", Connectors.TableSource(sf, "region"))
+      .save("mem", mem)
+      .streaming(s"$tmp/ckpt")
+      .build()
+    val e = intercept[IllegalArgumentException] { spec.run(spark, em) }
+    assert(e.getMessage.contains("mode: stream"), e.getMessage)
+    assert(e.getMessage.contains("run(spark)"), e.getMessage)
+    assert(e.getMessage.contains("Events.attach"), e.getMessage)
+    assert(em.events.isEmpty, em.events.mkString("\n"))
+    assert(mem.rows.isEmpty)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, "ckpt")))
+  }
+
   test("a failing sink emits an error event (then the run rethrows)") {
     val em = new Events.BufferingEmitter
     object BoomSink extends Connectors.Sink {

@@ -27,8 +27,8 @@ class StreamFanoutSpec extends SparkSpec {
       StructField("op", StringType), StructField("ts", LongType),
       StructField("event_id", LongType), StructField("user_id", LongType),
       StructField("value", DoubleType)))
-    val stream = StreamPipeline.envelopeFileStream(spark, s"$tmp/in",
-      schema, maxFilesPerTrigger = 1)
+    val stream = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).json(s"$tmp/in")
 
     // sink A: only deletes, as json; sink B: everything, as parquet
     val q = StreamPipeline.fanout(stream, s"$tmp/ckpt", Seq(

@@ -34,8 +34,8 @@ class StreamingSpec extends SparkSpec {
       StructField("value", DoubleType)))
     val sink = new StreamPipeline.ParquetUpsertSink(
       spark, s"$tmp/target", "user_id", baseSchema)
-    val stream = StreamPipeline.envelopeFileStream(
-      spark, s"$tmp/in", envSchema, maxFilesPerTrigger = 1)
+    val stream = spark.readStream.schema(envSchema)
+      .option("maxFilesPerTrigger", 1).json(s"$tmp/in")
       .select("op", "ts", "event_id", "user_id", "value")
     val q = sink.start(stream, s"$tmp/ckpt")
     q.awaitTermination(120000)
@@ -62,8 +62,8 @@ class StreamingSpec extends SparkSpec {
     val sink = new StreamPipeline.ParquetUpsertSink(
       spark, s"$tmp/target", "user_id", baseSchema)
 
-    def stream() = StreamPipeline.envelopeFileStream(
-      spark, s"$tmp/in", envSchema, maxFilesPerTrigger = 1)
+    def stream() = spark.readStream.schema(envSchema)
+      .option("maxFilesPerTrigger", 1).json(s"$tmp/in")
       .select("op", "ts", "event_id", "user_id", "value")
 
     // phase 1: first half arrives, stream runs to quiescence, "crashes"

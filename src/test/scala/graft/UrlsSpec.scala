@@ -184,6 +184,41 @@ class UrlsSpec extends SparkSpec {
     }
   }
 
+  test("registeredDomain equals its inlined form, host bound once") {
+    // the pre-binding expression: host(url) and its split re-inlined at
+    // every use — kept here as the bit-for-bit oracle
+    def inlined(url: org.apache.spark.sql.Column) = {
+      val h = Urls.host(url)
+      val labels = split(h, "\\.")
+      val n = size(labels)
+      val tld = element_at(labels, -1)
+      val sld = element_at(labels, -2)
+      val ccSld = length(tld) === 2 && array_contains(
+        array(Seq("co", "com", "net", "org", "gov", "ac", "edu").map(lit): _*), sld)
+      when(n <= 2, h)
+        .when(ccSld && n >= 3, concat_ws(".", element_at(labels, -3), sld, tld))
+        .otherwise(concat_ws(".", sld, tld))
+    }
+    val rnd = new scala.util.Random(77)
+    // labels that hit each branch: generic second-level labels, 2- and
+    // 3-char TLDs, empty labels, case, a line break, non-ASCII (one
+    // supplementary character counts as one)
+    val labels = Seq("co", "com", "org", "ac", "uk", "au", "jp", "io",
+      "net9", "", "A", "Co", "x\n", "\n", "é", "\uD835\uDD18z", "\uD835\uDD18")
+    def randHost(): String = (0 until 1 + rnd.nextInt(5))
+      .map(_ => labels(rnd.nextInt(labels.size))).mkString(".")
+    val urls = Seq[String](null, "", "nonsense", "https://uk",
+      "https://a.b.", "https://.co.uk", "https://x.y.co.uk", "HTTPS://A.B.COM.AU/p",
+      "https://u@a.b.c.d.co.jp:81/x", "https://a..b", "ftp://h.ac.nz",
+      "https://a.co.uk\n", "https://a.co.ukk") ++
+      (0 until 400).map(_ => "https://" + randHost() + "/p")
+    val got = urls.toDF("u")
+      .select(Urls.registeredDomain(col("u")).as("a"), inlined(col("u")).as("b"))
+      .collect()
+    assert(got.length == urls.length)
+    got.foreach(r => assert(r.get(0) == r.get(1), r))
+  }
+
   test("fuzz: mainText is total over malformed markup") {
     val rnd = new scala.util.Random(99)
     val alphabet = "ab <>/&;pdivscript=\"'-!x"
